@@ -9,15 +9,15 @@ module provides the same CONTRACT over plain parquet directories:
   reference's modulo output-partition files, reference
   clip_inference/writer.py:22,67);
 * a bucket is COMMITTED only when its row appears in the
-  ``_checkpoints`` table (written by the driver AFTER the data write
+  ``_checkpoints`` ledger (written by the driver AFTER the data write
   succeeds — write-then-commit, the transactional version of the
   reference's wip_*.json -> rename protocol, reference
   clip_inference/logger.py:55-61);
 * on restart, bucket directories with no checkpoint row are garbage
   from an interrupted run and are deleted before recompute.
 
-Everything here is driver-side bookkeeping; data moves only through
-Spark jobs.
+The ledger is small parquet files the driver writes and reads with
+pyarrow, never a Spark job; data moves only through Spark jobs.
 """
 
 from __future__ import annotations
@@ -26,14 +26,23 @@ import json
 import os
 import shutil
 import time
+import uuid
 from dataclasses import dataclass
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 CHECKPOINT_SCHEMA = (
     "stage string, partition_id int, rows long, wall_ms long, "
     "status string, run_id string"
+)
+# the same columns as pyarrow types, for the driver-side ledger files
+_ARROW_TYPES = {"string": pa.string(), "int": pa.int32(), "long": pa.int64()}
+LEDGER_SCHEMA = pa.schema(
+    [(c, _ARROW_TYPES[t])
+     for c, t in map(str.split, CHECKPOINT_SCHEMA.split(","))]
 )
 
 
@@ -89,8 +98,6 @@ class TableStore:
         """Row count from parquet footers (driver-side, no Spark job —
         the Iceberg-snapshot-statistics stand-in). Re-scanning a 10^10-row
         table just to record its count is a job we never run."""
-        import pyarrow.parquet as pq
-
         total = 0
         for root, _dirs, files in os.walk(self.path(table)):
             for name in files:
@@ -102,8 +109,6 @@ class TableStore:
 
     def bucket_counts(self, table: str, buckets) -> dict[int, int]:
         """Per-bucket row counts from parquet footers."""
-        import pyarrow.parquet as pq
-
         out: dict[int, int] = {}
         tdir = self.path(table)
         for b in buckets:
@@ -120,22 +125,30 @@ class TableStore:
 
     # -- checkpoints ----------------------------------------------------
 
-    def checkpoints(self) -> DataFrame:
+    def ledger(self) -> list[dict]:
+        """Every checkpoint row, read on the driver (no Spark job).
+        ``.``/``_``-prefixed files are skipped, as Spark skips them: a
+        crash's uncommitted temp file, and the ``_SUCCESS``/``.crc``
+        side files of ledgers that Spark's writer left."""
         p = self.path("_checkpoints")
-        if not os.path.isdir(p):
-            return self.spark.createDataFrame([], CHECKPOINT_SCHEMA)
-        return self.spark.read.schema(CHECKPOINT_SCHEMA).parquet(p)
+        names = sorted(os.listdir(p)) if os.path.isdir(p) else []
+        return [
+            row
+            for name in names
+            if not name.startswith((".", "_"))
+            for row in pq.read_table(os.path.join(p, name)).to_pylist()
+        ]
+
+    def checkpoints(self) -> DataFrame:
+        """``ledger()`` as a Spark DataFrame, for callers that query it."""
+        return self.spark.createDataFrame(self.ledger(), CHECKPOINT_SCHEMA)
 
     def committed_buckets(self, stage: str) -> set[int]:
-        rows = (
-            self.checkpoints()
-            .filter(
-                (F.col("stage") == stage) & (F.col("status") == "done")
-            )
-            .select("partition_id")
-            .collect()
-        )
-        return {r["partition_id"] for r in rows}
+        return {
+            r["partition_id"]
+            for r in self.ledger()
+            if r["stage"] == stage and r["status"] == "done"
+        }
 
     def commit_buckets(
         self,
@@ -144,18 +157,20 @@ class TableStore:
         wall_ms: int,
         run_id: str,
     ) -> None:
-        """Write checkpoint rows AFTER the stage's data write succeeded."""
-        self._gc_pending_commit_dir("_checkpoints")
+        """Write checkpoint rows AFTER the stage's data write succeeded:
+        one parquet file under a hidden temp name, renamed into place.
+        The rename is the commit point, as in SnapshotStore._publish."""
+        p = self.path("_checkpoints")
+        os.makedirs(p, exist_ok=True)
         rows = [
-            (stage, int(b), int(n), int(wall_ms), "done", run_id)
+            {"stage": stage, "partition_id": int(b), "rows": int(n),
+             "wall_ms": int(wall_ms), "status": "done", "run_id": run_id}
             for b, n in sorted(bucket_rows.items())
         ]
-        (
-            self.spark.createDataFrame(rows, CHECKPOINT_SCHEMA)
-            .coalesce(1)
-            .write.mode("append")
-            .parquet(self.path("_checkpoints"))
-        )
+        name = f"part-{uuid.uuid4().hex}.parquet"
+        tmp = os.path.join(p, f".{name}.tmp")
+        pq.write_table(pa.Table.from_pylist(rows, schema=LEDGER_SCHEMA), tmp)
+        os.rename(tmp, os.path.join(p, name))
 
     def _gc_pending_commit_dir(self, table: str) -> None:
         """Remove a dead run's Hadoop committer pending dir. A SIGKILL
@@ -385,8 +400,6 @@ class SnapshotStore:
         return d
 
     def _footer_rows(self, d: str) -> int:
-        import pyarrow.parquet as pq
-
         total = 0
         for root, _dirs, files in os.walk(d):
             for name in files:
@@ -453,7 +466,8 @@ class SnapshotStore:
         """Drop all but the last ``keep_last`` manifests and delete
         every data dir no retained snapshot references — including
         orphan dirs from crashes between data write and manifest
-        publish. Returns the deleted dirs."""
+        publish, whose ``manifest-*.json.tmp`` files are deleted too.
+        Returns the deleted dirs."""
         snaps = self.snapshots(table)
         if not snaps:
             return []
@@ -468,6 +482,9 @@ class SnapshotStore:
                         mdir, f"manifest-{m['snapshot_id']:08d}.json"
                     )
                 )
+        for name in os.listdir(mdir):
+            if name.startswith("manifest-") and name.endswith(".json.tmp"):
+                os.remove(os.path.join(mdir, name))
         dropped = []
         tdir = self.path(table)
         for name in sorted(os.listdir(tdir)):

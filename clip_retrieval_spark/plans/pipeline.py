@@ -24,6 +24,7 @@ from __future__ import annotations
 
 import time
 import uuid
+from collections import Counter
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -184,18 +185,12 @@ class KGPipeline:
         fixpoints — they cannot be bucket-incremental without changing
         semantics, so they re-run over the grown table).
         """
-        already = (
-            self.store.checkpoints()
-            .filter(
-                (F.col("stage") == "refresh")
-                & (F.col("status") == "done")
-                & (F.col("rows") == int(epoch))
-            )
-            .count()
-            > 0
-        )
         store = self.store
-        if already:
+        if any(
+            r["stage"] == "refresh" and r["status"] == "done"
+            and r["rows"] == int(epoch)
+            for r in store.ledger()
+        ):
             return {
                 t: store.read(t)
                 for t in (
@@ -246,20 +241,15 @@ class KGPipeline:
         }
 
     def table_counts(self) -> dict[str, int]:
-        """Row counts per stage table from the checkpoint ledger — no
-        table re-scan (the reference reads its stats sidecars the same
-        way rather than re-reading outputs, logger.py:85-197)."""
-        rows = (
-            self.store.checkpoints()
-            .groupBy("stage")
-            .agg(F.sum("rows").alias("n"))
-            .collect()
-        )
-        return {
-            STAGE_TABLES[r["stage"]]: int(r["n"])
-            for r in rows
-            if r["stage"] in STAGE_TABLES
-        }
+        """Row counts per stage table from the checkpoint ledger, which
+        the driver reads itself — no table re-scan and no Spark job (the
+        reference reads its stats sidecars the same way rather than
+        re-reading outputs, logger.py:85-197)."""
+        counts: Counter = Counter()
+        for r in self.store.ledger():
+            if r["stage"] in STAGE_TABLES:
+                counts[STAGE_TABLES[r["stage"]]] += r["rows"]
+        return dict(counts)
 
     # -- the DAG -----------------------------------------------------------
 

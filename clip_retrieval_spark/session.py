@@ -36,6 +36,10 @@ def get_spark(
 
     ``master=None`` defers to spark-submit / env (``SPARK_GRAFT_CPUS`` is
     honored for local runs so the driver's bench harness controls it).
+
+    ``spark.driver.memory`` is ``SPARK_DRIVER_MEM`` when set, else half of
+    physical memory (``MemTotal``) within [1g, 24g]; the rest is left to
+    the Python workers and the OS.
     """
     builder = SparkSession.builder.appName(app_name)
     if master is None:
@@ -44,10 +48,14 @@ def get_spark(
             master = f"local[{cpus}]"
     if master:
         builder = builder.master(master)
+    # physical pages x page size = MemTotal; >> 21 is bytes -> MB, halved
+    half_mb = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE") >> 21
     conf = {
         # local mode: driver JVM hosts all executor threads — size the
-        # heap for 32 concurrent tasks (default 1g thrashes GC)
-        "spark.driver.memory": os.environ.get("SPARK_DRIVER_MEM", "24g"),
+        # heap from the machine (default 1g thrashes GC)
+        "spark.driver.memory": os.environ.get(
+            "SPARK_DRIVER_MEM", f"{max(1024, min(24 * 1024, half_mb))}m"
+        ),
         "spark.driver.maxResultSize": "4g",
         "spark.sql.adaptive.enabled": "true",
         "spark.sql.adaptive.coalescePartitions.enabled": "true",

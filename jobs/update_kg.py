@@ -69,12 +69,15 @@ def main(argv: list[str] | None = None) -> dict:
     ap.add_argument("--seed", type=int, default=7)
     ap.add_argument("--rollback", type=int, default=None,
                     help="roll the edge table back to this snapshot id "
-                         "and exit (no Spark jobs beyond session start)")
+                         "(a metadata-only commit), count its edges with "
+                         "a Spark count() and exit")
     ap.add_argument("--keep-last", type=int, default=None,
                     help="after committing, expire all but the last K "
-                         "snapshots and GC unreferenced dirs")
+                         "snapshots (K >= 1) and GC unreferenced dirs")
     ap.add_argument("--master", default=None)
     args = ap.parse_args(argv)
+    if args.keep_last is not None and args.keep_last < 1:
+        ap.error("--keep-last must be >= 1")
 
     from clip_retrieval_spark.io import SnapshotStore  # noqa: E402
     from clip_retrieval_spark.operators.materialize import (  # noqa: E402
@@ -112,7 +115,7 @@ def main(argv: list[str] | None = None) -> dict:
     ).collect()[0]
     dropped = (
         store.expire_snapshots(EDGE_TABLE, keep_last=args.keep_last)
-        if args.keep_last
+        if args.keep_last is not None
         else []
     )
     out = {

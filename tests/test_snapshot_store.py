@@ -110,3 +110,18 @@ def test_compact_preserves_rows_and_bounds_files(spark, store):
     dropped = store.expire_snapshots("t", keep_last=1)
     assert len(dropped) == 5
     assert _vals(store.read("t")) == list(range(50))
+
+
+def test_expire_deletes_leftover_manifest_temp_files(spark, store):
+    """A crash inside ``_publish`` between writing the manifest's temp
+    file and renaming it leaves ``manifest-*.json.tmp`` behind; it is
+    never read as a snapshot, and retention GC deletes it."""
+    store.append(_df(spark, 0, 4), "t")
+    tmp = os.path.join(store._meta_dir("t"), "manifest-00000002.json.tmp")
+    with open(tmp, "w", encoding="utf-8") as f:
+        f.write('{"snapshot_id": 2')  # torn write
+    assert store.current_snapshot_id("t") == 1
+    store.expire_snapshots("t", keep_last=1)
+    assert not os.path.exists(tmp)
+    assert os.listdir(store._meta_dir("t")) == ["manifest-00000001.json"]
+    assert _vals(store.read("t")) == [0, 1, 2, 3]

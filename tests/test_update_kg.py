@@ -6,6 +6,8 @@ from __future__ import annotations
 
 import sys
 
+import pytest
+
 sys.path.insert(0, "/root/repo")
 
 from jobs.update_kg import EDGE_TABLE, dump_edges, main  # noqa: E402
@@ -61,3 +63,10 @@ def test_dump_sequence_is_deterministic(spark, tmp_path):
     a = _edges(SnapshotStore(spark, roots[0]))
     b = _edges(SnapshotStore(spark, roots[1]))
     assert a == b and a
+
+
+def test_keep_last_zero_is_rejected(tmp_path, capsys):
+    with pytest.raises(SystemExit) as exc:
+        main(["--store", str(tmp_path), "--keep-last", "0"])
+    assert exc.value.code == 2
+    assert "--keep-last must be >= 1" in capsys.readouterr().err
