@@ -10,7 +10,6 @@ Usage: python BENCH/oracle_check.py --sf-dir /root/testdata/sf0.1 \
 from __future__ import annotations
 
 import argparse
-import math
 import os
 import sys
 
@@ -21,29 +20,13 @@ sys.path.insert(
 import duckdb  # noqa: E402
 
 import __spark_entry__ as entry_mod  # noqa: E402
+from BENCH.result_hash import _rowset  # noqa: E402
 from clip_retrieval_spark.session import get_spark  # noqa: E402
 
 TABLES = (
     "region nation customer supplier part orders lineitem events "
     "documents embeddings"
 ).split()
-
-
-def _canon(v):
-    if isinstance(v, float):
-        if math.isnan(v):
-            return "nan"
-        return f"{v:.6f}".rstrip("0").rstrip(".")
-    if v is None:
-        return ""
-    return str(v)
-
-
-def _rowset(cols, rows):
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-    return sorted(
-        "\x1f".join(_canon(r[i]) for i in order) for r in rows
-    )
 
 
 def main() -> None:

@@ -29,6 +29,15 @@ def _canon(v):
     return str(v)
 
 
+def _rowset(cols, rows):
+    """Order-insensitive canonical form of a result: one line per row,
+    values in column-name order, lines sorted."""
+    order = sorted(range(len(cols)), key=lambda i: cols[i])
+    return sorted(
+        "\x1f".join(_canon(r[i]) for i in order) for r in rows
+    )
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--repo", required=True)
@@ -55,11 +64,8 @@ def main() -> None:
     for name in [q.strip() for q in args.queries.split(",") if q.strip()]:
         df = queries[name](spark, args.sf_dir)
         cols = [c.lower() for c in df.columns]
-        order = sorted(range(len(cols)), key=lambda i: cols[i])
         rows = df.collect()
-        canon = sorted(
-            "\x1f".join(_canon(r[i]) for i in order) for r in rows
-        )
+        canon = _rowset(cols, rows)
         h = hashlib.md5()
         h.update(("|".join(sorted(cols)) + "\n").encode())
         for line in canon:

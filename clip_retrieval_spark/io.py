@@ -46,6 +46,17 @@ LEDGER_SCHEMA = pa.schema(
 )
 
 
+def _footer_rows(path: str) -> int:
+    """Rows of every parquet file under ``path``, summed from the footers
+    without a Spark job; 0 when ``path`` does not exist."""
+    return sum(
+        pq.ParquetFile(os.path.join(root, name)).metadata.num_rows
+        for root, _dirs, files in os.walk(path)
+        for name in files
+        if name.endswith(".parquet")
+    )
+
+
 @dataclass
 class TableStore:
     spark: SparkSession
@@ -98,30 +109,15 @@ class TableStore:
         """Row count from parquet footers (driver-side, no Spark job —
         the Iceberg-snapshot-statistics stand-in). Re-scanning a 10^10-row
         table just to record its count is a job we never run."""
-        total = 0
-        for root, _dirs, files in os.walk(self.path(table)):
-            for name in files:
-                if name.endswith(".parquet"):
-                    total += pq.ParquetFile(
-                        os.path.join(root, name)
-                    ).metadata.num_rows
-        return total
+        return _footer_rows(self.path(table))
 
     def bucket_counts(self, table: str, buckets) -> dict[int, int]:
         """Per-bucket row counts from parquet footers."""
-        out: dict[int, int] = {}
         tdir = self.path(table)
-        for b in buckets:
-            bdir = os.path.join(tdir, f"bucket={b}")
-            n = 0
-            if os.path.isdir(bdir):
-                for name in os.listdir(bdir):
-                    if name.endswith(".parquet"):
-                        n += pq.ParquetFile(
-                            os.path.join(bdir, name)
-                        ).metadata.num_rows
-            out[int(b)] = n
-        return out
+        return {
+            int(b): _footer_rows(os.path.join(tdir, f"bucket={b}"))
+            for b in buckets
+        }
 
     # -- checkpoints ----------------------------------------------------
 
@@ -399,16 +395,6 @@ class SnapshotStore:
         df.write.mode("overwrite").parquet(d)
         return d
 
-    def _footer_rows(self, d: str) -> int:
-        total = 0
-        for root, _dirs, files in os.walk(d):
-            for name in files:
-                if name.endswith(".parquet"):
-                    total += pq.ParquetFile(
-                        os.path.join(root, name)
-                    ).metadata.num_rows
-        return total
-
     def append(self, df: DataFrame, table: str) -> int:
         """Commit ``df`` as a new snapshot = previous dirs + one new
         immutable dir. Returns the snapshot id."""
@@ -416,7 +402,7 @@ class SnapshotStore:
         d = self._write_snap_dir(df, table, cur + 1)
         prev = self.snapshots(table)
         dirs = (prev[-1]["dirs"] if prev else []) + [d]
-        return self._publish(table, "append", dirs, self._footer_rows(d))
+        return self._publish(table, "append", dirs, _footer_rows(d))
 
     def overwrite(self, df: DataFrame, table: str) -> int:
         """Commit ``df`` as a full replacement (the MERGE/compaction
@@ -424,7 +410,7 @@ class SnapshotStore:
         old dirs stay readable via time travel until expired."""
         cur = self.current_snapshot_id(table) or 0
         d = self._write_snap_dir(df, table, cur + 1)
-        return self._publish(table, "overwrite", [d], self._footer_rows(d))
+        return self._publish(table, "overwrite", [d], _footer_rows(d))
 
     def compact(self, table: str, n_files: int) -> int:
         """Small-file compaction (Iceberg's rewrite_data_files): read
@@ -438,7 +424,7 @@ class SnapshotStore:
         cur = self.read(table).repartition(n_files)
         sid = self.current_snapshot_id(table)
         d = self._write_snap_dir(cur, table, sid + 1)
-        return self._publish(table, "compact", [d], self._footer_rows(d))
+        return self._publish(table, "compact", [d], _footer_rows(d))
 
     def rollback(self, table: str, snapshot_id: int) -> int:
         """Metadata-only rollback: publish a new snapshot whose dir set

@@ -19,7 +19,7 @@ import pandas as pd
 
 from pyspark.sql import DataFrame
 
-from clip_retrieval_spark.functions.text import extract_triples
+from clip_retrieval_spark.functions.text import extract_text, extract_triples
 
 TRIPLES_FIELDS = (
     "url string, warc_ts timestamp, sent_id int, subj string, pred string, "
@@ -27,20 +27,21 @@ TRIPLES_FIELDS = (
 )
 
 
-def extract_triples_df(extracted: DataFrame) -> DataFrame:
-    """(url, text, ...) -> triples(url, sent_id, subj, pred, obj, spans)."""
+def _triples(df: DataFrame, col: str, to_text) -> DataFrame:
+    """(url, warc_ts, ``col``) -> triples of ``to_text(col)``: the one
+    emitter behind both stage-2 operators."""
 
-    def _triples(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def _emit(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             # column-wise accumulation: pandas builds a frame from
             # per-column lists without the row-tuple transpose
             urls, tss, sids = [], [], []
             subjs, preds, objs, sspans, ospans = [], [], [], [], []
-            for url, ts, text in zip(
-                pdf["url"].tolist(), pdf["warc_ts"], pdf["text"].tolist()
+            for url, ts, value in zip(
+                pdf["url"].tolist(), pdf["warc_ts"], pdf[col].tolist()
             ):
                 for (sid, subj, pred, obj, s1, e1, s2, e2) in extract_triples(
-                    text or ""
+                    to_text(value)
                 ):
                     urls.append(url)
                     tss.append(ts)
@@ -58,9 +59,14 @@ def extract_triples_df(extracted: DataFrame) -> DataFrame:
                 }
             )
 
-    return extracted.select("url", "warc_ts", "text").mapInPandas(
-        _triples, schema=TRIPLES_FIELDS
+    return df.select("url", "warc_ts", col).mapInPandas(
+        _emit, schema=TRIPLES_FIELDS
     )
+
+
+def extract_triples_df(extracted: DataFrame) -> DataFrame:
+    """(url, text, ...) -> triples(url, sent_id, subj, pred, obj, spans)."""
+    return _triples(extracted, "text", lambda t: t or "")
 
 
 def extract_and_triples_df(pages: DataFrame) -> DataFrame:
@@ -73,34 +79,4 @@ def extract_and_triples_df(pages: DataFrame) -> DataFrame:
     — at 10^12 pages that is a full materialization saved. Semantics are
     EXACTLY extract_pages |> extract_triples_df (same pure functions).
     """
-    from clip_retrieval_spark.functions.text import extract_text
-
-    def _fused(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            urls, tss, sids = [], [], []
-            subjs, preds, objs, sspans, ospans = [], [], [], [], []
-            for url, ts, html in zip(
-                pdf["url"].tolist(), pdf["warc_ts"], pdf["html"].tolist()
-            ):
-                for (sid, s, p, o, s1, e1, s2, e2) in extract_triples(
-                    extract_text(html)
-                ):
-                    urls.append(url)
-                    tss.append(ts)
-                    sids.append(sid)
-                    subjs.append(s)
-                    preds.append(p)
-                    objs.append(o)
-                    sspans.append([s1, e1])
-                    ospans.append([s2, e2])
-            yield pd.DataFrame(
-                {
-                    "url": urls, "warc_ts": tss, "sent_id": sids,
-                    "subj": subjs, "pred": preds, "obj": objs,
-                    "subj_span": sspans, "obj_span": ospans,
-                }
-            )
-
-    return pages.select("url", "warc_ts", "html").mapInPandas(
-        _fused, schema=TRIPLES_FIELDS
-    )
+    return _triples(pages, "html", extract_text)

@@ -13,7 +13,9 @@ clip_inference/writer.py:108-111, logger.py:55-61).
 
 Stages 3+4 shuffle globally (blocking), so they resume at STAGE
 granularity: a completed stage's output table is read back instead of
-recomputed.
+recomputed. ``KGPipeline._downstream`` is the single declaration of the
+stage-3/4 chain; ``run`` and ``refresh_downstream`` differ only in the
+step that materializes each stage.
 
 Skew posture: bucket keys are url-hash (uniform regardless of
 head-domain skew); entity-side skew inside stages 3/4 is handled by the
@@ -62,6 +64,20 @@ def with_bucket(df: DataFrame, n_buckets: int) -> DataFrame:
     )
 
 
+def _timed(work) -> tuple[int, int]:
+    """Run ``work()``; return its (wall_ms, cpu_ms). cpu is the whole
+    process tree incl. python workers (see procstat)."""
+    t0 = time.monotonic()
+    c0 = tree_cpu_seconds()
+    work()
+    wall_ms = int((time.monotonic() - t0) * 1000)
+    # clamp: if the python daemon is killed mid-stage (memory
+    # pressure), its workers re-parent to init and their CPU
+    # leaves the tree — a negative delta is a measurement
+    # artifact, not negative work
+    return wall_ms, max(0, int((tree_cpu_seconds() - c0) * 1000))
+
+
 class KGPipeline:
     def __init__(
         self,
@@ -101,8 +117,9 @@ class KGPipeline:
     def _run_bucketed_stage(
         self, stage: str, pages: DataFrame, transform
     ) -> DataFrame:
-        """Compute ``transform(pending pages)`` for buckets without a
-        checkpoint row; append bucket-partitioned output; commit."""
+        """Compute ``transform(pending pages)`` (without their bucket
+        column) for buckets without a checkpoint row; append
+        bucket-partitioned output; commit."""
         table = STAGE_TABLES[stage]
         store = self.store
         store.gc_uncommitted(stage, table)
@@ -121,18 +138,13 @@ class KGPipeline:
                 )
             else:
                 pending = src  # fresh run: no-op filter elided
-            t0 = time.monotonic()
-            c0 = tree_cpu_seconds()
-            out = transform(pending)
-            if "bucket" not in out.columns:
-                out = with_bucket(out, self.n_buckets)
-            store.append_bucketed(out, table)
-            wall_ms = int((time.monotonic() - t0) * 1000)
-            # clamp: if the python daemon is killed mid-stage (memory
-            # pressure), its workers re-parent to init and their CPU
-            # leaves the tree — a negative delta is a measurement
-            # artifact, not negative work
-            cpu_ms = max(0, int((tree_cpu_seconds() - c0) * 1000))
+            # output rows keep their page's url, so re-deriving the
+            # bucket from it gives each row its page's bucket
+            wall_ms, cpu_ms = _timed(lambda: store.append_bucketed(
+                with_bucket(transform(pending.drop("bucket")),
+                            self.n_buckets),
+                table,
+            ))
             # per-bucket lineage from parquet footers (no re-scan);
             # pending bucket dirs were gc'd, so they hold exactly the
             # rows this run wrote. zero-row buckets commit too.
@@ -151,13 +163,7 @@ class KGPipeline:
         store = self.store
         if -1 in store.committed_buckets(stage):
             return store.read(table)
-        t0 = time.monotonic()
-        c0 = tree_cpu_seconds()
-        df = compute()
-        store.write(df, table)
-        wall_ms = int((time.monotonic() - t0) * 1000)
-        # clamped for the same daemon-death artifact as the bucketed path
-        cpu_ms = max(0, int((tree_cpu_seconds() - c0) * 1000))
+        wall_ms, cpu_ms = _timed(lambda: store.write(compute(), table))
         n = store.fast_count(table)
         store.commit_buckets(stage, {-1: n}, wall_ms, self.run_id)
         self._record_stage(stage, wall_ms, cpu_ms, rows=n)
@@ -186,44 +192,25 @@ class KGPipeline:
         semantics, so they re-run over the grown table).
         """
         store = self.store
+
+        def read_back(stage: str, _compute) -> DataFrame:
+            return store.read(STAGE_TABLES[stage])
+
         if any(
             r["stage"] == "refresh" and r["status"] == "done"
             and r["rows"] == int(epoch)
             for r in store.ledger()
         ):
-            return {
-                t: store.read(t)
-                for t in (
-                    "mentions", "entities", "surface_links", "links",
-                    "nodes", "edges",
-                )
-            }
-        t0 = time.monotonic()
-        c0 = tree_cpu_seconds()
-        store.write(mentions_df(triples), "mentions")
-        mentions = store.read("mentions")
-        store.write(entities_df(mentions), "entities")
-        entities = store.read("entities")
-        store.write(
-            surface_link_topk(mentions, entities, k=self.link_k),
-            "surface_links",
+            return self._downstream(triples, read_back)
+
+        def overwrite(stage: str, compute) -> DataFrame:
+            store.write(compute(), STAGE_TABLES[stage])
+            return read_back(stage, compute)
+
+        tables: dict[str, DataFrame] = {}
+        wall_ms, cpu_ms = _timed(
+            lambda: tables.update(self._downstream(triples, overwrite))
         )
-        surface_links = store.read("surface_links")
-        store.write(
-            mentions.select("mention_id", "surface")
-            .join(surface_links, "surface")
-            .select("mention_id", "entity_id", "score", "rank"),
-            "links",
-        )
-        store.write(
-            canonical_map(entities, entity_merge_edges(entities)), "nodes"
-        )
-        nodes = store.read("nodes")
-        store.write(
-            materialize_edges(triples, surface_links, nodes), "edges"
-        )
-        wall_ms = int((time.monotonic() - t0) * 1000)
-        cpu_ms = max(0, int((tree_cpu_seconds() - c0) * 1000))
         # partition_id folds the epoch into int range; the skip check
         # above matches on the full epoch in `rows`
         store.commit_buckets(
@@ -231,14 +218,7 @@ class KGPipeline:
             self.run_id,
         )
         self._record_stage("refresh", wall_ms, cpu_ms, epoch=int(epoch))
-        return {
-            "mentions": mentions,
-            "entities": entities,
-            "surface_links": surface_links,
-            "links": store.read("links"),
-            "nodes": nodes,
-            "edges": store.read("edges"),
-        }
+        return tables
 
     def table_counts(self) -> dict[str, int]:
         """Row counts per stage table from the checkpoint ledger, which
@@ -255,50 +235,47 @@ class KGPipeline:
 
     def run(self, pages: DataFrame) -> dict[str, DataFrame]:
         if self.materialize_text:
-            text = self._run_bucketed_stage(
-                "extract", pages, lambda p: extract_pages(p.drop("bucket"))
-            )
+            text = self._run_bucketed_stage("extract", pages, extract_pages)
             triples = self._run_bucketed_stage(
-                "triples",
-                text.drop("bucket"),
-                lambda t: extract_triples_df(t),
+                "triples", text.drop("bucket"), extract_triples_df
             )
         else:
             text = None
             triples = self._run_bucketed_stage(
-                "triples",
-                pages,
-                lambda p: extract_and_triples_df(p.drop("bucket")),
+                "triples", pages, extract_and_triples_df
             )
-        mentions = self._run_table_stage(
-            "mentions", lambda: mentions_df(triples.drop("bucket"))
+        out = {} if text is None else {"text_extracted": text}
+        return out | {"triples": triples} | self._downstream(
+            triples.drop("bucket"), self._run_table_stage
         )
-        entities = self._run_table_stage(
-            "entities", lambda: entities_df(mentions)
-        )
-        surface_links = self._run_table_stage(
+
+    def _downstream(
+        self, triples: DataFrame, run_stage
+    ) -> dict[str, DataFrame]:
+        """Stages 3+4 over ``triples`` (no bucket column), declared once.
+        ``run_stage(stage, compute)`` returns the stage's table, computed
+        by ``compute()`` or read back as the caller's commit rule says."""
+        mentions = run_stage("mentions", lambda: mentions_df(triples))
+        entities = run_stage("entities", lambda: entities_df(mentions))
+        surface_links = run_stage(
             "surface_links",
             lambda: surface_link_topk(mentions, entities, k=self.link_k),
         )
-        links = self._run_table_stage(
+        links = run_stage(
             "links",
             lambda: mentions.select("mention_id", "surface")
             .join(surface_links, "surface")
             .select("mention_id", "entity_id", "score", "rank"),
         )
-        nodes = self._run_table_stage(
+        nodes = run_stage(
             "nodes",
             lambda: canonical_map(entities, entity_merge_edges(entities)),
         )
-        edges = self._run_table_stage(
+        edges = run_stage(
             "edges",
-            lambda: materialize_edges(
-                triples.drop("bucket"), surface_links, nodes
-            ),
+            lambda: materialize_edges(triples, surface_links, nodes),
         )
-        out = {} if text is None else {"text_extracted": text}
-        return out | {
-            "triples": triples,
+        return {
             "mentions": mentions,
             "entities": entities,
             "surface_links": surface_links,

@@ -50,6 +50,13 @@ SECTIONS = (
 )
 
 
+def _top1(df, *order) -> dict | None:
+    """The first row of a section under ``order`` as a dict, or None
+    when the section is empty."""
+    rows = (df.orderBy(*order) if order else df).limit(1).collect()
+    return rows[0].asDict() if rows else None
+
+
 def analyze(spark, sf_dir: str, out: str, entropy_floor: float) -> dict:
     from pyspark.sql import functions as F
 
@@ -77,67 +84,33 @@ def analyze(spark, sf_dir: str, out: str, entropy_floor: float) -> dict:
         for r in low
     ]
 
-    top_overlap = (
-        dfs["source_overlap_matrix"]
-        .orderBy(F.desc("shared_chunks"), "source_a", "source_b")
-        .limit(1)
-        .collect()
+    report["max_overlap_pair"] = _top1(
+        dfs["source_overlap_matrix"].select(
+            "source_a", "source_b", "shared_chunks"
+        ),
+        F.desc("shared_chunks"), "source_a", "source_b",
     )
-    report["max_overlap_pair"] = (
-        {
-            "source_a": top_overlap[0]["source_a"],
-            "source_b": top_overlap[0]["source_b"],
-            "shared_chunks": top_overlap[0]["shared_chunks"],
-        }
-        if top_overlap
-        else None
+    report["steepest_drift"] = _top1(
+        dfs["events_trend_slopes"].select(
+            "event_type", "slope_per_day", "r2"
+        ),
+        F.desc(F.abs(F.col("slope_per_day"))), "event_type",
     )
-
-    drift = (
-        dfs["events_trend_slopes"]
-        .orderBy(F.desc(F.abs(F.col("slope_per_day"))), "event_type")
-        .limit(1)
-        .collect()[0]
+    report["max_dim_correlation"] = _top1(
+        dfs["embedding_dim_correlations"].select(
+            "label", "dim_i", "dim_j", "corr"
+        ),
+        F.desc(F.abs(F.col("corr"))), "label", "dim_i", "dim_j",
     )
-    report["steepest_drift"] = {
-        "event_type": drift["event_type"],
-        "slope_per_day": drift["slope_per_day"],
-        "r2": drift["r2"],
-    }
-
-    hot = (
-        dfs["embedding_dim_correlations"]
-        .orderBy(F.desc(F.abs(F.col("corr"))), "label", "dim_i", "dim_j")
-        .limit(1)
-        .collect()[0]
+    report["cluster_agreement"] = _top1(
+        dfs["cluster_agreement_metrics"].select("precision", "recall", "f1")
     )
-    report["max_dim_correlation"] = {
-        "label": hot["label"],
-        "dim_i": hot["dim_i"],
-        "dim_j": hot["dim_j"],
-        "corr": hot["corr"],
-    }
-
-    agree = dfs["cluster_agreement_metrics"].collect()[0]
-    report["cluster_agreement"] = {
-        "precision": agree["precision"],
-        "recall": agree["recall"],
-        "f1": agree["f1"],
-    }
-
-    prov = (
-        dfs["kg_triple_provenance"]
-        .orderBy(F.desc("n_pages"), "subj", "pred", "obj")
-        .limit(1)
-        .collect()[0]
+    report["most_asserted_triple"] = _top1(
+        dfs["kg_triple_provenance"].select(
+            "subj", "pred", "obj", "n_pages", "n_hosts"
+        ),
+        F.desc("n_pages"), "subj", "pred", "obj",
     )
-    report["most_asserted_triple"] = {
-        "subj": prov["subj"],
-        "pred": prov["pred"],
-        "obj": prov["obj"],
-        "n_pages": prov["n_pages"],
-        "n_hosts": prov["n_hosts"],
-    }
     return report
 
 

@@ -31,3 +31,24 @@ def test_analyze_corpus_deterministic(spark, tmp_path):
         b = {tuple(r) for r in
              spark.read.parquet(str(tmp_path / "b" / name)).collect()}
         assert a == b, name
+
+
+def test_analyze_corpus_empty_events_section(spark, tmp_path):
+    """An empty ``events`` table empties the drift section: its headline
+    is None (as an empty overlap matrix already gives) instead of an
+    IndexError, and every other section still reports."""
+    import pyarrow.parquet as pq
+
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    for name in os.listdir(SF):
+        if name != "events.parquet":
+            os.symlink(os.path.join(SF, name), sf / name)
+    events = pq.read_table(os.path.join(SF, "events.parquet"))
+    pq.write_table(events.slice(0, 0), sf / "events.parquet")
+
+    r = analyze(spark, str(sf), str(tmp_path / "out"), entropy_floor=4.0)
+    assert r["sections"]["events_trend_slopes"] == 0
+    assert r["steepest_drift"] is None
+    assert r["most_asserted_triple"]["pred"] == "acquired"
+    assert r["cluster_agreement"] is not None

@@ -5,36 +5,17 @@ driver's CORRECTNESS gate."""
 
 from __future__ import annotations
 
-import math
-
 import duckdb
 import pytest
 
 import __spark_entry__ as entry_mod
+from BENCH.result_hash import _rowset
 
 SF_DIR = "/root/testdata/sf0.01"
 TABLES = (
     "region nation customer supplier part orders lineitem events "
     "documents embeddings"
 ).split()
-
-
-def _canon(v):
-    if isinstance(v, float):
-        if math.isnan(v):
-            return "nan"
-        return f"{v:.6f}".rstrip("0").rstrip(".")
-    if v is None:
-        return ""
-    return str(v)
-
-
-def _rowset(cols, rows):
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-    out = sorted(
-        "\x1f".join(_canon(r[i]) for i in order) for r in rows
-    )
-    return out
 
 
 @pytest.fixture(scope="module")
@@ -50,24 +31,25 @@ def ddb():
 _ORACLES = entry_mod.oracle_sql()
 
 
-@pytest.mark.parametrize("name", sorted(_ORACLES))
-def test_query_matches_oracle(spark, ddb, name):
-    q = entry_mod.queries()[name]
-    sdf = q(spark, SF_DIR)
+def _assert_matches_oracle(spark, con, name, sf):
+    """Spark's ``queries()[name]`` at ``sf`` against its DuckDB oracle on
+    ``con``: same columns, same row count, same canonical rowset."""
+    sdf = entry_mod.queries()[name](spark, sf)
     s_cols = [c.lower() for c in sdf.columns]
     s_rows = [tuple(r) for r in sdf.collect()]
-
-    res = ddb.execute(_ORACLES[name])
+    res = con.execute(_ORACLES[name])
     d_cols = [c[0].lower() for c in res.description]
     d_rows = res.fetchall()
-
     assert sorted(s_cols) == sorted(d_cols), (s_cols, d_cols)
     assert len(s_rows) == len(d_rows), (len(s_rows), len(d_rows))
     sset, dset = _rowset(s_cols, s_rows), _rowset(d_cols, d_rows)
-    mismatches = [
-        (a, b) for a, b in zip(sset, dset) if a != b
-    ]
+    mismatches = [(a, b) for a, b in zip(sset, dset) if a != b]
     assert not mismatches, mismatches[:3]
+
+
+@pytest.mark.parametrize("name", sorted(_ORACLES))
+def test_query_matches_oracle(spark, ddb, name):
+    _assert_matches_oracle(spark, ddb, name, SF_DIR)
 
 
 def test_every_query_is_oracled():
@@ -151,15 +133,7 @@ def test_newest_gates_match_oracle_second_scale(spark, name):
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM '{sf}/{t}.parquet'"
         )
-    sdf = entry_mod.queries()[name](spark, sf)
-    s_cols = [c.lower() for c in sdf.columns]
-    s_rows = [tuple(r) for r in sdf.collect()]
-    res = con.execute(_ORACLES[name])
-    d_cols = [c[0].lower() for c in res.description]
-    d_rows = res.fetchall()
-    assert sorted(s_cols) == sorted(d_cols), (s_cols, d_cols)
-    assert len(s_rows) == len(d_rows), (len(s_rows), len(d_rows))
-    assert _rowset(s_cols, s_rows) == _rowset(d_cols, d_rows)
+    _assert_matches_oracle(spark, con, name, sf)
 
 
 def test_entry_smoke(spark):

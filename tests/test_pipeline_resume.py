@@ -186,3 +186,22 @@ def test_rerun_is_idempotent(spark, outdir):
         for r in pipe2.store.checkpoints().select("run_id").collect()
     }
     assert runs == {pipe1.run_id}
+
+
+def test_run_and_refresh_downstream_agree(spark, tmp_path):
+    """``run`` and ``refresh_downstream`` share one stage-3/4 chain: a
+    refresh over a run's triples table, into an empty output dir, builds
+    the same six downstream tables row for row."""
+    pipe = KGPipeline(spark, str(tmp_path / "run"), n_buckets=4,
+                      materialize_text=False)
+    ran = pipe.run(pages_df(spark, N))
+    triples = pipe.store.read("triples").drop("bucket")
+    fresh = KGPipeline(spark, str(tmp_path / "refresh"))
+    refreshed = fresh.refresh_downstream(triples, epoch=triples.count())
+    tables = ("mentions", "entities", "surface_links", "links", "nodes",
+              "edges")
+    assert set(refreshed) == set(tables)
+    for t in tables:
+        got = sorted(map(repr, refreshed[t].collect()))
+        assert got == sorted(map(repr, ran[t].collect())), t
+        assert got, t

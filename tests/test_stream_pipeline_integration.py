@@ -137,7 +137,9 @@ def test_crawl_append_kill_resume_then_refresh(spark, tmp_path):
     assert epoch2 > epoch1
     t2 = KGPipeline(spark, kg).refresh_downstream(result2, epoch=epoch2)
     assert t2["edges"].count() > edges1
-    # downstream equals a from-scratch batch DAG over the same triples
+    # a refresh over the grown table equals a refresh into an empty
+    # output dir over the same triples (run() vs refresh agreement is
+    # tests/test_pipeline_resume.py's)
     fresh = KGPipeline(spark, str(tmp_path / "kg_fresh")).refresh_downstream(
         result2, epoch=epoch2
     )
