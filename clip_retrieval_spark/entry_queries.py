@@ -1530,8 +1530,8 @@ def _kg_stage_tables(spark: SparkSession, sf: str):
     m = mentions_df(tr).localCheckpoint(eager=True)
     # e is tiny (one row per distinct surface) but its lineage is a
     # distinct-exchange + Python embed over ALL mentions, and the
-    # stage-3/4 gates fan it into several branches (entity side of the
-    # LSH join — consumed twice by lsh_explode — plus the surface
+    # stage-3/4 gates fan it into several branches (both sides of the
+    # LSH self-join — lsh_explode consumes it twice — plus the surface
     # projection): pin it once
     e = entities_df(m).localCheckpoint(eager=True)
     return tr, m, e
@@ -1545,17 +1545,18 @@ def kg_links(spark: SparkSession, sf: str) -> DataFrame:
     Entity0..39 whose embeddings are a pure function of the surface, so
     the expected (linked_surface, score, rank) per surface is a fixed
     120-row table: computed once from the deterministic featurizer,
-    verified independently against an exact numpy top-3 (LSH blocking
-    has full recall on this vocabulary — checked exhaustively vs
-    blocking="exact"), and pinned as SQL VALUES — the way the reference
-    pins golden batch shapes (tests/test_clip_inference/
-    test_reader.py:58-61). Tie-breaks are deterministic: (score DESC,
-    linked_surface ASC). The raw hash-id variant (link_topk) is the
-    same operator one projection earlier; id stability is unit-tested."""
+    verified independently against an exact numpy top-3
+    (tests/test_linking.py::test_closed_vocabulary_recall, which also
+    shows LSH blocking has full recall on this vocabulary), and pinned
+    as SQL VALUES — the way the reference pins golden batch shapes
+    (tests/test_clip_inference/test_reader.py:58-61). Tie-breaks are
+    deterministic: (score DESC, linked_surface ASC). The raw hash-id
+    variant (mention_links) is the same operator one projection
+    earlier; id stability is unit-tested."""
     from clip_retrieval_spark.operators.link import surface_link_topk
 
     _, m, e = _kg_stage_tables(spark, sf)
-    sl = surface_link_topk(m, e, k=3)
+    sl = surface_link_topk(e, k=3)
     linked = e.select("entity_id", F.col("surface").alias("linked_surface"))
     return (
         m.select("url", "sent_id", "role", "surface")
@@ -1576,8 +1577,9 @@ def kg_links(spark: SparkSession, sf: str) -> DataFrame:
 
 # Expected top-3 links per surface: engine output verified against an
 # independent exact numpy computation (sequential float32-product fold,
-# matching Spark's aggregate order), then pinned. Regenerate with
-# surface_link_topk(..., blocking="exact") if the featurizer changes.
+# matching Spark's aggregate order), then pinned. If the featurizer
+# changes, regenerate from the exact numpy top-3 in
+# tests/test_linking.py::test_closed_vocabulary_recall.
 KG_LINKS_TOPK_VALUES = """
   ('Entity0','Entity0',1.0,1),('Entity0','Entity16',0.763763,2),('Entity0','Entity2',0.714286,3),
   ('Entity1','Entity1',1.0,1),('Entity1','Entity16',0.903696,2),('Entity1','Entity13',0.848528,3),
@@ -1652,8 +1654,8 @@ def kg_links_rank1(spark: SparkSession, sf: str) -> DataFrame:
     ``kg_links``."""
     from clip_retrieval_spark.operators.link import surface_link_topk
 
-    _, m, e = _kg_stage_tables(spark, sf)
-    sl = surface_link_topk(m, e, k=1)
+    _, _, e = _kg_stage_tables(spark, sf)
+    sl = surface_link_topk(e, k=1)
     linked = e.select(
         "entity_id", F.col("surface").alias("linked_surface")
     )
@@ -1701,8 +1703,8 @@ def kg_nodes_edges(spark: SparkSession, sf: str) -> DataFrame:
         materialize_edges,
     )
 
-    tr, m, e = _kg_stage_tables(spark, sf)
-    surface_links = surface_link_topk(m, e, k=1)
+    tr, _, e = _kg_stage_tables(spark, sf)
+    surface_links = surface_link_topk(e, k=1)
     nodes = canonical_map(e, entity_merge_edges(e, threshold=0.95))
     edges = materialize_edges(tr, surface_links, nodes)
     rep = nodes.groupBy("canonical_id").agg(

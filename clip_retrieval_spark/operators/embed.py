@@ -81,8 +81,8 @@ def mentions_df(triples: DataFrame) -> DataFrame:
     surface and materializing it per-mention multiplies write volume by
     ~10x at web scale (and did measurably hurt 4x-core scaling: shipping
     12M array<float> rows through Arrow + parquet was the bottleneck
-    stage). Embeddings attach to DISTINCT surfaces via
-    ``surface_embeddings`` where linking needs them.
+    stage). Embeddings attach to DISTINCT surfaces in the entity table
+    (``entities_df``), which linking reads.
     """
     subj = triples.select(
         "url",
@@ -113,11 +113,13 @@ def mentions_df(triples: DataFrame) -> DataFrame:
     )
 
 
-def surface_embeddings(surfaces: DataFrame) -> DataFrame:
-    """(surface) -> (surface, embedding) via Arrow-batched mapInPandas —
-    the clip-retrieval inference pattern applied to the distinct-surface
-    table (small under Zipf; the analog of the reference caching
-    encodings per text, clip_back.py:671)."""
+def entities_df(mentions: DataFrame) -> DataFrame:
+    """Distinct surfaces -> entity table (the 'index' side of linking),
+    embedded via Arrow-batched mapInPandas — the clip-retrieval
+    inference pattern applied to the distinct-surface table (small under
+    Zipf; the analog of the reference caching encodings per text,
+    clip_back.py:671). This is the build's one embedding pass: linking
+    scores the embeddings this table holds."""
 
     def _embed(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -128,14 +130,9 @@ def surface_embeddings(surfaces: DataFrame) -> DataFrame:
                 }
             )
 
-    return surfaces.select("surface").distinct().mapInPandas(
+    return mentions.select("surface").distinct().mapInPandas(
         _embed, schema=SURFACE_EMB_FIELDS
-    )
-
-
-def entities_df(mentions: DataFrame) -> DataFrame:
-    """Distinct surfaces -> entity table (the 'index' side of linking)."""
-    return surface_embeddings(mentions).withColumn(
+    ).withColumn(
         "entity_id",
         F.xxhash64(F.lit("entity"), F.col("surface")).bitwiseAND(
             F.lit(0x7FFFFFFFFFFFFFFF)

@@ -5,14 +5,13 @@ The Spark restatement of the reference's knn query path
 -> metadata join), run for every mention in the corpus at once instead
 of one HTTP request at a time (clip_back.py:472-507).
 
-Two physical strategies, same semantics:
-
-* ``broadcast`` (entity table fits in executors — the "small index"
-  case): block on shared LSH band keys but hint ``F.broadcast`` on the
-  entity side, so the candidate join is a broadcast-hash join with NO
-  shuffle of the big mention table.
-* shuffle bucket join (entity table large): plain equi-join on
-  (band, sig); AQE handles skewed buckets.
+One physical strategy: the entity table is joined to itself on shared
+MinHash-LSH band keys, one band table feeding both sides, with
+``F.broadcast`` on the linked side, so the candidate join is a
+broadcast-hash join. The entity table holds one row per distinct
+surface, already embedded, so linking scores the embeddings it holds
+and runs no Python. Mentions pick up their surface's links through one
+equi-join on surface (``mention_links``).
 
 Top-k uses a total order (score DESC, linked surface ASC) — faiss
 breaks ties by internal order (clip_back.py:362), which is
@@ -29,86 +28,33 @@ from clip_retrieval_spark.operators.lsh import lsh_explode
 
 LINKS_COLUMNS = ("mention_id", "entity_id", "score", "rank")
 
+# range-search threshold analog (reference clip_filter.py:51-53;
+# threshold 0.94 at clip_back.py:292)
+MIN_SCORE = 0.5
 
-def surface_link_topk(
-    mentions: DataFrame,
-    entities: DataFrame,
-    k: int = 3,
-    min_score: float = 0.5,
-    broadcast_entities: bool = True,
-    n_hashes: int = 16,
-    band_rows: int = 2,
-    blocking: str = "lsh",
-) -> DataFrame:
-    """surface_links(surface, entity_id, score, rank) with rank 1..k —
-    the distinct-surface half of linking (see link_topk).
 
-    ``min_score`` is the range-search threshold analog
-    (reference clip_filter.py:51-53; threshold 0.94 at clip_back.py:292).
-
-    ``blocking``: ``"lsh"`` (default) blocks candidates on shared
-    MinHash band keys — the scale path for a large entity table.
-    ``"exact"`` scores every (surface, entity) pair against the
-    broadcast entity table — the flat-index analog (the reference uses
-    exact faiss indexes when the corpus is small enough,
-    clip_back.py:343-352); full recall, cost |surfaces| x |entities|,
-    correct choice whenever the entity vocabulary is bounded.
-
-    Link scores are a pure function of the mention SURFACE (embedding is
-    deterministic of surface), so the expensive candidate-join + window
-    top-k runs over DISTINCT surfaces only — under Zipfian mention skew
-    the distinct-surface table is orders of magnitude smaller than the
-    mention table (the same observation behind the reference caching
-    encodings, clip_back.py:671). Mentions then pick up their links via
-    one equi-join on surface (AQE broadcasts it when it fits).
-    """
-    from clip_retrieval_spark.operators.embed import surface_embeddings
-
-    # Pin the distinct-surface table: lsh_explode consumes its input
-    # twice (band table + join back), and without the pin the whole
-    # distinct-over-mentions + Python-embed subtree re-executes per
-    # consumer. Small under Zipf by this operator's contract (the
-    # reference caches encodings the same way, clip_back.py:671).
-    surfaces = surface_embeddings(mentions).localCheckpoint(eager=True)
-    if blocking == "exact":
-        e0 = entities.select(
-            "entity_id",
-            F.col("surface").alias("_e_surface"),
-            F.col("embedding").alias("e_emb"),
-        )
-        if broadcast_entities:
-            e0 = F.broadcast(e0)
-        cand = surfaces.select(
-            "surface", F.col("embedding").alias("s_emb")
-        ).crossJoin(e0)
-    elif blocking == "lsh":
-        s = lsh_explode(
-            surfaces, "surface", n_hashes, band_rows
-        ).select(
-            "surface", "band", "sig", F.col("embedding").alias("s_emb")
-        )
-        e = lsh_explode(
-            entities.select(
-                "entity_id",
-                F.col("surface").alias("_e_surface"),
-                "embedding",
-            ),
-            "_e_surface", n_hashes, band_rows,
-        ).select(
-            "entity_id", "_e_surface", "band", "sig",
-            F.col("embedding").alias("e_emb"),
-        )
-        if broadcast_entities:
-            e = F.broadcast(e)
-        cand = (
-            s.join(e, ["band", "sig"])
-            # a surface/entity pair can share many bands; score each once
-            .dropDuplicates(["surface", "entity_id"])
-        )
-    else:
-        raise ValueError(f"unknown blocking {blocking!r}")
-    cand = cand.withColumn("score", dot("s_emb", "e_emb")).filter(
-        F.col("score") >= min_score
+def surface_link_topk(entities: DataFrame, k: int = 3) -> DataFrame:
+    """surface_links(surface, entity_id, score, rank) with rank 1..k:
+    every surface of ``entities(entity_id, surface, embedding)`` linked
+    against that same table by the dot of the embeddings it holds (unit
+    vectors, so cosine). It runs over distinct surfaces, orders of
+    magnitude fewer than mentions under Zipf skew (the reference caches
+    encodings the same way, clip_back.py:671); ``mention_links`` fans
+    the result out to mentions."""
+    bands = lsh_explode(entities, "surface")
+    s = bands.select(
+        "surface", "band", "sig", F.col("embedding").alias("s_emb")
+    )
+    e = bands.select(
+        "entity_id", F.col("surface").alias("_e_surface"), "band", "sig",
+        F.col("embedding").alias("e_emb"),
+    )
+    cand = (
+        s.join(F.broadcast(e), ["band", "sig"])
+        # a surface/entity pair can share many bands; score each once
+        .dropDuplicates(["surface", "entity_id"])
+        .withColumn("score", dot("s_emb", "e_emb"))
+        .filter(F.col("score") >= MIN_SCORE)
     )
     # Tie-break by the LINKED SURFACE (not the entity id hash): equally
     # deterministic — entity surfaces are distinct — but legible and
@@ -130,23 +76,12 @@ def surface_link_topk(
     )
 
 
-def link_topk(
-    mentions: DataFrame,
-    entities: DataFrame,
-    k: int = 3,
-    min_score: float = 0.5,
-    broadcast_entities: bool = True,
-    n_hashes: int = 16,
-    band_rows: int = 2,
-    blocking: str = "lsh",
+def mention_links(
+    mentions: DataFrame, surface_links: DataFrame
 ) -> DataFrame:
-    """links(mention_id, entity_id, score, rank) with rank 1..k:
-    ``surface_link_topk`` joined back onto mentions (one equi-join on
-    surface; AQE broadcasts the surface-links side when it fits)."""
-    surface_links = surface_link_topk(
-        mentions, entities, k, min_score, broadcast_entities,
-        n_hashes, band_rows, blocking,
-    )
+    """links(mention_id, entity_id, score, rank): each mention takes its
+    surface's ``surface_link_topk`` rows (one equi-join on surface; AQE
+    broadcasts the surface-links side when it fits)."""
     return mentions.select("mention_id", "surface").join(
         surface_links, "surface"
-    ).select("mention_id", "entity_id", "score", "rank")
+    ).select(*LINKS_COLUMNS)

@@ -15,7 +15,10 @@ Stages 3+4 shuffle globally (blocking), so they resume at STAGE
 granularity: a completed stage's output table is read back instead of
 recomputed. ``KGPipeline._downstream`` is the single declaration of the
 stage-3/4 chain; ``run`` and ``refresh_downstream`` differ only in the
-step that materializes each stage.
+step that materializes each stage. Stage 3 embeds each distinct
+surface once, into ``entities``; ``surface_links`` links that table
+against itself, scoring the embeddings it holds, and ``links`` fans the
+surface links out to mentions.
 
 Skew posture: bucket keys are url-hash (uniform regardless of
 head-domain skew); entity-side skew inside stages 3/4 is handled by the
@@ -35,7 +38,10 @@ from clip_retrieval_spark.io import TableStore
 from clip_retrieval_spark.procstat import tree_cpu_seconds
 from clip_retrieval_spark.operators.embed import entities_df, mentions_df
 from clip_retrieval_spark.operators.extract import extract_pages
-from clip_retrieval_spark.operators.link import surface_link_topk
+from clip_retrieval_spark.operators.link import (
+    mention_links,
+    surface_link_topk,
+)
 from clip_retrieval_spark.operators.materialize import (
     canonical_map,
     entity_merge_edges,
@@ -84,7 +90,6 @@ class KGPipeline:
         spark: SparkSession,
         out_dir: str,
         n_buckets: int = 32,
-        link_k: int = 3,
         run_id: str | None = None,
         materialize_text: bool = True,
     ) -> None:
@@ -97,7 +102,6 @@ class KGPipeline:
         self.spark = spark
         self.store = TableStore(spark, out_dir)
         self.n_buckets = n_buckets
-        self.link_k = link_k
         self.run_id = run_id or uuid.uuid4().hex[:12]
         self.materialize_text = materialize_text
         # per-stage {wall_ms, cpu_ms} for this run (cpu = whole process
@@ -258,14 +262,10 @@ class KGPipeline:
         mentions = run_stage("mentions", lambda: mentions_df(triples))
         entities = run_stage("entities", lambda: entities_df(mentions))
         surface_links = run_stage(
-            "surface_links",
-            lambda: surface_link_topk(mentions, entities, k=self.link_k),
+            "surface_links", lambda: surface_link_topk(entities)
         )
         links = run_stage(
-            "links",
-            lambda: mentions.select("mention_id", "surface")
-            .join(surface_links, "surface")
-            .select("mention_id", "entity_id", "score", "rank"),
+            "links", lambda: mention_links(mentions, surface_links)
         )
         nodes = run_stage(
             "nodes",

@@ -118,7 +118,7 @@ def main(argv: list[str] | None = None) -> dict:
     ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
     ap.add_argument("--sf-dir", default="/root/testdata/sf0.01")
     ap.add_argument("--out", required=True)
-    ap.add_argument("--master", default="local[8]")
+    ap.add_argument("--master", default=None)
     ap.add_argument("--entropy-floor", type=float, default=4.0)
     args = ap.parse_args(argv)
 

@@ -122,7 +122,7 @@ def main(argv: list[str] | None = None) -> dict:
     ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
     ap.add_argument("--sf-dir", default="/root/testdata/sf0.01")
     ap.add_argument("--out", required=True)
-    ap.add_argument("--master", default="local[8]")
+    ap.add_argument("--master", default=None)
     ap.add_argument("--quality-min", type=float, default=0.5)
     ap.add_argument("--semantic-tau", type=float, default=0.3)
     ap.add_argument("--sample-pct", type=int, default=50)

@@ -13,7 +13,7 @@ from clip_retrieval_spark.fixtures import ENTITY_ALIASES, pages_df
 from clip_retrieval_spark.operators.cc import connected_components
 from clip_retrieval_spark.operators.embed import entities_df, mentions_df
 from clip_retrieval_spark.operators.extract import extract_pages
-from clip_retrieval_spark.operators.link import link_topk, surface_link_topk
+from clip_retrieval_spark.operators.link import surface_link_topk
 from clip_retrieval_spark.operators.materialize import (
     canonical_map,
     entity_merge_edges,
@@ -103,7 +103,7 @@ def stage4(spark):
     tr = extract_triples_df(extract_pages(pages_df(spark, 150))).cache()
     m = mentions_df(tr).cache()
     e = entities_df(m).cache()
-    surface_links = surface_link_topk(m, e, k=3).cache()
+    surface_links = surface_link_topk(e, k=3).cache()
     nodes = canonical_map(e, entity_merge_edges(e)).cache()
     return tr, m, e, surface_links, nodes
 

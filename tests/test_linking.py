@@ -2,20 +2,30 @@
 
 from __future__ import annotations
 
+import re
+
 import numpy as np
+import pandas as pd
 import pytest
 
 from clip_retrieval_spark.fixtures import pages_df
+from clip_retrieval_spark.entry_queries import KG_LINKS_TOPK_VALUES
 from clip_retrieval_spark.operators.embed import (
     DIM,
+    ENTITIES_FIELDS,
     _ngram_features,
+    embed_batch,
     entities_df,
     mentions_df,
     stable_id63,
 )
 from clip_retrieval_spark.operators.extract import extract_pages
 from clip_retrieval_spark.operators.lsh import candidate_pairs, lsh_explode
-from clip_retrieval_spark.operators.link import link_topk
+from clip_retrieval_spark.operators.link import (
+    MIN_SCORE,
+    mention_links,
+    surface_link_topk,
+)
 from clip_retrieval_spark.operators.triples import extract_triples_df
 
 N = 150
@@ -26,7 +36,7 @@ def stage3(spark):
     tr = extract_triples_df(extract_pages(pages_df(spark, N))).cache()
     m = mentions_df(tr).cache()
     e = entities_df(m).cache()
-    links = link_topk(m, e, k=3).cache()
+    links = mention_links(m, surface_link_topk(e, k=3)).cache()
     return tr, m, e, links
 
 
@@ -104,6 +114,80 @@ def test_topk_rank_contract(stage3):
     )
     assert bad == 0
     assert links.filter("rank > 3").count() == 0
+
+
+VOCAB = [f"Entity{i}" for i in range(40)]
+
+
+def _dot64(a, b) -> float:
+    """float64 dot accumulated left to right, as functions.vectors.dot."""
+    acc = 0.0
+    for x, y in zip(a, b):
+        acc += float(x) * float(y)
+    return acc
+
+
+def _linked(e):
+    """surface_link_topk(e, k=3) as {(surface, rank): (linked, score)}."""
+    sl = surface_link_topk(e, k=3).join(
+        e.selectExpr("entity_id", "surface as linked"), "entity_id"
+    )
+    return {
+        (r["surface"], r["rank"]): (r["linked"], r["score"])
+        for r in sl.collect()
+    }
+
+
+def test_closed_vocabulary_recall(spark):
+    # LSH blocking has full recall on the gate vocabulary: the operator's
+    # top-3 equals an exact all-pairs numpy top-3 over the same
+    # embeddings, ordered (score DESC, linked surface ASC)
+    e = entities_df(
+        spark.createDataFrame([(s,) for s in VOCAB], "surface string")
+    ).cache()
+    got = _linked(e)
+    emb = dict(zip(VOCAB, embed_batch(pd.Series(VOCAB))))
+    want = {}
+    for s in VOCAB:
+        scored = sorted(
+            (-_dot64(emb[s], emb[t]), t) for t in VOCAB
+        )
+        top = [(t, -neg) for neg, t in scored if -neg >= MIN_SCORE][:3]
+        for rank, (t, score) in enumerate(top, 1):
+            want[(s, rank)] = (t, score)
+    assert len(want) == 120
+    assert got.keys() == want.keys()
+    for key, (t, score) in want.items():
+        assert got[key][0] == t, key
+        assert abs(got[key][1] - score) <= 1e-6, key
+    # ... and equals the 120 rows the kg_links oracle pins
+    pinned = re.findall(
+        r"\('(\w+)','(\w+)',([0-9.]+),(\d+)\)", KG_LINKS_TOPK_VALUES
+    )
+    assert len(pinned) == 120
+    assert {(s, int(r)) for s, _, _, r in pinned} == got.keys()
+    for s, t, score, r in pinned:
+        assert got[(s, int(r))][0] == t, (s, r)
+        assert abs(got[(s, int(r))][1] - float(score)) <= 1e-6, (s, r)
+
+
+def test_links_score_the_supplied_embeddings(spark):
+    # linking scores the embeddings the entity table holds — it does not
+    # re-embed either side. These vectors are not the featurizer's for
+    # the surface, so a second embedding pass would change every score.
+    emb = dict(zip(VOCAB, embed_batch(pd.Series([s + "#" for s in VOCAB]))))
+    e = spark.createDataFrame(
+        [(stable_id63("entity", s), s, [float(x) for x in emb[s]])
+         for s in VOCAB],
+        ENTITIES_FIELDS,
+    )
+    got = _linked(e)
+    assert got
+    for (s, _rank), (t, score) in got.items():
+        assert abs(score - _dot64(emb[s], emb[t])) <= 1e-6, (s, t)
+    for s in VOCAB:
+        t, score = got[(s, 1)]
+        assert t == s and abs(score - 1.0) <= 1e-6, s
 
 
 def _is_spanning_tree(edges, nodes):
