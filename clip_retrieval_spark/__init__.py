@@ -13,8 +13,9 @@ plus the general-purpose operator library (dedup, similarity search,
 text analysis) that a large-scale training-data pipeline needs.
 
 Everything is pyspark.sql DataFrames; per-row heavy work is Arrow-batched
-``mapInPandas`` (model/extractor loaded once per Python worker — the
-clip-retrieval inference pattern, reference clip_inference/mapper.py:16-78).
+``mapInArrow``/``mapInPandas`` (model/extractor loaded once per Python
+worker — the clip-retrieval inference pattern, reference
+clip_inference/mapper.py:16-78).
 """
 
 __version__ = "0.1.0"

@@ -2,7 +2,7 @@
 triple extraction.
 
 These pure functions ARE the spec. The Spark operators apply them inside
-Arrow-batched ``mapInPandas`` (never per-row Python UDFs); the independent
+Arrow-batched ``mapInArrow`` (never per-row Python UDFs); the independent
 oracle in ``tests/oracle.py`` re-implements the same spec with a different
 code path (html.parser.HTMLParser) and the test suite asserts byte-identical
 text per url — the analog of the reference's sequential-vs-pyspark
@@ -79,7 +79,10 @@ _INLINE_RE = re.compile(
     r"</?(%s)\b[^>]*>" % "|".join(sorted(INLINE_TAGS)), re.IGNORECASE
 )
 _TAG_RE = re.compile(r"<[a-zA-Z/!][^>]*>")
-_WS_RE = re.compile(r"[ \t\r\f\v\xa0]+")
+# every run of [ \t\r\f\v\xa0] except a lone space, which already is its
+# own canonical form: rewriting it with itself is most of the matches on
+# real text and all of them wasted
+_WS_RE = re.compile(r"[\t\r\f\v\xa0][ \t\r\f\v\xa0]*| [ \t\r\f\v\xa0]+")
 
 
 def extract_text(html_bytes: bytes | str | None) -> str:
@@ -119,6 +122,9 @@ _CHUNK_STOP = frozenset("The A An This It But And".split())
 _SENT_SPLIT_RE = re.compile(r"(?<=[.!?])\s+")
 _TOKEN_RE = re.compile(r"[A-Za-z0-9][A-Za-z0-9&'\-]*")
 _LOWER_RE = re.compile(r"^[a-z]+$")
+# two entity chunks need two tokens opening with A-Z, so a sentence with
+# fewer than two A-Z letters cannot yield a triple
+_TWO_CAPS_RE = re.compile(r"[A-Z][^A-Z]*[A-Z]")
 
 
 def _is_predicate(gap: list[str]) -> bool:
@@ -151,8 +157,9 @@ def sentences(text: str) -> list[str]:
 def _chunks(tokens: list[str]) -> list[tuple[int, int]]:
     """Maximal capitalized runs as [start, end) spans."""
     # precompute the cap flag once per token (the run scan below would
-    # otherwise test most tokens twice)
-    caps = [t[0].isupper() and t[0].isascii() for t in tokens]
+    # otherwise test most tokens twice); tokens open with [A-Za-z0-9], so
+    # "opens with A-Z" is one string comparison
+    caps = ["A" <= t < "[" for t in tokens]
     spans = []
     i, n = 0, len(tokens)
     while i < n:
@@ -174,6 +181,8 @@ def extract_triples(
     """TRIPLE SPEC v1 (module docstring). Deterministic, pure."""
     out = []
     for sent_id, sent in enumerate(sentences(text)):
+        if not _TWO_CAPS_RE.search(sent):
+            continue
         tokens = _TOKEN_RE.findall(sent)
         spans = _chunks(tokens)
         for (s1, e1), (s2, e2) in zip(spans, spans[1:]):

@@ -13,7 +13,9 @@ Scale mechanics:
   skew-join splits hub partitions;
 * ``localCheckpoint`` truncates lineage every iteration (driver loops,
   SURVEY.md §4 item 2) so plans don't grow unboundedly;
-* expected O(log n) rounds; ``max_iter`` bounds runaways and raises.
+* expected O(log n) rounds; the loop stops at the first round whose
+  output is a star forest (the fixpoint), with no extra confirming
+  round; ``max_iter`` bounds runaways and raises.
 
 All functions take/return edge DataFrames with columns (src, dst).
 """
@@ -25,10 +27,15 @@ from pyspark.sql import functions as F
 
 
 def _sym(edges: DataFrame) -> DataFrame:
-    """Undirected neighbor list as directed pairs (u, v), u != v."""
+    """Undirected neighbor list as directed pairs (u, v), u != v.
+
+    Duplicates are left in: ``min`` is idempotent, and the round's final
+    ``distinct`` (end of ``_small_star``) absorbs every duplicate row they
+    carry forward.
+    """
     fwd = edges.select(F.col("src").alias("u"), F.col("dst").alias("v"))
     rev = edges.select(F.col("dst").alias("u"), F.col("src").alias("v"))
-    return fwd.unionByName(rev).filter(F.col("u") != F.col("v")).distinct()
+    return fwd.unionByName(rev).filter(F.col("u") != F.col("v"))
 
 
 def _large_star(edges: DataFrame) -> DataFrame:
@@ -41,21 +48,17 @@ def _large_star(edges: DataFrame) -> DataFrame:
         .filter(F.col("v") > F.col("u"))
         .select(F.col("v").alias("src"), F.col("m").alias("dst"))
         .filter(F.col("src") != F.col("dst"))
-        .distinct()
     )
 
 
 def _small_star(edges: DataFrame) -> DataFrame:
     """Orient (larger -> smaller); connect each node's smaller
-    neighborhood (plus itself) to its min."""
-    oriented = (
-        edges.select(
-            F.greatest("src", "dst").alias("u"),
-            F.least("src", "dst").alias("v"),
-        )
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-    )
+    neighborhood (plus itself) to its min. The output is distinct and
+    every edge points larger -> smaller."""
+    oriented = edges.select(
+        F.greatest("src", "dst").alias("u"),
+        F.least("src", "dst").alias("v"),
+    ).filter(F.col("u") != F.col("v"))
     mins = oriented.groupBy("u").agg(F.min("v").alias("m"))
     nbr = oriented.join(mins, "u").select(
         F.col("v").alias("src"), F.col("m").alias("dst")
@@ -68,13 +71,25 @@ def _small_star(edges: DataFrame) -> DataFrame:
     )
 
 
-def _fingerprint(edges: DataFrame) -> tuple[int, int]:
-    row = edges.agg(
-        F.count("*").alias("n"),
-        # bit_xor: order-insensitive, overflow-free under ANSI mode
-        F.coalesce(F.bit_xor(F.xxhash64("src", "dst")), F.lit(0)).alias("h"),
-    ).collect()[0]
-    return int(row["n"]), int(row["h"])
+def _is_star_forest(edges: DataFrame) -> bool:
+    """True iff the distinct larger -> smaller ``edges`` are a forest of
+    stars: every src has exactly one dst and no dst is a src. Both are
+    needed — small-star can leave a node with two parents, and a chain
+    has one parent per node. A round over a star forest returns it
+    unchanged, so this is the fixpoint test; one algebraic aggregation
+    on the node (skew-safe, like the min-neighbor step)."""
+    as_src = edges.select(
+        F.col("src").alias("node"), F.lit(1).alias("out"), F.lit(0).alias("into")
+    )
+    as_dst = edges.select(
+        F.col("dst").alias("node"), F.lit(0).alias("out"), F.lit(1).alias("into")
+    )
+    per_node = as_src.unionByName(as_dst).groupBy("node").agg(
+        F.sum("out").alias("out"), F.max("into").alias("into")
+    )
+    return per_node.filter(
+        (F.col("out") > 1) | ((F.col("out") == 1) & (F.col("into") == 1))
+    ).isEmpty()
 
 
 def connected_components(edges: DataFrame, max_iter: int = 50) -> DataFrame:
@@ -90,13 +105,10 @@ def connected_components(edges: DataFrame, max_iter: int = 50) -> DataFrame:
         .distinct()
         .localCheckpoint(eager=True)
     )
-    prev_fp = None
     for _ in range(max_iter):
         cur = _small_star(_large_star(cur)).localCheckpoint(eager=True)
-        fp = _fingerprint(cur)
-        if fp == prev_fp:
+        if _is_star_forest(cur):
             break
-        prev_fp = fp
     else:
         raise RuntimeError(
             f"connected_components: no fixpoint within {max_iter} iterations"

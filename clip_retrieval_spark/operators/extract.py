@@ -1,11 +1,13 @@
 """Stage 1 — byte-identical HTML->text extraction.
 
-Arrow-batched ``mapInPandas`` applying the pure EXTRACTION SPEC v1
+Arrow-batched ``mapInArrow`` applying the pure EXTRACTION SPEC v1
 (clip_retrieval_spark.functions.text.extract_text). This is the engine's
 analog of the reference's per-sample decode/preprocess step executed inside
 batched DataLoader workers (reference clip_inference/reader.py:94-120);
 batching here is Arrow (``spark.sql.execution.arrow.maxRecordsPerBatch``),
-not torch collate.
+not torch collate. Only ``html`` becomes Python objects: ``url``,
+``warc_ts`` and ``lang`` pass through as the input batch's Arrow columns,
+and ``text`` is built as one ``pa.string()`` array.
 
 Scale notes (100 TB design point):
 * Narrow transformation — no shuffle. Input parallelism = Iceberg/parquet
@@ -21,7 +23,7 @@ from __future__ import annotations
 
 from typing import Iterator
 
-import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -38,23 +40,24 @@ def extract_pages(pages: DataFrame) -> DataFrame:
     not touch (Catalyst pushes the pruning into the file reader).
     """
 
-    def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def _extract(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         # init-once-per-worker point: the extractor is pure-Python here,
         # but a heavier model would be constructed HERE, outside the loop
         # (the clip-retrieval pattern, reference mapper.py:16-48).
-        for pdf in batches:
-            texts = [extract_text(h) for h in pdf["html"]]
-            yield pd.DataFrame(
-                {
-                    "url": pdf["url"],
-                    "warc_ts": pdf["warc_ts"],
-                    "text": texts,
-                    "lang": pdf["lang"],
-                }
+        for batch in batches:
+            texts = [extract_text(h) for h in batch.column("html").to_pylist()]
+            yield pa.RecordBatch.from_arrays(
+                [
+                    batch.column("url"),
+                    batch.column("warc_ts"),
+                    pa.array(texts, pa.string()),
+                    batch.column("lang"),
+                ],
+                names=["url", "warc_ts", "text", "lang"],
             )
 
     pruned = pages.select("url", "warc_ts", "html", "lang")
-    return pruned.mapInPandas(_extract, schema=_OUT_FIELDS)
+    return pruned.mapInArrow(_extract, schema=_OUT_FIELDS)
 
 
 def lang_filter(extracted: DataFrame, langs: tuple[str, ...] = ("en",)) -> DataFrame:

@@ -1,11 +1,18 @@
 """Stage 2 — OpenIE-style triple extraction.
 
-flatMap-shaped ``mapInPandas`` (one input page -> many triple rows)
+flatMap-shaped ``mapInArrow`` (one input page -> many triple rows)
 applying TRIPLE SPEC v1 (clip_retrieval_spark.functions.text).
 The reference has no UDTF; its nearest shape is the batched mapper whose
 output batch length differs from input (dropped rows,
 reference clip_inference/reader.py:187-189) — here we emit MORE rows
 instead of fewer, the Spark-native explode pattern.
+
+Each input ``pa.RecordBatch`` (``spark.sql.execution.arrow.maxRecordsPerBatch``
+rows) yields one output batch built column-wise: only the html/text
+column becomes Python objects; ``url`` and ``warc_ts`` are gathered with
+``take`` on the row index of each triple, and the spans are ``list<int32>``
+arrays over one flat buffer: the batch-amortised UDF shape of CIDR 2022
+"Accelerating Python UDFs in Vectorized Query Execution".
 
 Narrow (no shuffle). Output keyed by (url, sent_id, spans) — fully
 deterministic given the input row, so stage reruns are idempotent.
@@ -15,7 +22,8 @@ from __future__ import annotations
 
 from typing import Iterator
 
-import pandas as pd
+import numpy as np
+import pyarrow as pa
 
 from pyspark.sql import DataFrame
 
@@ -25,41 +33,51 @@ TRIPLES_FIELDS = (
     "url string, warc_ts timestamp, sent_id int, subj string, pred string, "
     "obj string, subj_span array<int>, obj_span array<int>"
 )
+_NAMES = [f.split()[0] for f in TRIPLES_FIELDS.split(", ")]
+
+
+def _spans(starts, ends) -> pa.ListArray:
+    """[[s, e], ...] as list<int32>, from the flat starts and ends."""
+    values = np.empty(2 * len(starts), np.int32)
+    values[0::2] = starts
+    values[1::2] = ends
+    offsets = np.arange(0, len(values) + 1, 2, dtype=np.int32)
+    return pa.ListArray.from_arrays(offsets, values)
 
 
 def _triples(df: DataFrame, col: str, to_text) -> DataFrame:
     """(url, warc_ts, ``col``) -> triples of ``to_text(col)``: the one
     emitter behind both stage-2 operators."""
 
-    def _emit(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            # column-wise accumulation: pandas builds a frame from
-            # per-column lists without the row-tuple transpose
-            urls, tss, sids = [], [], []
-            subjs, preds, objs, sspans, ospans = [], [], [], [], []
-            for url, ts, value in zip(
-                pdf["url"].tolist(), pdf["warc_ts"], pdf[col].tolist()
-            ):
-                for (sid, subj, pred, obj, s1, e1, s2, e2) in extract_triples(
-                    to_text(value)
-                ):
-                    urls.append(url)
-                    tss.append(ts)
-                    sids.append(sid)
-                    subjs.append(subj)
-                    preds.append(pred)
-                    objs.append(obj)
-                    sspans.append([s1, e1])
-                    ospans.append([s2, e2])
-            yield pd.DataFrame(
-                {
-                    "url": urls, "warc_ts": tss, "sent_id": sids,
-                    "subj": subjs, "pred": preds, "obj": objs,
-                    "subj_span": sspans, "obj_span": ospans,
-                }
+    def _emit(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            # only the spec's input becomes Python objects; url and
+            # warc_ts are gathered on the Arrow side by row index
+            idx, rows = [], []
+            for i, value in enumerate(batch.column(col).to_pylist()):
+                found = extract_triples(to_text(value))
+                if found:
+                    idx.extend([i] * len(found))
+                    rows.extend(found)
+            sid, subj, pred, obj, s1, e1, s2, e2 = (
+                zip(*rows) if rows else [()] * 8
+            )
+            take = pa.array(idx, pa.int32())
+            yield pa.RecordBatch.from_arrays(
+                [
+                    batch.column("url").take(take),
+                    batch.column("warc_ts").take(take),
+                    pa.array(sid, pa.int32()),
+                    pa.array(subj, pa.string()),
+                    pa.array(pred, pa.string()),
+                    pa.array(obj, pa.string()),
+                    _spans(s1, e1),
+                    _spans(s2, e2),
+                ],
+                names=_NAMES,
             )
 
-    return df.select("url", "warc_ts", col).mapInPandas(
+    return df.select("url", "warc_ts", col).mapInArrow(
         _emit, schema=TRIPLES_FIELDS
     )
 

@@ -22,6 +22,8 @@ from pyspark.sql import SparkSession
 
 # Arrow batch size: html:binary rows are fat; 2k rows/batch keeps each
 # Arrow batch ~10s of MB for ~10 KB pages while amortizing UDF overhead.
+# It bounds mapInArrow input batches (stages 1+2) exactly as it bounds
+# mapInPandas ones.
 DEFAULT_ARROW_BATCH = 2048
 
 

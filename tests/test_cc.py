@@ -10,6 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from clip_retrieval_spark.fixtures import ENTITY_ALIASES, pages_df
+from clip_retrieval_spark.operators import cc
 from clip_retrieval_spark.operators.cc import connected_components
 from clip_retrieval_spark.operators.embed import entities_df, mentions_df
 from clip_retrieval_spark.operators.extract import extract_pages
@@ -83,6 +84,38 @@ def test_cc_hub_skew(spark):
     got = _run_cc(spark, edges)
     assert all(got[i] == 0 for i in range(1001))
     assert len({got[2000 + i] for i in range(51)}) == 1
+
+
+def test_cc_two_parent_round_is_not_a_fixpoint(spark):
+    """The path 1-3-4-5-2: after one round the edges are 3->1, 3->2,
+    4->1, 5->2 — no dst is a src, but node 3 has two parents, so the
+    loop must go on until 1 and 2 are one component."""
+    edges = [(1, 3), (3, 4), (4, 5), (5, 2)]
+    first = cc._small_star(cc._large_star(
+        spark.createDataFrame(edges, "src long, dst long")))
+    assert sorted(tuple(r) for r in first.collect()) == [
+        (3, 1), (3, 2), (4, 1), (5, 2)]
+    assert not cc._is_star_forest(first)
+    assert _run_cc(spark, edges) == _bfs_components(edges)
+
+
+def test_cc_star_forest_takes_one_round(spark, monkeypatch):
+    rounds = []
+    small_star = cc._small_star
+
+    def counting(edges):
+        rounds.append(1)
+        return small_star(edges)
+
+    monkeypatch.setattr(cc, "_small_star", counting)
+    edges = [(1, i) for i in range(2, 9)] + [(20, 21), (20, 22)]
+    assert _run_cc(spark, edges) == _bfs_components(edges)
+    assert len(rounds) == 1
+    rounds.clear()
+    # a chain is one parent per node, but not yet stars
+    chain = [(i, i + 1) for i in range(1, 12)]
+    assert _run_cc(spark, chain) == _bfs_components(chain)
+    assert len(rounds) > 1
 
 
 def test_cc_empty(spark):

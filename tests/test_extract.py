@@ -3,7 +3,11 @@ edge-case goldens, and Spark-vs-driver determinism."""
 
 from __future__ import annotations
 
-from clip_retrieval_spark.fixtures import gen_pages_local, pages_df
+import datetime as _dt
+
+from pyspark.sql import functions as F
+
+from clip_retrieval_spark.fixtures import PAGES_SCHEMA, gen_pages_local, pages_df
 from clip_retrieval_spark.functions.text import extract_text
 from clip_retrieval_spark.operators.extract import extract_pages, lang_filter
 
@@ -73,3 +77,34 @@ def test_lang_filter(spark):
     langs = {r["lang"] for r in lang_filter(ex, ("fr", "de", "es")).select("lang").distinct().collect()}
     assert en > 0 and "en" not in langs
     assert en + lang_filter(ex, ("fr", "de", "es")).count() == N
+
+
+def test_null_html_gives_empty_text(spark):
+    """The corrupt-row contract: a null html row is kept with text "",
+    next to good rows in the same Arrow batch; url, warc_ts and lang
+    pass through unchanged."""
+    ts = _dt.datetime(2024, 5, 1, 12, 30, 1, 123456, tzinfo=_dt.timezone.utc)
+    pages = spark.createDataFrame(
+        [
+            ("u-null", ts, None, None, "en"),
+            ("u-good", ts, b"<p>a <b>b</b></p>", None, "fr"),
+            ("u-empty", ts, b"", None, "de"),
+        ],
+        PAGES_SCHEMA,
+    ).coalesce(1)
+    ex = extract_pages(pages)
+    assert ex.schema.simpleString() == (
+        "struct<url:string,warc_ts:timestamp,text:string,lang:string>"
+    )
+    got = {
+        r["url"]: (r["us"], r["text"], r["lang"])
+        for r in ex.select(
+            "url", F.unix_micros("warc_ts").alias("us"), "text", "lang"
+        ).collect()
+    }
+    us = int(ts.timestamp()) * 10**6 + ts.microsecond
+    assert got == {
+        "u-null": (us, "", "en"),
+        "u-good": (us, "a b", "fr"),
+        "u-empty": (us, "", "de"),
+    }

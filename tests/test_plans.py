@@ -56,7 +56,7 @@ def test_part_string_filter_pushdown(spark):
 
 
 def test_extraction_stage_is_narrow(spark):
-    """Stages 1+2 must plan with ZERO exchanges (pure mapInPandas over
+    """Stages 1+2 must plan with ZERO exchanges (pure mapInArrow over
     the scan) — a shuffle here would be a 100TB-scale disaster."""
     from clip_retrieval_spark.fixtures import pages_df
     from clip_retrieval_spark.operators.extract import extract_pages
