@@ -1,7 +1,11 @@
 .PHONY: test dist bench scaling clean
 
+# the Tier-1 gate (ROADMAP.md), as one command
 test:
-	python -m pytest -x -q tests/
+	SPARK_GRAFT_CPUS="$$(env -u OMP_NUM_THREADS nproc)" \
+	SPARK_LOCAL_DIRS=/tmp/spark-local \
+	timeout -k 10 2670 python -m pytest tests/ -q \
+		--continue-on-collection-errors -p no:cacheprovider
 
 # package for spark-submit --py-files
 dist:

@@ -16,6 +16,20 @@ Everything is pyspark.sql DataFrames; per-row heavy work is Arrow-batched
 ``mapInArrow``/``mapInPandas`` (model/extractor loaded once per Python
 worker — the clip-retrieval inference pattern, reference
 clip_inference/mapper.py:16-78).
+
+Importing the package inside a Spark Python worker (which happens when
+the worker unpickles one of its UDFs) installs
+``session._reuse_zip_directories``, so later tasks on that reused worker
+stop re-reading Spark's jar and ``pyspark.zip`` on the import path. A
+process that has not imported pyspark (a driver using only
+``functions.text``) imports nothing more; a driver is never patched.
 """
 
+import sys
+
 __version__ = "0.1.0"
+
+if "pyspark" in sys.modules:
+    from clip_retrieval_spark.session import _reuse_zip_directories
+
+    _reuse_zip_directories()

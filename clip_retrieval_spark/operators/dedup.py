@@ -187,7 +187,7 @@ def semantic_dedup(
     Determinism contract: every dot product — the norm and the pairwise
     gram — produces exactly the value of a DIMENSION-ORDER fold,
     bit-identical to DuckDB's list_dot_product and to the JVM
-    F.aggregate fold in operators.kmeans._dot, so ROUND(cos, round_to)
+    F.aggregate fold of functions.vectors.dot, so ROUND(cos, round_to)
     agrees across engines. The gram fast path reorders the summation
     for speed but recomputes the exact fold inside a 1e-9 guard band
     around every rounding boundary (see _gram_rounded: the reordering

@@ -27,12 +27,13 @@ that serves `ivf_topk` can also build its centroids at corpus scale:
 Cross-engine determinism contract (the DuckDB-oracle rules from
 entry_queries): distances are ROUND(dot(c,c) - 2*dot(x,c), 6) — the
 ||x||^2 term is constant per row and omitted on BOTH engines; dots are
-left-to-right folds (bit-identical to DuckDB list_dot_product,
-established empirically by the ANN suite); ||c||^2 is the same left
-fold computed driver-side (Python floats are IEEE binary64 with
-identical scalar semantics). Per-dim means are rounded to 6 IN SPARK
-(F.round = HALF_UP; Python round() is banker's and is never used)
-before the next round so float-association order can't compound.
+functions.vectors.dot's left-to-right folds (bit-identical to DuckDB
+list_dot_product, established empirically by the ANN suite); ||c||^2
+is the same left fold computed driver-side (Python floats are IEEE
+binary64 with identical scalar semantics). Per-dim means are rounded
+to 6 IN SPARK (F.round = HALF_UP; Python round() is banker's and is
+never used) before the next round so float-association order can't
+compound.
 
 Empty cells simply drop out of the next round's codebook (groupBy
 semantics — identical in SQL); with data-seeded centroids each seed
@@ -41,24 +42,17 @@ cell contains at least its seed point in round 1.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def _dot(a, b) -> Column:
-    """Left-to-right double fold — DuckDB list_dot_product twin."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+from clip_retrieval_spark.functions.vectors import dot
 
 
 def _collect_codebook(
     centroids: DataFrame, cell_id: str, cent_emb: str
 ) -> list[tuple[int, list[float], float]]:
     """(cell, cvec, ||cvec||^2) sorted by cell — ||cvec||^2 is the same
-    left-to-right IEEE fold the in-plan _dot would produce."""
+    left-to-right IEEE fold the in-plan dot would produce."""
     out = []
     for r in centroids.select(cell_id, cent_emb).collect():
         cv = [float(x) for x in r[cent_emb]]
@@ -105,7 +99,7 @@ def _with_cell(
         cents,
         lambda ct: F.struct(
             F.round(
-                ct["cc"] - 2 * _dot(vec, ct["cvec"]), round_to
+                ct["cc"] - 2 * dot(vec, ct["cvec"]), round_to
             ).alias("d"),
             ct["cell"].alias("cell"),
         ),

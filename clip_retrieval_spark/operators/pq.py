@@ -39,15 +39,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from clip_retrieval_spark.functions.vectors import dot
 from clip_retrieval_spark.operators.kmeans import kmeans_fit
-
-
-def _dot(a, b) -> Column:
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
 
 
 def _sub(vec, s: Column | int, d_sub: int) -> Column:
@@ -102,7 +95,7 @@ def _codebook_row(codebooks: DataFrame) -> Column:
                 F.struct(
                     F.col("cell_id").cast("int").alias("cell"),
                     F.col("centroid").alias("cvec"),
-                    _dot(F.col("centroid"), F.col("centroid")).alias("cc"),
+                    dot(F.col("centroid"), F.col("centroid")).alias("cc"),
                 )
             )
         ).alias("cells")
@@ -151,7 +144,7 @@ def pq_encode(
             cells,
             lambda ct, i: F.struct(
                 F.round(
-                    ct["cc"] - 2 * _dot(xs, ct["cvec"]), round_to
+                    ct["cc"] - 2 * dot(xs, ct["cvec"]), round_to
                 ).alias("d"),
                 i.cast("int").alias("cell"),
             ),
@@ -204,7 +197,7 @@ def pq_adc_topk(
         lambda s: F.transform(
             F.element_at(F.col("_cb"), s + 1),
             lambda ct: F.round(
-                _dot(_sub(F.col(q_emb), s, d_sub), ct["cvec"]), round_to
+                dot(_sub(F.col(q_emb), s, d_sub), ct["cvec"]), round_to
             ),
         ),
     )
@@ -268,7 +261,7 @@ def pq_rerank_topk(
     exact = (
         short.join(corpus.select(c_id, c_emb), c_id)
         .join(F.broadcast(qv), q_id)
-        .withColumn("score", F.round(_dot(F.col(q_emb), F.col(c_emb)), round_to))
+        .withColumn("score", F.round(dot(F.col(q_emb), F.col(c_emb)), round_to))
     )
     w = Window.partitionBy(q_id).orderBy(F.desc("score"), F.asc(c_id))
     return (

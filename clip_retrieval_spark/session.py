@@ -12,12 +12,20 @@ parameters for local testing:
   write_batch_size=1e6 split, reference clip_inference/main.py:74,79).
 * Session timezone pinned to UTC so timestamp semantics are deterministic
   across engines (oracle comparisons) and clusters.
+
+The worker side of these Python settings lives here too: reused
+workers (``spark.python.worker.reuse``) keep the zip directories of
+their import path across tasks (``_reuse_zip_directories``, installed
+by the package ``__init__`` inside a Spark Python worker).
 """
 
 from __future__ import annotations
 
 import os
+import sys
+import zipimport
 
+from pyspark import TaskContext
 from pyspark.sql import SparkSession
 
 # Arrow batch size: html:binary rows are fat; 2k rows/batch keeps each
@@ -78,8 +86,10 @@ def get_spark(
         "spark.sql.execution.arrow.pyspark.enabled": "true",
         "spark.sql.execution.arrow.maxRecordsPerBatch": str(arrow_batch),
         "spark.sql.session.timeZone": "UTC",
-        # reuse Python workers so mapInPandas init-once closures stay warm
-        # (the reference loads the model once per worker, mapper.py:16-48)
+        # reuse Python workers so what a worker imports and builds once
+        # (mapInArrow/mapInPandas closures, the zip directories kept by
+        # _reuse_zip_directories) stays warm across tasks (the reference
+        # loads the model once per worker, mapper.py:16-48)
         "spark.python.worker.reuse": "true",
         "spark.sql.shuffle.partitions": str(shuffle_partitions or 32),
         # generous task retries for long jobs (reference docs recommend
@@ -92,3 +102,56 @@ def get_spark(
     for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def _reuse_zip_directories() -> None:
+    """Backport CPython 3.13's lazy ``zipimporter.invalidate_caches``
+    into a Spark Python worker on Python < 3.13.
+
+    PySpark's worker calls ``importlib.invalidate_caches()`` at the start
+    of every task (``worker_util.setup_spark_files``). Before 3.13 that
+    makes every ``zipimporter`` re-read its archive's whole directory, and
+    a worker's path always holds Spark's core jar (5,359 entries) and
+    ``pyspark.zip`` (1,328): about 0.1 s per task before its first row.
+    3.13 only drops the cached directory, to be re-read on next use. Here
+    an archive is re-read only when its ``(st_mtime_ns, st_size)`` differs
+    from the one it was read at, so a zip replaced by ``addPyFile`` or
+    ``--py-files`` is still re-read. Directories on the path at install
+    were read by this task's ``setup_spark_files`` moments before.
+
+    No-op on the driver (no task context), on Python >= 3.13 and when
+    already installed.
+    """
+    zi = zipimport.zipimporter
+    if (
+        sys.version_info >= (3, 13)
+        or TaskContext.get() is None
+        or zi.invalidate_caches.__module__ == __name__
+    ):
+        return
+    reread, cache = zi.invalidate_caches, zipimport._zip_directory_cache
+
+    def stat_key(path):
+        try:
+            st = os.stat(path)
+        except OSError:
+            return None
+        return st.st_mtime_ns, st.st_size
+
+    # archive -> (stat key, directory read at that key)
+    read = {
+        imp.archive: (stat_key(imp.archive), imp._files)
+        for imp in list(sys.path_importer_cache.values())
+        if isinstance(imp, zi) and imp.archive in cache
+    }
+
+    def invalidate_caches(self):
+        key, hit = stat_key(self.archive), read.get(self.archive)
+        if hit is not None and key is not None and hit[0] == key:
+            self._files = cache[self.archive] = hit[1]
+            return
+        reread(self)
+        if self.archive in cache:
+            read[self.archive] = (key, self._files)
+
+    zi.invalidate_caches = invalidate_caches
