@@ -43,7 +43,9 @@ def main() -> None:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM '{args.sf_dir}/{t}.parquet'"
         )
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get(
+        "SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0)))
+    )
     spark = get_spark(master=f"local[{cpus}]", app_name="oracle_check",
                       shuffle_partitions=int(cpus))
     spark.sparkContext.setLogLevel("ERROR")

@@ -33,7 +33,9 @@ def _noop(df):
 def main() -> None:
     sf = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     runs = int(sys.argv[2]) if len(sys.argv) > 2 else 3
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get(
+        "SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0)))
+    )
     spark = get_spark(master=f"local[{cpus}]", app_name="profile_lpa",
                       shuffle_partitions=int(cpus))
     spark.sparkContext.setLogLevel("ERROR")

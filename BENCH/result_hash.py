@@ -55,7 +55,9 @@ def main() -> None:
 
     from clip_retrieval_spark.session import get_spark
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get(
+        "SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0)))
+    )
     spark = get_spark(master=f"local[{cpus}]", app_name="result_hash",
                       shuffle_partitions=int(cpus))
     spark.sparkContext.setLogLevel("ERROR")

@@ -58,7 +58,9 @@ def main() -> None:
     ap.add_argument("--hash", action="store_true")
     args = ap.parse_args()
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get(
+        "SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0)))
+    )
     spark = get_spark(
         master=f"local[{cpus}]", app_name="bench_extra",
         shuffle_partitions=int(cpus),

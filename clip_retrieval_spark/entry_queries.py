@@ -20,6 +20,8 @@ from typing import Callable, Optional
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from clip_retrieval_spark.functions.vectors import dot
+
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
@@ -501,11 +503,25 @@ FROM documents GROUP BY 1 ORDER BY keeper
 """
 
 
+def _toks(col: str | F.Column = "text") -> F.Column:
+    """Non-empty space-split tokens of one document, in order, as a
+    NARROW array expression (split -> filter, no shuffle)."""
+    return F.filter(F.split(col, " "), lambda x: x != "")
+
+
 def _tok_arr(col: str = "text") -> F.Column:
-    """Distinct non-empty tokens of one document as a NARROW array
-    expression (split -> filter -> array_distinct, no shuffle)."""
-    return F.array_distinct(
-        F.filter(F.split(col, " "), lambda t: t != "")
+    """Distinct non-empty tokens of one document (``_toks`` ->
+    array_distinct)."""
+    return F.array_distinct(_toks(col))
+
+
+def _bigram_arr() -> F.Column:
+    """array<struct<w1, w2>> of the adjacent token pairs of the token
+    array column ``t`` — an in-row slice zip (callers keep size >= 2)."""
+    return F.zip_with(
+        F.slice("t", F.lit(1), F.size("t") - 1),
+        F.slice("t", F.lit(2), F.size("t") - 1),
+        lambda a, b: F.struct(a.alias("w1"), b.alias("w2")),
     )
 
 
@@ -530,6 +546,14 @@ def _doc_tokens_src(spark: SparkSession, sf: str) -> DataFrame:
     return _t_spread(spark, sf, "documents", "doc_id").select(
         "doc_id", "source", F.explode(_tok_arr()).alias("tok")
     )
+
+
+def _tok_stream(docs: DataFrame, *keys: str) -> DataFrame:
+    """(*keys, tok): every non-empty token occurrence of ``docs.text``,
+    duplicates kept."""
+    return docs.select(
+        *keys, F.explode(F.split("text", " ")).alias("tok")
+    ).filter(F.col("tok") != "")
 
 
 _DOC_TOKENS_SQL = """
@@ -705,27 +729,25 @@ FROM votes GROUP BY doc_id ORDER BY doc_id
 _JACCARD_DF_CAP = 256
 
 
-def dedup_jaccard_pairs(spark: SparkSession, sf: str) -> DataFrame:
-    """n-gram (token-set) Jaccard similarity join, blocked by ``source``
-    AND by a token-document-frequency cap: |A∩B| via token equi-join,
-    sizes via per-doc counts (J6 exact path).
+def _capped_overlap(spark: SparkSession, sf: str) -> DataFrame:
+    """(b, a, c, sza, szb): every same-source doc pair a < b with c > 0
+    shared tokens, where sza/szb are the two token-set sizes — the
+    token-set overlap both similarity joins score (J6 exact path).
 
     The df cap is the scale bound: a token appearing in d docs of one
     source is a hub join key contributing O(d^2) candidate rows, so
-    tokens with per-source df > 256 are excluded from the token-set
-    similarity as non-discriminative (standard similarity-join
-    prefiltering). Sizes are computed AFTER the cap and the oracle
-    applies the identical cap, so the engines agree exactly at every
-    scale while worst-case per-token fanout is a constant.
+    tokens with per-source df > _JACCARD_DF_CAP are excluded as
+    non-discriminative (standard similarity-join prefiltering). Sizes
+    are computed AFTER the cap and the oracles apply the identical cap,
+    so the engines agree exactly at every scale while worst-case
+    per-token fanout is a constant.
 
     r6 shape: source rides the narrow tokenization directly (doc_id is
     the documents PK — the previous _doc_tokens JOIN documents shuffled
     every token twice), and the df cap is a window count over ONE
     (source, tok) exchange — the same shape as the oracle SQL — which
     the intersection self-join then reuses."""
-    all_toks = _t_spread(spark, sf, "documents", "doc_id").select(
-        "doc_id", "source", F.explode(_tok_arr()).alias("tok")
-    )
+    all_toks = _doc_tokens_src(spark, sf)
     wdf = Window.partitionBy("source", "tok")
     toks = (
         all_toks.withColumn("_df", F.count("*").over(wdf))
@@ -747,9 +769,14 @@ def dedup_jaccard_pairs(spark: SparkSession, sf: str) -> DataFrame:
     )
     sa = sizes.select(F.col("doc_id").alias("a"), F.col("sz").alias("sza"))
     sb = sizes.select(F.col("doc_id").alias("b"), F.col("sz").alias("szb"))
+    return inter.join(sa, "a").join(sb, "b")
+
+
+def dedup_jaccard_pairs(spark: SparkSession, sf: str) -> DataFrame:
+    """n-gram (token-set) Jaccard similarity join, blocked by ``source``
+    AND by a token-document-frequency cap (``_capped_overlap``)."""
     return (
-        inter.join(sa, "a")
-        .join(sb, "b")
+        _capped_overlap(spark, sf)
         .withColumn(
             "jaccard",
             F.round(
@@ -759,6 +786,16 @@ def dedup_jaccard_pairs(spark: SparkSession, sf: str) -> DataFrame:
         .filter(F.col("jaccard") >= 0.5)
         .select("a", "b", "jaccard")
         .orderBy("a", "b")
+    )
+
+
+def _near_dup_edges(spark: SparkSession, sf: str) -> DataFrame:
+    """(src, dst) edges of the near-dup similarity graph: the
+    dedup_jaccard_pairs pairs at Jaccard >= 0.8, src < dst."""
+    return (
+        dedup_jaccard_pairs(spark, sf)
+        .filter(F.col("jaccard") >= 0.8)
+        .select(F.col("a").alias("src"), F.col("b").alias("dst"))
     )
 
 
@@ -809,9 +846,7 @@ def lang_id_stopwords(spark: SparkSession, sf: str) -> DataFrame:
     docs = _t(spark, sf, "documents").select(
         "doc_id", "text"
     )
-    toks = docs.select(
-        "doc_id", F.explode(F.split("text", " ")).alias("tok")
-    ).filter(F.col("tok") != "")
+    toks = _tok_stream(docs, "doc_id")
     sw = spark.createDataFrame(
         [(lang, w) for lang, ws in _STOPWORDS.items() for w in ws],
         "lang string, tok string",
@@ -873,7 +908,7 @@ def quality_scores(spark: SparkSession, sf: str) -> DataFrame:
     composite score — pure JVM-side arithmetic."""
     en = _STOPWORDS["en"]
     docs = _t_spread(spark, sf, "documents", "doc_id")
-    toks = F.filter(F.split("text", " "), lambda t: t != F.lit(""))
+    toks = _toks()
     sw_arr = F.array(*[F.lit(w) for w in en])
     n_tok = F.size(toks)
     n_sw = F.size(F.filter(toks, lambda t: F.array_contains(sw_arr, t)))
@@ -920,11 +955,7 @@ FROM t ORDER BY doc_id
 
 def token_stats(spark: SparkSession, sf: str) -> DataFrame:
     """Corpus-level token statistics (one-row aggregate)."""
-    toks = (
-        _t_spread(spark, sf, "documents", "doc_id")
-        .select(F.explode(F.split("text", " ")).alias("tok"))
-        .filter(F.col("tok") != "")
-    )
+    toks = _tok_stream(_t_spread(spark, sf, "documents", "doc_id"))
     return toks.agg(
         F.count("*").alias("total_tokens"),
         F.countDistinct("tok").alias("distinct_tokens"),
@@ -1037,17 +1068,7 @@ def ann_topk_bruteforce(spark: SparkSession, sf: str) -> DataFrame:
         .filter(F.col("qid") != F.col("cid"))
         .withColumn(
             "score",
-            F.round(
-                F.aggregate(
-                    F.zip_with(
-                        "q_emb", "c_emb",
-                        lambda x, y: x.cast("double") * y.cast("double"),
-                    ),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x,
-                ),
-                6,
-            ),
+            F.round(dot("q_emb", "c_emb"), 6),
         )
     )
     w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("cid"))
@@ -1195,7 +1216,7 @@ def aesthetic_rerank(spark: SparkSession, sf: str) -> DataFrame:
     cosine. The oracle computes the same score through the algebraic
     identity dot(unit(q+w*a), c) = (dot(q,c)+w*dot(a,c)) / ||q+w*a||
     using list_dot_product only — verified to agree at round-6."""
-    from clip_retrieval_spark.functions.vectors import blend, dot
+    from clip_retrieval_spark.functions.vectors import blend
 
     emb = _t(spark, sf, "embeddings")
     aest = emb.filter(F.col("vec_id") == 0).select(
@@ -1701,26 +1722,15 @@ def kg_nodes_edges(spark: SparkSession, sf: str) -> DataFrame:
         canonical_map,
         entity_merge_edges,
         materialize_edges,
+        surface_edges,
     )
 
     tr, _, e = _kg_stage_tables(spark, sf)
     surface_links = surface_link_topk(e, k=1)
     nodes = canonical_map(e, entity_merge_edges(e, threshold=0.95))
     edges = materialize_edges(tr, surface_links, nodes)
-    rep = nodes.groupBy("canonical_id").agg(
-        F.min("surface").alias("_rep_surface")
-    )
-    subj_rep = rep.select(
-        F.col("canonical_id").alias("canonical_subj"),
-        F.col("_rep_surface").alias("subj_surface"),
-    )
-    obj_rep = rep.select(
-        F.col("canonical_id").alias("canonical_obj"),
-        F.col("_rep_surface").alias("obj_surface"),
-    )
     return (
-        edges.join(F.broadcast(subj_rep), "canonical_subj")
-        .join(F.broadcast(obj_rep), "canonical_obj")
+        surface_edges(edges, nodes)
         .select("subj_surface", "pred", "obj_surface", "url")
         .orderBy("url", "subj_surface", "obj_surface")
     )
@@ -2238,9 +2248,7 @@ def bm25_topterms(spark: SparkSession, sf: str) -> DataFrame:
     map-side-combinable aggregations; the df join is a vocabulary-sized
     shuffle, never a corpus-sized one."""
     docs = _t_spread(spark, sf, "documents", "doc_id").select("doc_id", "text")
-    toks = docs.select(
-        "doc_id", F.explode(F.split("text", " ")).alias("tok")
-    ).filter(F.col("tok") != "")
+    toks = _tok_stream(docs, "doc_id")
     tf = toks.groupBy("doc_id", "tok").agg(F.count("*").alias("tf"))
     dl = tf.groupBy("doc_id").agg(F.sum("tf").alias("dl"))
     scalars = dl.agg(
@@ -2318,11 +2326,7 @@ def doc_triangle_counts(spark: SparkSession, sf: str) -> DataFrame:
     no algorithm avoids enumerating Theta(m^3) triangles per clique."""
     from clip_retrieval_spark.operators.graph import triangle_count
 
-    edges = (
-        dedup_jaccard_pairs(spark, sf)
-        .filter(F.col("jaccard") >= 0.8)
-        .select(F.col("a").alias("src"), F.col("b").alias("dst"))
-    )
+    edges = _near_dup_edges(spark, sf)
     return (
         triangle_count(edges)
         .select("node", F.col("n_triangles").cast("long"))
@@ -2365,11 +2369,7 @@ def quality_repetition(spark: SparkSession, sf: str) -> DataFrame:
     bigrams built by an in-row slice zip (no extra pass over the
     corpus)."""
     docs = _t_spread(spark, sf, "documents", "doc_id").select("doc_id", "text")
-    arr = F.filter(F.split("text", " "), lambda x: x != "")
-    base = docs.select(
-        "doc_id",
-        arr.alias("tk"),
-    ).select(
+    base = docs.select("doc_id", _toks().alias("tk")).select(
         "doc_id",
         "tk",
         F.size("tk").alias("w"),
@@ -2467,7 +2467,7 @@ def contamination_ngrams(spark: SparkSession, sf: str) -> DataFrame:
     fixed-width keys, and the benchmark side is the broadcast side at
     scale (the eval set is always tiny next to the corpus)."""
     docs = _t_spread(spark, sf, "documents", "doc_id").select("doc_id", "text")
-    arr = F.filter(F.split("text", " "), lambda x: x != "")
+    arr = _toks()
     grams = docs.select(
         "doc_id",
         F.explode(
@@ -2656,6 +2656,29 @@ FROM canon GROUP BY canonical_url ORDER BY canonical_url
 _CHUNK_W = 8  # tokens per non-overlapping chunk
 
 
+def _chunk_idx(toks: F.Column) -> tuple[F.Column, F.Column]:
+    """(n_chunks, idx) of a token array: how many whole _CHUNK_W-token
+    chunks it holds and their 1-based indices. Guard: sequence(1, 0) is
+    the DESCENDING [1, 0] in Spark, which would emit two phantom chunks
+    for sub-8-token docs where the oracles' range(1, 1) emits none."""
+    n_chunks = F.floor(F.size(toks) / _CHUNK_W).cast("int")
+    idx = F.when(
+        n_chunks >= 1, F.sequence(F.lit(1), n_chunks)
+    ).otherwise(F.array().cast("array<int>"))
+    return n_chunks, idx
+
+
+def _chunk_arr(idx: F.Column, toks: F.Column) -> F.Column:
+    """The chunks ``idx`` (from ``_chunk_idx``) of a token array, each
+    its _CHUNK_W tokens joined by single spaces."""
+    return F.transform(
+        idx,
+        lambda i: F.concat_ws(
+            " ", F.slice(toks, (i - 1) * _CHUNK_W + 1, _CHUNK_W)
+        ),
+    )
+
+
 def chunk_dedup_ratio(spark: SparkSession, sf: str) -> DataFrame:
     """Exact substring-level dedup at chunk granularity (the
     Lee et al. 2022 'Deduplicating Training Data' exact-substring
@@ -2676,24 +2699,10 @@ def chunk_dedup_ratio(spark: SparkSession, sf: str) -> DataFrame:
     docs = _t_spread(spark, sf, "documents", "doc_id").select(
         "doc_id", "text"
     )
-    toks = F.filter(F.split("text", " "), lambda x: x != "")
-    n_chunks = F.floor(F.size(toks) / _CHUNK_W).cast("int")
-    # guard: sequence(1, 0) is the DESCENDING [1, 0] in Spark, which
-    # would emit two phantom chunks for sub-8-token docs where the
-    # oracle's range(1, 1) emits none
-    idx = F.when(
-        n_chunks >= 1, F.sequence(F.lit(1), n_chunks)
-    ).otherwise(F.array().cast("array<int>"))
+    toks = _toks()
+    _, idx = _chunk_idx(toks)
     chunks = docs.select(
-        "doc_id",
-        F.explode(
-            F.transform(
-                idx,
-                lambda i: F.concat_ws(
-                    " ", F.slice(toks, (i - 1) * _CHUNK_W + 1, _CHUNK_W)
-                ),
-            )
-        ).alias("chunk"),
+        "doc_id", F.explode(_chunk_arr(idx, toks)).alias("chunk")
     ).select("doc_id", F.unhex(F.md5("chunk")).alias("h"))
     # (h, doc_id, instance count): one map-side-combinable reduction;
     # a chunk hash is duplicated iff >= 2 rows (= distinct docs) share
@@ -2760,11 +2769,7 @@ def doc_communities_lpa(spark: SparkSession, sf: str) -> DataFrame:
     replays by unrolling the 3 rounds in SQL."""
     from clip_retrieval_spark.operators.graph import label_propagation_min
 
-    edges = (
-        dedup_jaccard_pairs(spark, sf)
-        .filter(F.col("jaccard") >= 0.8)
-        .select(F.col("a").alias("src"), F.col("b").alias("dst"))
-    )
+    edges = _near_dup_edges(spark, sf)
     return (
         label_propagation_min(edges, rounds=3)
         .select(F.col("node").alias("doc_id"), "community")
@@ -2930,21 +2935,12 @@ def lm_perplexity(spark: SparkSession, sf: str) -> DataFrame:
     docs = _t_spread(spark, sf, "documents", "doc_id").select(
         "doc_id", "text"
     )
-    toks = F.filter(F.split(F.lower("text"), " "), lambda x: x != "")
-    tk = docs.select("doc_id", toks.alias("t"))
+    tk = docs.select("doc_id", _toks(F.lower("text")).alias("t"))
     occ = (
         tk.filter(F.size("t") >= 2)
         .select(
             "doc_id",
-            F.explode(
-                F.zip_with(
-                    F.slice("t", F.lit(1), F.size("t") - 1),
-                    F.slice("t", F.lit(2), F.size("t") - 1),
-                    lambda a, b: F.struct(
-                        a.alias("w1"), b.alias("w2")
-                    ),
-                )
-            ).alias("bg"),
+            F.explode(_bigram_arr()).alias("bg"),
         )
         .select("doc_id", "bg.w1", "bg.w2")
     )
@@ -3024,19 +3020,15 @@ def link_prediction_topk(spark: SparkSession, sf: str) -> DataFrame:
     neighbors x — hub-bounded; production callers cap or orient hubs
     exactly as operators.graph.triangle_counts does. Aggregations are
     algebraic; the final top-k is a single total-order sort."""
-    pairs = (
-        dedup_jaccard_pairs(spark, sf)
-        .filter(F.col("jaccard") >= 0.8)
-        .select("a", "b")
-    )
+    pairs = _near_dup_edges(spark, sf)
     und = pairs.union(
-        pairs.select(F.col("b").alias("a"), F.col("a").alias("b"))
+        pairs.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
-    deg = und.groupBy("a").agg(
+    deg = und.groupBy("src").agg(
         F.count("*").cast("double").alias("deg")
-    ).withColumnRenamed("a", "n")
-    e1 = und.select(F.col("b").alias("x"), F.col("a").alias("u"))
-    e2 = und.select(F.col("b").alias("x"), F.col("a").alias("v"))
+    ).withColumnRenamed("src", "n")
+    e1 = und.select(F.col("dst").alias("x"), F.col("src").alias("u"))
+    e2 = und.select(F.col("dst").alias("x"), F.col("src").alias("v"))
     common = (
         e1.join(e2, "x")
         .filter(F.col("u") < F.col("v"))
@@ -3045,7 +3037,7 @@ def link_prediction_topk(spark: SparkSession, sf: str) -> DataFrame:
     )
     cand = common.join(
         pairs,
-        (common["u"] == pairs["a"]) & (common["v"] == pairs["b"]),
+        (common["u"] == pairs["src"]) & (common["v"] == pairs["dst"]),
         "left_anti",
     )
     du = deg.withColumnRenamed("deg", "deg_u")
@@ -3225,11 +3217,7 @@ def doc_kcore_members(spark: SparkSession, sf: str) -> DataFrame:
     in SQL."""
     from clip_retrieval_spark.operators.graph import kcore_prune
 
-    edges = (
-        dedup_jaccard_pairs(spark, sf)
-        .filter(F.col("jaccard") >= 0.8)
-        .select(F.col("a").alias("src"), F.col("b").alias("dst"))
-    )
+    edges = _near_dup_edges(spark, sf)
     return (
         kcore_prune(edges, k=2, rounds=3)
         .select(F.col("node").alias("doc_id"), "deg")
@@ -3276,10 +3264,9 @@ def incremental_dedup_batches(spark: SparkSession, sf: str) -> DataFrame:
     produce)."""
     from clip_retrieval_spark.operators.dedup import incremental_dedup
 
-    toks = F.filter(F.split("text", " "), lambda x: x != "")
     docs = _t(spark, sf, "documents").select(
         "doc_id",
-        F.concat_ws(" ", F.slice(toks, 1, 8)).alias("k8"),
+        F.concat_ws(" ", F.slice(_toks(), 1, 8)).alias("k8"),
     )
     b1 = docs.filter(F.col("doc_id") % 2 == 0)
     b2 = docs.filter(F.col("doc_id") % 2 == 1)
@@ -3429,12 +3416,8 @@ def topk_tokens_by_source(spark: SparkSession, sf: str) -> DataFrame:
     sketch — mergeable, bounded memory — exactness is a small-group
     property, not the contract. Ties break lexicographically so both
     engines emit identical rank sets."""
-    toks = (
-        _t_spread(spark, sf, "documents", "doc_id")
-        .select(
-            "source", F.explode(F.split("text", " ")).alias("tok")
-        )
-        .filter(F.col("tok") != "")
+    toks = _tok_stream(
+        _t_spread(spark, sf, "documents", "doc_id"), "source"
     )
     counts = toks.groupBy("source", "tok").agg(
         F.count("*").alias("cnt")
@@ -3493,9 +3476,7 @@ def topk_tokens_sketch(spark: SparkSession, sf: str) -> DataFrame:
     )
 
     counts = (
-        _t(spark, sf, "documents")
-        .select(F.explode(F.split("text", " ")).alias("tok"))
-        .filter(F.col("tok") != "")
+        _tok_stream(_t(spark, sf, "documents"))
         .groupBy("tok")
         .agg(F.count("*").alias("cnt"))
     )
@@ -3990,35 +3971,9 @@ def dedup_containment_pairs(spark: SparkSession, sf: str) -> DataFrame:
     whole-embedding distance, clip_back.py:257-268; sub-document
     containment is the text-native generalization).
 
-    Scale shape: identical to the Jaccard join — per-source token
-    equi-join with per-token df capped at 256, so worst-case fanout
-    per token is a constant; sizes computed after the cap so both
-    engines agree exactly."""
-    all_toks = _doc_tokens_src(spark, sf)
-    wdf = Window.partitionBy("source", "tok")
-    toks = (
-        all_toks.withColumn("_df", F.count("*").over(wdf))
-        .filter(F.col("_df") <= _JACCARD_DF_CAP)
-        .drop("_df")
-    )
-    sizes = toks.groupBy("doc_id").agg(F.count("*").alias("sz"))
-    a = toks.select(
-        F.col("source"), F.col("doc_id").alias("a"), F.col("tok")
-    )
-    b = toks.select(
-        F.col("source"), F.col("doc_id").alias("b"), F.col("tok")
-    )
-    inter = (
-        a.join(b, ["source", "tok"])
-        .filter(F.col("a") < F.col("b"))
-        .groupBy("a", "b")
-        .agg(F.count("*").alias("c"))
-    )
-    sa = sizes.select(F.col("doc_id").alias("a"), F.col("sz").alias("sza"))
-    sb = sizes.select(F.col("doc_id").alias("b"), F.col("sz").alias("szb"))
+    Scale shape: the Jaccard join's (``_capped_overlap``)."""
     return (
-        inter.join(sa, "a")
-        .join(sb, "b")
+        _capped_overlap(spark, sf)
         .withColumn(
             "containment",
             F.round(F.col("c") / F.least("sza", "szb"), 4),
@@ -4164,25 +4119,17 @@ def chunk_strip_docs(spark: SparkSession, sf: str) -> DataFrame:
     order-deterministic under any partitioning; per-doc state is
     bounded by document length, never by corpus size."""
     docs = _t_spread(spark, sf, "documents", "doc_id").select("doc_id", "text")
-    toks = F.filter(F.split("text", " "), lambda x: x != "")
-    n_chunks = F.floor(F.size(toks) / _CHUNK_W).cast("int")
-    idx = F.when(
-        n_chunks >= 1, F.sequence(F.lit(1), n_chunks)
-    ).otherwise(F.array().cast("array<int>"))
+    toks = _toks()
+    n_chunks, idx = _chunk_idx(toks)
     base = docs.select(
         "doc_id", n_chunks.cast("long").alias("n_chunks"), idx.alias("idx"),
         toks.alias("t"),
     )
     chunks = base.select(
         "doc_id",
-        F.posexplode(
-            F.transform(
-                F.col("idx"),
-                lambda i: F.concat_ws(
-                    " ", F.slice("t", (i - 1) * _CHUNK_W + 1, _CHUNK_W)
-                ),
-            )
-        ).alias("pos", "chunk"),
+        F.posexplode(_chunk_arr(F.col("idx"), F.col("t"))).alias(
+            "pos", "chunk"
+        ),
     ).withColumn("h", F.md5("chunk"))
     dup = (
         chunks.groupBy("h")
@@ -4271,9 +4218,7 @@ def token_entropy_by_source(spark: SparkSession, sf: str) -> DataFrame:
     (source); hub tokens fold map-side before the shuffle, so head-token
     skew never concentrates rows."""
     docs = _t(spark, sf, "documents").select("source", "text")
-    toks = docs.select(
-        "source", F.explode(F.split("text", " ")).alias("tok")
-    ).filter(F.col("tok") != "")
+    toks = _tok_stream(docs, "source")
     cnt = toks.groupBy("source", "tok").agg(
         F.count("*").cast("double").alias("c")
     )
@@ -4332,22 +4277,11 @@ def source_overlap_matrix(spark: SparkSession, sf: str) -> DataFrame:
     of sources (a constant ~10s-100s), never by chunk popularity inside
     a source; pair counts are algebraic."""
     docs = _t_spread(spark, sf, "documents", "doc_id").select("doc_id", "source", "text")
-    toks = F.filter(F.split("text", " "), lambda x: x != "")
-    n_chunks = F.floor(F.size(toks) / _CHUNK_W).cast("int")
-    idx = F.when(
-        n_chunks >= 1, F.sequence(F.lit(1), n_chunks)
-    ).otherwise(F.array().cast("array<int>"))
+    toks = _toks()
+    _, idx = _chunk_idx(toks)
     sc = (
         docs.select(
-            "source",
-            F.explode(
-                F.transform(
-                    idx,
-                    lambda i: F.concat_ws(
-                        " ", F.slice(toks, (i - 1) * _CHUNK_W + 1, _CHUNK_W)
-                    ),
-                )
-            ).alias("chunk"),
+            "source", F.explode(_chunk_arr(idx, toks)).alias("chunk")
         )
         .select("source", F.md5("chunk").alias("h"))
         .distinct()
@@ -4404,17 +4338,12 @@ def pmi_bigrams_topk(spark: SparkSession, sf: str) -> DataFrame:
     top-20 is a TakeOrderedAndProject, never a full sort. Ordering is
     on the ROUNDED pmi (then words) so rank 20 cannot flip on a ulp."""
     docs = _t(spark, sf, "documents").select("doc_id", "text")
-    toks = F.filter(F.split(F.lower("text"), " "), lambda x: x != "")
-    tk = docs.select(toks.alias("t")).filter(F.size("t") >= 2)
-    bg = tk.select(
-        F.explode(
-            F.zip_with(
-                F.slice("t", F.lit(1), F.size("t") - 1),
-                F.slice("t", F.lit(2), F.size("t") - 1),
-                lambda a, b: F.struct(a.alias("w1"), b.alias("w2")),
-            )
-        ).alias("bg")
-    ).select("bg.w1", "bg.w2")
+    tk = docs.select(_toks(F.lower("text")).alias("t")).filter(
+        F.size("t") >= 2
+    )
+    bg = tk.select(F.explode(_bigram_arr()).alias("bg")).select(
+        "bg.w1", "bg.w2"
+    )
     c_xy = bg.groupBy("w1", "w2").agg(F.count("*").alias("c"))
     c_x = c_xy.groupBy("w1").agg(F.sum("c").alias("cx"))
     c_y = c_xy.groupBy("w2").agg(F.sum("c").alias("cy"))
@@ -4565,6 +4494,29 @@ ORDER BY label, dim_i, dim_j
 """.replace("__SF__/embeddings.parquet", "embeddings")
 
 
+def _snapshot_edges(
+    spark: SparkSession, sf: str
+) -> tuple[DataFrame, DataFrame]:
+    """``edge_weights`` of the even- and the odd-``warc_ts`` pages of
+    docs_as_pages — two disjoint crawl snapshots of the corpus, each
+    through the real fused stage-1/2 pass."""
+    from clip_retrieval_spark.operators.materialize import edge_weights
+    from clip_retrieval_spark.operators.triples import (
+        extract_and_triples_df,
+    )
+
+    pages = docs_as_pages(spark, sf)
+
+    def snapshot(parity: int) -> DataFrame:
+        return edge_weights(
+            extract_and_triples_df(
+                pages.filter(F.unix_timestamp("warc_ts") % 2 == parity)
+            )
+        )
+
+    return snapshot(0), snapshot(1)
+
+
 def kg_incremental_merge(spark: SparkSession, sf: str) -> DataFrame:
     """Incremental KG maintenance through the REAL pipeline: run
     stages 1-2 on two disjoint page snapshots (even / odd warc_ts —
@@ -4578,26 +4530,12 @@ def kg_incremental_merge(spark: SparkSession, sf: str) -> DataFrame:
     Scale shape: each snapshot's aggregation is map-side combinable;
     the merge is one full-outer hash join of two already-aggregated
     edge tables (bucketable by the edge key at cluster scale)."""
-    from clip_retrieval_spark.operators.triples import (
-        extract_and_triples_df,
-    )
     from clip_retrieval_spark.operators.materialize import (
         merge_weighted_edges,
     )
 
-    pages = docs_as_pages(spark, sf)
-
-    def _edges(p: DataFrame) -> DataFrame:
-        tr = extract_and_triples_df(p)
-        return tr.groupBy("subj", "obj").agg(
-            F.count("*").cast("long").alias("weight")
-        )
-
-    even = pages.filter(F.unix_timestamp("warc_ts") % 2 == 0)
-    odd = pages.filter(F.unix_timestamp("warc_ts") % 2 == 1)
-    return (
-        merge_weighted_edges(_edges(even), _edges(odd))
-        .orderBy("subj", "obj")
+    return merge_weighted_edges(*_snapshot_edges(spark, sf)).orderBy(
+        "subj", "obj"
     )
 
 
@@ -4672,20 +4610,9 @@ def kg_snapshot_diff(spark: SparkSession, sf: str) -> DataFrame:
     Scale shape: identical to the merge — two map-side-combinable
     aggregations meeting in one full-outer hash join keyed by the
     edge, bucketable at cluster scale."""
-    from clip_retrieval_spark.operators.triples import (
-        extract_and_triples_df,
-    )
-
-    pages = docs_as_pages(spark, sf)
-
-    def _edges(p: DataFrame, w: str) -> DataFrame:
-        tr = extract_and_triples_df(p)
-        return tr.groupBy("subj", "obj").agg(
-            F.count("*").cast("long").alias(w)
-        )
-
-    base = _edges(pages.filter(F.unix_timestamp("warc_ts") % 2 == 0), "w_base")
-    new = _edges(pages.filter(F.unix_timestamp("warc_ts") % 2 == 1), "w_new")
+    even, odd = _snapshot_edges(spark, sf)
+    base = even.withColumnRenamed("weight", "w_base")
+    new = odd.withColumnRenamed("weight", "w_new")
     status = (
         F.when(F.col("w_base").isNull(), F.lit("added"))
         .when(F.col("w_new").isNull(), F.lit("removed"))
@@ -4741,8 +4668,7 @@ def kwic_concordance(spark: SparkSession, sf: str) -> DataFrame:
     A corpus-frequency hub token costs rows proportional to its true
     occurrence count, never |doc| per document."""
     docs = _t(spark, sf, "documents").select("doc_id", "text")
-    t = F.filter(F.split("text", " "), lambda x: x != "")
-    base = docs.select("doc_id", t.alias("t"))
+    base = docs.select("doc_id", _toks().alias("t"))
     poss = F.filter(
         F.sequence(F.lit(1), F.size("t")),
         lambda i: F.element_at("t", i) == F.lit(_KWIC_TOKEN),
@@ -4800,9 +4726,7 @@ def zipf_fit_by_source(spark: SparkSession, sf: str) -> DataFrame:
     ties broken (count DESC, token ASC) so both engines rank
     identically."""
     docs = _t(spark, sf, "documents").select("source", "text")
-    toks = docs.select(
-        "source", F.explode(F.split("text", " ")).alias("tok")
-    ).filter(F.col("tok") != "")
+    toks = _tok_stream(docs, "source")
     cnt = toks.groupBy("source", "tok").agg(F.count("*").alias("c"))
     w = Window.partitionBy("source").orderBy(F.desc("c"), F.asc("tok"))
     ranked = (
@@ -5164,7 +5088,7 @@ def chunk_windows_rag(spark: SparkSession, sf: str) -> DataFrame:
     docs = _t_spread(spark, sf, "documents", "doc_id").select("doc_id", "text")
     toks = docs.select(
         "doc_id",
-        F.filter(F.split("text", " "), lambda t: t != "").alias("toks"),
+        _toks().alias("toks"),
     ).filter(F.size("toks") > 0)
     starts = F.sequence(
         F.lit(0),

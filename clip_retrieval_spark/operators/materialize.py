@@ -151,6 +151,33 @@ def materialize_edges(
     )
 
 
+def surface_edges(edges: DataFrame, nodes: DataFrame) -> DataFrame:
+    """``edges`` plus ``subj_surface``/``obj_surface``: each canonical
+    endpoint resolved to its component's representative surface, the
+    lexicographic-min surface of its canonical id (deterministic and
+    SQL-expressible, unlike hash ids).
+
+    The canonical->surface map is DISTINCT-CANONICAL sized (small under
+    Zipf), so both endpoint resolutions are broadcast joins against the
+    edge table — no shuffle of the big side.
+    """
+    rep = nodes.groupBy("canonical_id").agg(
+        F.min("surface").alias("_rep_surface")
+    )
+
+    def end(e: str) -> DataFrame:
+        return F.broadcast(
+            rep.select(
+                F.col("canonical_id").alias(f"canonical_{e}"),
+                F.col("_rep_surface").alias(f"{e}_surface"),
+            )
+        )
+
+    return edges.join(end("subj"), "canonical_subj").join(
+        end("obj"), "canonical_obj"
+    )
+
+
 _NT_BASE = "http://kg.example"
 # characters N-Triples (W3C RDF 1.1 §2.2) forbids unescaped inside an
 # IRIREF, percent-encoded the way any serializer must
@@ -205,6 +232,15 @@ def to_ntriples(
         F.lit("> ."),
     )
     return edges.select(*keep, line.alias("ntriple"))
+
+
+def edge_weights(triples: DataFrame) -> DataFrame:
+    """(subj, obj, weight): how many triples assert each (subj, obj)
+    edge — one map-side-combinable aggregation, the per-snapshot input
+    of ``merge_weighted_edges``."""
+    return triples.groupBy("subj", "obj").agg(
+        F.count("*").cast("long").alias("weight")
+    )
 
 
 def merge_weighted_edges(

@@ -46,20 +46,6 @@ def _hyperplanes(dim: int, n_bits: int, table: int) -> list[list[float]]:
     return planes
 
 
-def rp_bucket(emb: Column, dim: int, n_bits: int, table: int) -> Column:
-    """LSH bucket id: n_bits sign bits of hyperplane projections."""
-    acc = F.lit(0).cast("long")
-    for bit, plane in enumerate(_hyperplanes(dim, n_bits, table)):
-        lit_plane = F.array(*[F.lit(x) for x in plane])
-        proj = F.aggregate(
-            F.zip_with(emb, lit_plane, lambda x, y: x.cast("double") * y),
-            F.lit(0.0),
-            lambda a, x: a + x,
-        )
-        acc = acc + F.when(proj >= 0, F.lit(1 << bit)).otherwise(0)
-    return acc
-
-
 def brute_force_topk(
     queries: DataFrame,
     corpus: DataFrame,

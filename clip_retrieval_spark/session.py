@@ -12,6 +12,11 @@ parameters for local testing:
   write_batch_size=1e6 split, reference clip_inference/main.py:74,79).
 * Session timezone pinned to UTC so timestamp semantics are deterministic
   across engines (oracle comparisons) and clusters.
+* File splits keep Spark's defaults: on the kgbench inputs and the KG
+  stage tables a lower ``openCostInBytes`` gave the same rows per
+  non-empty scan task, and no split setting divides a parquet row group
+  (every sf table is one); ``entry_queries._t_spread`` repartitions
+  such inputs after the read instead.
 
 The worker side of these Python settings lives here too: reused
 workers (``spark.python.worker.reuse``) keep the zip directories of
@@ -70,19 +75,6 @@ def get_spark(
         "spark.sql.adaptive.enabled": "true",
         "spark.sql.adaptive.coalescePartitions.enabled": "true",
         "spark.sql.adaptive.skewJoin.enabled": "true",
-        # Scan-parallelism floor (optimization guide §6.1): maxSplitBytes
-        # = min(maxPartitionBytes, max(openCostInBytes, bytes/core)), so
-        # the 4 MB default openCostInBytes floors every split at 4 MB and
-        # a small-but-CPU-dense columnar input (a few MB of zstd'd html
-        # expanding to 100x that in decode work) scans on 1-2 of N cores.
-        # 128 KB keeps tiny inputs at ~defaultParallelism splits while
-        # leaving big-file split sizing (bytes/core) untouched: for any
-        # input >= cores * 4 MB the effective split size is identical to
-        # the default. Production clusters with remote storage where the
-        # per-open seek cost is real can restore it via env.
-        "spark.sql.files.openCostInBytes": os.environ.get(
-            "SPARK_GRAFT_OPEN_COST", str(128 * 1024)
-        ),
         "spark.sql.execution.arrow.pyspark.enabled": "true",
         "spark.sql.execution.arrow.maxRecordsPerBatch": str(arrow_batch),
         "spark.sql.session.timeZone": "UTC",

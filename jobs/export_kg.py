@@ -10,17 +10,16 @@ clip_back to serve (reference clip_back.py:539-566).
 
 Reads the pipeline's ``nodes``/``edges`` tables
 (plans/pipeline.py STAGE_TABLES), resolves each canonical endpoint to
-its representative surface (lexicographic min per canonical —
-deterministic, the kg_nodes_edges gate's rule), serializes with
+its representative surface (operators.materialize.surface_edges, the
+kg_nodes_edges gate's rule), serializes with
 operators.materialize.to_ntriples (RDF 1.1 IRIREF percent-escaping,
 pure JVM string fns), and writes gzip-compressed text files.
 
-Scale shape: the canonical->surface map is DISTINCT-CANONICAL sized
-(small under Zipf), so both endpoint resolutions are broadcast joins
-against the 10^12-row edge table — no shuffle of the big side; the
-serialize itself is a map-only projection (plan-asserted for the gate
-variant, PLANS.md) and the write is the job's cost. Prints one JSON
-line: {"n_triples": N, "out": dir, "wall_sec": s}.
+Scale shape: both endpoint resolutions are broadcast joins (no
+shuffle of the edge table); the serialize itself is a map-only
+projection (plan-asserted for the gate variant, PLANS.md) and the
+write is the job's cost. Prints one JSON line:
+{"n_triples": N, "out": dir, "wall_sec": s}.
 """
 
 from __future__ import annotations
@@ -35,8 +34,6 @@ sys.path.insert(
     0, os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 )
 
-from pyspark.sql import functions as F  # noqa: E402
-
 from clip_retrieval_spark.session import get_spark  # noqa: E402
 
 
@@ -50,6 +47,7 @@ def main(argv: list[str] | None = None) -> dict:
 
     from clip_retrieval_spark.io import TableStore  # noqa: E402
     from clip_retrieval_spark.operators.materialize import (  # noqa: E402
+        surface_edges,
         to_ntriples,
     )
     from clip_retrieval_spark.plans.pipeline import (  # noqa: E402
@@ -62,29 +60,7 @@ def main(argv: list[str] | None = None) -> dict:
     edges = store.read(STAGE_TABLES["edges"])
     nodes = store.read(STAGE_TABLES["nodes"])
 
-    rep = nodes.groupBy("canonical_id").agg(
-        F.min("surface").alias("_surface")
-    )
-    resolved = (
-        edges.join(
-            F.broadcast(
-                rep.select(
-                    F.col("canonical_id").alias("canonical_subj"),
-                    F.col("_surface").alias("subj_surface"),
-                )
-            ),
-            "canonical_subj",
-        )
-        .join(
-            F.broadcast(
-                rep.select(
-                    F.col("canonical_id").alias("canonical_obj"),
-                    F.col("_surface").alias("obj_surface"),
-                )
-            ),
-            "canonical_obj",
-        )
-    )
+    resolved = surface_edges(edges, nodes)
     nt = to_ntriples(resolved, keep=())
     (
         nt.select("ntriple")

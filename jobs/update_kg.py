@@ -50,14 +50,11 @@ def dump_edges(spark, n_pages: int, dump_id: int, seed: int) -> DataFrame:
     """One crawl dump's (subj, obj, weight) aggregate through the real
     stage-1/2 operators."""
     from clip_retrieval_spark.fixtures import pages_df
-    from clip_retrieval_spark.operators.extract import extract_pages
-    from clip_retrieval_spark.operators.triples import extract_triples_df
+    from clip_retrieval_spark.operators.materialize import edge_weights
+    from clip_retrieval_spark.operators.triples import extract_and_triples_df
 
     pages = pages_df(spark, n_pages, seed=seed + dump_id)
-    tr = extract_triples_df(extract_pages(pages))
-    return tr.groupBy("subj", "obj").agg(
-        F.count("*").cast("long").alias("weight")
-    )
+    return edge_weights(extract_and_triples_df(pages))
 
 
 def main(argv: list[str] | None = None) -> dict:

@@ -5,6 +5,7 @@ history time-travelable, and roll back in metadata only."""
 from __future__ import annotations
 
 import sys
+from collections import Counter
 
 import pytest
 
@@ -51,6 +52,27 @@ def test_two_dumps_equal_full_rebuild_and_rollback(spark, tmp_path):
     assert _edges(store) == snap1
     # the rolled-past merge is still time-travelable (no data moved)
     assert _edges(store, as_of=2) == want
+
+
+def test_dump_edges_match_spec_oracle(spark):
+    """Each dump's edge weights are the (subj, obj) counts of the
+    independent spec oracle over the same fixture pages."""
+    from clip_retrieval_spark.fixtures import gen_pages_local
+    from tests.oracle import oracle_extract_text, oracle_extract_triples
+
+    for dump_id in (0, 1):
+        want = Counter(
+            (s, o)
+            for (_url, _ts, html, _text, _lang)
+            in gen_pages_local(400, 7 + dump_id)
+            for (_sid, s, _p, o)
+            in oracle_extract_triples(oracle_extract_text(html))
+        )
+        got = {
+            (r.subj, r.obj): r.weight
+            for r in dump_edges(spark, 400, dump_id, 7).collect()
+        }
+        assert want and got == dict(want), dump_id
 
 
 def test_dump_sequence_is_deterministic(spark, tmp_path):
