@@ -11,16 +11,19 @@ from __future__ import annotations
 
 import argparse
 import os
+import shutil
 import sys
 
-sys.path.insert(
-    0, os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-)
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 import duckdb  # noqa: E402
 
 import __spark_entry__ as entry_mod  # noqa: E402
-from BENCH.result_hash import _rowset  # noqa: E402
+from BENCH.result_hash import (  # noqa: E402
+    _rowset,
+    with_repo_on_pythonpath,
+)
 from clip_retrieval_spark.session import get_spark  # noqa: E402
 
 TABLES = (
@@ -37,8 +40,11 @@ def main() -> None:
 
     con = duckdb.connect()
     # a runaway oracle (quadratic SQL at a big sf) must error cleanly,
-    # not fill the disk and kill the whole sweep
-    con.execute("SET max_temp_directory_size='40GiB'")
+    # not fill the disk and kill the whole sweep: it may spill at most
+    # half the free space of the working directory, where DuckDB's spill
+    # directory (.tmp/) lives
+    cap = shutil.disk_usage(os.getcwd()).free // 2
+    con.execute(f"SET max_temp_directory_size='{cap}B'")
     for t in TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM '{args.sf_dir}/{t}.parquet'"
@@ -46,6 +52,7 @@ def main() -> None:
     cpus = os.environ.get(
         "SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0)))
     )
+    with_repo_on_pythonpath(REPO)
     spark = get_spark(master=f"local[{cpus}]", app_name="oracle_check",
                       shuffle_partitions=int(cpus))
     spark.sparkContext.setLogLevel("ERROR")

@@ -38,6 +38,18 @@ def _rowset(cols, rows):
     )
 
 
+def with_repo_on_pythonpath(repo: str) -> None:
+    """Put ``repo`` first on ``PYTHONPATH``. Spark's Python workers are
+    separate processes that inherit the environment, not the driver's
+    ``sys.path``: without this, a query with a Python UDF fails in the
+    worker with ``ModuleNotFoundError`` when the script runs from another
+    directory. Call it before the SparkSession starts."""
+    old = os.environ.get("PYTHONPATH")
+    os.environ["PYTHONPATH"] = (
+        repo if not old else os.pathsep.join([repo, old])
+    )
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--repo", required=True)
@@ -54,6 +66,8 @@ def main() -> None:
     spec.loader.exec_module(entry)
 
     from clip_retrieval_spark.session import get_spark
+
+    with_repo_on_pythonpath(repo)
 
     cpus = os.environ.get(
         "SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0)))

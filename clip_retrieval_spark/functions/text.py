@@ -70,19 +70,42 @@ INLINE_TAGS = frozenset(
     "span strong sub sup time u var wbr".split()
 )
 
+
+def _trie(names) -> str:
+    """Regex alternation matching exactly ``names``, grouped by first
+    letter (``b(?:di|do)?`` for b, bdi, bdo): the engine tests each
+    leading letter once instead of trying every name in turn, and the
+    regex compiler factors what a group's tails share (``d[io]``). Behind
+    the callers' ``\\b`` at most one name can match at a position (a name
+    that is a prefix of another is followed by a word character there), so
+    the order of the alternatives never changes a match."""
+    heads: dict[str, list[str]] = {}
+    for name in sorted(names):
+        heads.setdefault(name[0], []).append(name[1:])
+    return "|".join(
+        head if tails == [""] else "%s(?:%s)%s" % (
+            head, "|".join(filter(None, tails)), "?" if "" in tails else "")
+        for head, tails in heads.items()
+    )
+
+
 _COMMENT_RE = re.compile(r"<!--.*?(?:-->|\Z)", re.DOTALL)
 _REMOVE_RE = re.compile(
-    r"<(%s)\b[^>]*>.*?(?:</\1\s*>|\Z)" % "|".join(_REMOVE_ELEMENTS),
+    r"<(%s)\b[^>]*>.*?(?:</\1\s*>|\Z)" % _trie(_REMOVE_ELEMENTS),
     re.DOTALL | re.IGNORECASE,
 )
 _INLINE_RE = re.compile(
-    r"</?(%s)\b[^>]*>" % "|".join(sorted(INLINE_TAGS)), re.IGNORECASE
+    r"</?(%s)\b[^>]*>" % _trie(INLINE_TAGS), re.IGNORECASE
 )
 _TAG_RE = re.compile(r"<[a-zA-Z/!][^>]*>")
 # every run of [ \t\r\f\v\xa0] except a lone space, which already is its
 # own canonical form: rewriting it with itself is most of the matches on
-# real text and all of them wasted
-_WS_RE = re.compile(r"[\t\r\f\v\xa0][ \t\r\f\v\xa0]*| [ \t\r\f\v\xa0]+")
+# real text and all of them wasted. The pattern opens with one character
+# class so that the search skips every other character in C without
+# entering the matcher; a run of one character matches only if it is not
+# a space. A pattern opening with an alternation of two classes would
+# enter the matcher at every character
+_WS_RE = re.compile(r"[ \t\r\f\v\xa0](?:[ \t\r\f\v\xa0]+|(?<! ))")
 
 
 def extract_text(html_bytes: bytes | str | None) -> str:
@@ -103,9 +126,7 @@ def extract_text(html_bytes: bytes | str | None) -> str:
     # a strip per line; byte-identical, one C-level pass instead of
     # one regex invocation per line
     doc = _WS_RE.sub(" ", doc)
-    return "\n".join(
-        s for s in (line.strip() for line in doc.split("\n")) if s
-    )
+    return "\n".join(filter(None, map(str.strip, doc.split("\n"))))
 
 
 # --- triple extraction ------------------------------------------------------
@@ -121,58 +142,25 @@ _CHUNK_STOP = frozenset("The A An This It But And".split())
 
 _SENT_SPLIT_RE = re.compile(r"(?<=[.!?])\s+")
 _TOKEN_RE = re.compile(r"[A-Za-z0-9][A-Za-z0-9&'\-]*")
-_LOWER_RE = re.compile(r"^[a-z]+$")
+# step 4a on the space-joined gap: tokens hold no space (nor newline), so
+# this one match == "every gap token is ^[a-z]+$" for a gap of 1-5 tokens
+_PRED_RE = re.compile(r"[a-z]+(?: [a-z]+){0,4}")
 # two entity chunks need two tokens opening with A-Z, so a sentence with
 # fewer than two A-Z letters cannot yield a triple
 _TWO_CAPS_RE = re.compile(r"[A-Z][^A-Z]*[A-Z]")
 
 
-def _is_predicate(gap: list[str]) -> bool:
-    if not 1 <= len(gap) <= 5:
-        return False
-    for tok in gap:
-        if not _LOWER_RE.match(tok):
-            return False
-    head = gap[0]
-    if head in VERB_LEX:
-        return True
-    if len(head) > 3 and (head.endswith("ed") or head.endswith("es")):
-        return True
-    if len(gap) >= 2 and head in COPULA and gap[-1] in PREP:
-        return True
-    return False
-
-
 def sentences(text: str) -> list[str]:
     """Sentence stream per TRIPLE SPEC v1 step 1."""
+    # strip() removes exactly the characters \s matches, so on a stripped
+    # line every piece of the split is already stripped and non-empty: a
+    # piece ends at its [.!?] and starts after a maximal whitespace run
     out = []
     for line in text.split("\n"):
-        for sent in _SENT_SPLIT_RE.split(line):
-            sent = sent.strip()
-            if sent:
-                out.append(sent)
+        line = line.strip()
+        if line:
+            out += _SENT_SPLIT_RE.split(line)
     return out
-
-
-def _chunks(tokens: list[str]) -> list[tuple[int, int]]:
-    """Maximal capitalized runs as [start, end) spans."""
-    # precompute the cap flag once per token (the run scan below would
-    # otherwise test most tokens twice); tokens open with [A-Za-z0-9], so
-    # "opens with A-Z" is one string comparison
-    caps = ["A" <= t < "[" for t in tokens]
-    spans = []
-    i, n = 0, len(tokens)
-    while i < n:
-        if caps[i]:
-            j = i + 1
-            while j < n and caps[j]:
-                j += 1
-            if not (j - i == 1 and tokens[i] in _CHUNK_STOP):
-                spans.append((i, j))
-            i = j
-        else:
-            i += 1
-    return spans
 
 
 def extract_triples(
@@ -184,17 +172,39 @@ def extract_triples(
         if not _TWO_CAPS_RE.search(sent):
             continue
         tokens = _TOKEN_RE.findall(sent)
-        spans = _chunks(tokens)
-        for (s1, e1), (s2, e2) in zip(spans, spans[1:]):
-            gap = tokens[e1:s2]
-            if _is_predicate(gap):
-                out.append(
-                    (
-                        sent_id,
-                        " ".join(tokens[s1:e1]),
-                        " ".join(gap),
-                        " ".join(tokens[s2:e2]),
-                        s1, e1, s2, e2,
-                    )
-                )
+        # step 3: maximal runs of tokens opening with A-Z as [start, end)
+        # spans; tokens open with [A-Za-z0-9], so that is one comparison,
+        # and the "" sentinel closes a run that ends the sentence
+        tokens.append("")
+        spans = []
+        start = -1
+        for i, tok in enumerate(tokens):
+            if "A" <= tok < "[":
+                if start < 0:
+                    start = i
+            elif start >= 0:
+                if i - start > 1 or tokens[start] not in _CHUNK_STOP:
+                    spans.append((start, i))
+                start = -1
+        if len(spans) < 2:
+            continue
+        # step 4 over consecutive chunks; maximal runs are never adjacent,
+        # so every gap holds at least one token
+        s1, e1 = spans[0]
+        for s2, e2 in spans[1:]:
+            if s2 - e1 <= 5:
+                pred = " ".join(tokens[e1:s2])
+                if _PRED_RE.fullmatch(pred):
+                    head = tokens[e1]
+                    if (
+                        head in VERB_LEX
+                        or (len(head) > 3 and head.endswith(("ed", "es")))
+                        or (s2 - e1 >= 2 and head in COPULA
+                            and tokens[s2 - 1] in PREP)
+                    ):
+                        out.append((
+                            sent_id, " ".join(tokens[s1:e1]), pred,
+                            " ".join(tokens[s2:e2]), s1, e1, s2, e2,
+                        ))
+            s1, e1 = s2, e2
     return out

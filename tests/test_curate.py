@@ -3,9 +3,10 @@ near-dedup -> semantic dedup -> deterministic sample."""
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from jobs.curate import curate  # noqa: E402
 

@@ -9,14 +9,30 @@ tokens, unterminated comments and remove-elements, stray entities and
 invalid UTF-8. The md5 of the spec's outputs over it is pinned, so a
 faster spec must produce the same bytes, not only the same oracle
 agreement.
+
+A second, hand-written edge corpus (``edge_corpus``) names every tag the
+spec treats specially, in every case shape, next to near-miss names that
+must stay ordinary tags; whitespace that only appears once entities are
+unescaped; and the boundaries of the triple spec's gap test. Its outputs
+are pinned the same way.
 """
 
 from __future__ import annotations
 
 import hashlib
+import itertools
 import random
+import re
 
-from clip_retrieval_spark.functions.text import extract_text, extract_triples
+from clip_retrieval_spark.functions.text import (
+    _INLINE_RE,
+    _REMOVE_ELEMENTS,
+    _REMOVE_RE,
+    _WS_RE,
+    INLINE_TAGS,
+    extract_text,
+    extract_triples,
+)
 
 N_DOCS = 3_000
 
@@ -102,6 +118,87 @@ TEXT_MD5 = "a968006bab339dfe040dcc34379e9f29"
 TRIPLES_MD5 = "ed7f3a79f1d99c64d13717bbed32d70d"
 
 
+def _case_shapes(name: str) -> list[str]:
+    return [name, name.upper(), name[0].upper() + name[1:],
+            name[:-1] + name[-1].upper()]
+
+
+# tag names one edit away from a spec name: the tag stays an ordinary
+# tag (a newline), its content stays
+_NEAR_MISSES = ("b2", "abbrx", "spans", "bd", "su", "scripts", "navx",
+                "header2", "ab", "bdx", "sampl", "wbrs", "templates", "as")
+# names whose spec prefix ends on a word boundary: ``\b`` admits them as
+# the spec name
+_BOUNDARY_NAMES = ("sub-x", "b.c", "span:x", "script-x", "nav.y")
+# sentences on the gap test's boundaries: gap length 5 vs 6, -ed/-es heads
+# of length 3 vs 4, copula ... prep, digits, capitals and punctuation in
+# the gap, and singleton stop chunks on either side
+_GAP_SENTENCES = (
+    "Acme acquired the big red old Globex.",
+    "Acme acquired the big red old new Globex.",
+    "Acme owns a b c d Globex.",
+    "Acme owns a b c d e Globex.",
+    "Acme red Globex.", "Acme bed Globex.", "Acme aced Globex.",
+    "Acme uses Globex.", "Acme yes Globex.", "Acme eyes Globex.",
+    "Acme ed Globex.", "Acme es Globex.",
+    "Acme is based in Globex.", "Acme was in Globex.", "Acme is Globex.",
+    "Acme has been with Globex.", "Acme is big near Globex.",
+    "Acme will be a part of a b Globex.", "Acme is a b c to Globex.",
+    "Acme acquired 3 Globex.", "Acme acquired x7 Globex.",
+    "Acme acquired the 42nd Globex.", "Acme acquired iPhone Globex.",
+    "Acme acquired o'neil Globex.", "Acme acquired e-mail Globex.",
+    "Acme acquired, then Globex.", "Acme acquired eBay Globex.",
+    "The owns Globex.", "Acme owns The.", "Acme owns The Globex.",
+    "It acquired Globex and It.", "Acme owns But Globex owns And Initech.",
+    "But And The A An This It.", "Acme owns Globex owns Initech owns Hooli.",
+    "Acme\tacquired\xa0Globex.", "Acme acquired  Globex.",
+    "Acme owns Globex. Initech was in Hooli! Umbrella backs Zeta? Q owns R",
+)
+# whitespace that only exists after html.unescape: no literal tab, \xa0
+# or double space anywhere in the markup
+_ENTITY_WS = ("&nbsp;", "&#160;", "&#xa0;", "&#9;", "&#11;", "&#12;",
+              "&#13;", "&#32;", "&#10;", "&#x09;")
+
+
+def edge_corpus() -> list[bytes]:
+    docs = []
+    for name in sorted(INLINE_TAGS):
+        for shape in _case_shapes(name):
+            docs.append(
+                f"<p>Acme <{shape}>acquired</{shape}> Globex. "
+                f"Initech <{shape} class='x' data-y=\"1\">owns</{shape} >"
+                f" Hooli.<{shape}/>Zeta</p>"
+            )
+    for name in _REMOVE_ELEMENTS:
+        for shape in _case_shapes(name):
+            docs.append(
+                f"Acme owns Globex.<{shape} id=a>Hidden Words</{shape}>"
+                f"Initech backs Hooli.<{shape}>more</{name.upper()} >"
+                f"Zeta owns Q.<{shape} x>to the end"
+            )
+    for name in _NEAR_MISSES + _BOUNDARY_NAMES:
+        for shape in (name, name.upper()):
+            docs.append(
+                f"Acme<{shape}>owns</{shape}>Globex <{shape} a=b>"
+                f"Initech acquired Hooli</{shape}> Zeta"
+            )
+    for i, sent in enumerate(_GAP_SENTENCES):
+        docs.append(f"<li>{sent}</li>")
+        docs.append(f"<p>{sent} <b>{_GAP_SENTENCES[i - 1]}</b></p>")
+    for ent in _ENTITY_WS:
+        docs.append(f"<p>Acme{ent}acquired Globex.</p>")
+        docs.append(f"Acme owns{ent} Globex{ent}{ent}Initech")
+        docs.append(f"{ent}Acme {ent} owns{ent}<br>{ent}Globex{ent}")
+    return [d.encode("utf-8") for d in docs]
+
+
+# taken from the spec before the tag alternations were grouped by first
+# letter, the whitespace pattern opened with one class and the gap test
+# became one match
+EDGE_TEXT_MD5 = "abd206d01373469a9b4132a3f9e71e32"
+EDGE_TRIPLES_MD5 = "52e95fafad2162cef979139ae2ceb4b0"
+
+
 def test_corpus_covers_the_edge_cases():
     docs = corpus()
     joined = b"".join(docs)
@@ -126,3 +223,57 @@ def test_extract_triples_pinned():
     inputs = [extract_text(d) for d in docs]
     inputs += [d.decode("utf-8", errors="replace") for d in docs]
     assert _md5(repr(extract_triples(t)) for t in inputs) == TRIPLES_MD5
+
+
+def test_edge_corpus_pinned():
+    docs = edge_corpus()
+    texts = [extract_text(d) for d in docs]
+    assert _md5(texts) == EDGE_TEXT_MD5
+    inputs = texts + [d.decode("utf-8") for d in docs]
+    assert _md5(repr(extract_triples(t)) for t in inputs) == EDGE_TRIPLES_MD5
+
+
+def test_edge_corpus_exercises_every_path():
+    docs = edge_corpus()
+    texts = [extract_text(d) for d in docs]
+    joined = "\n".join(texts)
+    # removed elements and inline tags leave nothing; near misses and the
+    # remaining tags become line breaks
+    assert "Hidden" not in joined and "more" not in joined
+    n_inline = 4 * len(INLINE_TAGS)
+    assert set(texts[:n_inline]) == {
+        "Acme acquired Globex. Initech owns Hooli.Zeta"
+    }
+    assert "Acme\nowns\nGlobex\nInitech acquired Hooli\nZeta" in texts
+    # entity whitespace is collapsed like literal whitespace
+    assert "Acme acquired Globex." in texts
+    triples = [t for s in _GAP_SENTENCES for t in extract_triples(s)]
+    preds = {t[2] for t in triples}
+    assert "acquired the big red old" in preds
+    assert "acquired the big red old new" not in preds
+    assert {"aced", "uses", "eyes"} <= preds
+    assert not {"red", "bed", "yes", "ed", "es", "is"} & preds
+    assert {"is based in", "was in"} <= preds
+
+
+def test_tag_tries_match_exactly_the_spec_names():
+    names = INLINE_TAGS | set(_REMOVE_ELEMENTS)
+    candidates = {n[:k] for n in names for k in range(1, len(n) + 1)}
+    candidates |= {n + c for n in names for c in "aeiosx2"}
+    for c in sorted(candidates):
+        for shape in (c, c.upper()):
+            inline = _INLINE_RE.fullmatch(f"</{shape} x=1>")
+            assert bool(inline) == (c in INLINE_TAGS), shape
+            removed = _REMOVE_RE.fullmatch(f"<{shape}>x</{shape} >")
+            assert bool(removed) == (c in _REMOVE_ELEMENTS), shape
+            assert not removed or removed.group(1) == shape
+
+
+def test_ws_pass_collapses_every_run():
+    # every run of the class becomes one space (a lone space is rewritten
+    # with itself), over all strings of up to four characters
+    ws = " \t\r\f\v\xa0"
+    for n in range(1, 5):
+        for chars in itertools.product(ws + "x\n", repeat=n):
+            s = "".join(chars)
+            assert _WS_RE.sub(" ", s) == re.sub(f"[{ws}]+", " ", s), repr(s)

@@ -4,12 +4,13 @@ history time-travelable, and roll back in metadata only."""
 
 from __future__ import annotations
 
+import os
 import sys
 from collections import Counter
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from jobs.update_kg import EDGE_TABLE, dump_edges, main  # noqa: E402
 
