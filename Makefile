@@ -1,4 +1,4 @@
-.PHONY: test dist bench scaling clean
+.PHONY: test dist bench scaling kg-hashes clean
 
 # the Tier-1 gate (ROADMAP.md), as one command
 test:
@@ -19,6 +19,23 @@ bench:
 
 scaling:
 	python jobs/bench_scaling.py
+
+# one build_open_vocab run per seed pinned in kgbench/expected_hashes.json
+# (~30 s a seed); fails unless every seed's nodes/edges/links match its pin
+kg-hashes:
+	@fail=0; \
+	for s in $$(python3 -c 'import json; print(*sorted(json.load(open( \
+		"kgbench/expected_hashes.json")), key=int))'); do \
+		out=$$(python3 kgbench/run.py --workload build_open_vocab \
+			--seed $$s --seconds 1 --trace 0 2>/dev/null); \
+		if echo "$$out" | grep -q \
+			"^kgbench check ok   nodes/edges/links match"; then \
+			echo "kg-hashes seed $$s: pass"; \
+		else \
+			echo "kg-hashes seed $$s: FAIL"; fail=1; \
+		fi; \
+	done; \
+	exit $$fail
 
 clean:
 	rm -rf dist .pytest_cache

@@ -67,9 +67,6 @@ class TableStore:
     def path(self, table: str) -> str:
         return os.path.join(self.root, table)
 
-    def exists(self, table: str) -> bool:
-        return os.path.isdir(self.path(table))
-
     # -- data ----------------------------------------------------------
 
     def read(self, table: str) -> DataFrame:

@@ -7,27 +7,38 @@ Everything here is JVM-side (higher-order functions + xxhash64): shingle
 The band count is the recall/cost knob — the analog of the reference's
 dynamic nprobe widening (clip_back.py:356-361).
 
-At 100 TB scale the bucket join is the only shuffle, keyed by
-(band, signature); hot buckets are bounded by ``max_bucket`` — buckets
-larger than that are dropped as non-selective, which keeps worst-case
-pair fanout linear in input; AQE skew-join splits what remains.
+Two consumers. The entity table (one row per distinct surface) is
+blocked by ``link.entity_pairs``: ``lsh_explode`` on both sides of a
+broadcast join, every bucket pair scored, for linking and the alias
+merge alike. Document corpora (``dedup.near_dedup_minhash``) are too
+big to broadcast and go through ``candidate_pairs``: a shuffle self-join
+keyed by (band, signature) whose hot buckets are bounded by
+``max_bucket`` — an over-cap bucket contributes a spanning chain instead
+of its m^2 pairs, which keeps worst-case pair fanout linear in input;
+AQE skew-join splits what remains. The cap bounds document blocking
+only.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 N_HASHES = 16
 BAND_ROWS = 2  # => 8 bands
+SHINGLE = 3  # char n-gram length
+# salt cells of an over-cap bucket's chain (see candidate_pairs)
+CHAIN_SALTS = 64
 
 
-def char_shingles(col: Column, n: int = 3) -> Column:
-    """Distinct char n-grams of lower(col), JVM-side."""
+def char_shingles(col: Column) -> Column:
+    """Distinct char SHINGLE-grams of lower(col), JVM-side."""
     s = F.concat(F.lit("^"), F.lower(col), F.lit("$"))
-    idx = F.sequence(F.lit(1), F.greatest(F.length(s) - (n - 1), F.lit(1)))
+    idx = F.sequence(
+        F.lit(1), F.greatest(F.length(s) - (SHINGLE - 1), F.lit(1))
+    )
     return F.array_distinct(
-        F.transform(idx, lambda i: F.substr(s, i, F.lit(n)))
+        F.transform(idx, lambda i: F.substr(s, i, F.lit(SHINGLE)))
     )
 
 
@@ -36,7 +47,6 @@ def lsh_explode(
     text_col: str,
     n_hashes: int = N_HASHES,
     band_rows: int = BAND_ROWS,
-    shingle_n: int = 3,
 ) -> DataFrame:
     """df + (band, sig) — one row per (input row, band).
 
@@ -59,37 +69,12 @@ def lsh_explode(
     (Jaccard / cosine), so collisions cost recall ~2^-64, not
     correctness.
     """
-    bands = lsh_bands(df, text_col, n_hashes, band_rows, shingle_n)
-    return (
-        df.withColumn("_tk", _text_key(text_col))
-        .join(bands, "_tk")
-        .drop("_tk")
-    )
-
-
-def _text_key(text_col: str) -> Column:
-    """8-byte shuffle key standing in for the raw text."""
-    return F.xxhash64(F.lit("lshk"), F.col(text_col))
-
-
-def lsh_bands(
-    df: DataFrame,
-    text_col: str,
-    n_hashes: int = N_HASHES,
-    band_rows: int = BAND_ROWS,
-    shingle_n: int = 3,
-) -> DataFrame:
-    """(_tk, band, sig) — the LSH band table keyed by ``_text_key``.
-
-    One narrow explode + one algebraic agg; the only shuffle is the
-    signature groupBy, keyed by the 8-byte ``_tk``, and its combiner
-    collapses duplicate texts map-side, so corpus byte volume never
-    enters a shuffle here.
-    """
+    # 8-byte shuffle key standing in for the raw text
+    tk = F.xxhash64(F.lit("lshk"), F.col(text_col))
     n_bands = n_hashes // band_rows
     grams = df.select(
-        _text_key(text_col).alias("_tk"),
-        F.explode(char_shingles(F.col(text_col), shingle_n)).alias("_g"),
+        tk.alias("_tk"),
+        F.explode(char_shingles(F.col(text_col))).alias("_g"),
     )
     hashed = grams.select(
         "_tk",
@@ -110,24 +95,21 @@ def lsh_bands(
         )
         for b in range(n_bands)
     ]
-    return (
-        sigs.withColumn("_b", F.explode(F.array(*band_structs)))
-        .select("_tk", F.col("_b.band").alias("band"),
-                F.col("_b.sig").alias("sig"))
-    )
+    bands = sigs.withColumn(
+        "_b", F.explode(F.array(*band_structs))
+    ).select("_tk", F.col("_b.band").alias("band"),
+             F.col("_b.sig").alias("sig"))
+    return df.withColumn("_tk", tk).join(bands, "_tk").drop("_tk")
 
 
 def candidate_pairs(
     entities: DataFrame,
-    id_col: str = "entity_id",
-    text_col: str = "surface",
     max_bucket: int = 256,
     n_hashes: int = N_HASHES,
     band_rows: int = BAND_ROWS,
-    oversize: str = "chain",
-    chain_salts: int = 64,
 ) -> DataFrame:
-    """Distinct candidate pairs (a < b) from shared LSH buckets.
+    """Distinct candidate pairs (a < b) of ``entities(entity_id,
+    surface)`` from shared LSH buckets.
 
     Self-join on (band, sig) with a bucket-size cap: a bucket of size m
     contributes m^2 pairs, so unbounded hot buckets are the classic LSH
@@ -135,75 +117,65 @@ def candidate_pairs(
 
     Over-cap buckets are NOT silently dropped (they are exactly the
     largest duplicate clusters — dropping them means the corpus' worst
-    duplicates never merge). ``oversize="chain"`` emits a SPANNING chain
-    instead: m-1 consecutive-pair edges connect the whole bucket for
-    downstream connected components at linear (not quadratic) cost.
-    The chain is built two-level — members chain within a salt cell,
-    then the per-salt minima chain across cells — so no single task
-    ever sorts an entire hot bucket: per-task rows are bounded by
-    ~m/chain_salts for the cell windows and by chain_salts for the
-    cross-cell window, regardless of how degenerate the bucket is.
-    A verify step downstream may cut individual chain links;
-    near-identical texts recur in most bands, so surviving links in
-    other bands reconnect true clusters in practice.
-    ``oversize="drop"`` restores strict selectivity (old behavior).
+    duplicates never merge). They emit a SPANNING chain instead: m-1
+    consecutive-pair edges connect the whole bucket for downstream
+    connected components at linear (not quadratic) cost. The chain is
+    built two-level — members chain within a salt cell, then the
+    per-salt minima chain across cells — so no single task ever sorts an
+    entire hot bucket: per-task rows are bounded by ~m/CHAIN_SALTS for
+    the cell windows and by CHAIN_SALTS for the cross-cell window,
+    regardless of how degenerate the bucket is. A verify step downstream
+    may cut individual chain links; near-identical texts recur in most
+    bands, so surviving links in other bands reconnect true clusters in
+    practice.
 
     Shuffle-byte discipline: only (id, band, sig) rows ever shuffle —
     the text column stays in the narrow key projection (see
-    ``lsh_bands``) and never rides a join or window exchange.
+    ``lsh_explode``) and never rides a join or window exchange.
     """
-    bands = lsh_bands(
-        entities.select(text_col), text_col, n_hashes, band_rows
-    )
-    ids = entities.select(
-        F.col(id_col), _text_key(text_col).alias("_tk")
-    )
-    buckets = ids.join(bands, "_tk").select(id_col, "band", "sig")
+    buckets = lsh_explode(
+        entities.select("entity_id", "surface"), "surface", n_hashes,
+        band_rows,
+    ).select("entity_id", "band", "sig")
     # bucket-size cap via aggregate (reuses the same hash partitioning
     # the join needs, so AQE collapses the exchanges)
     counts = buckets.groupBy("band", "sig").agg(F.count("*").alias("_n"))
     bounded = buckets.join(
         counts.filter(F.col("_n") <= max_bucket), ["band", "sig"]
     ).drop("_n")
-    a = bounded.select("band", "sig", F.col(id_col).alias("a"))
-    b = bounded.select("band", "sig", F.col(id_col).alias("b"))
+    a = bounded.select("band", "sig", F.col("entity_id").alias("a"))
+    b = bounded.select("band", "sig", F.col("entity_id").alias("b"))
     pairs = (
         a.join(b, ["band", "sig"])
         .filter(F.col("a") < F.col("b"))
         .select("a", "b")
     )
-    if oversize == "chain":
-        from pyspark.sql import Window
-
-        big = buckets.join(
-            counts.filter(F.col("_n") > max_bucket), ["band", "sig"]
-        ).drop("_n")
-        # Two-level salted chain: a pathological bucket (10^8 identical
-        # docs) must not land in ONE window task. Level 1 chains within
-        # a salt cell (task rows ~ m/chain_salts); level 2 chains the
-        # per-cell minima (task rows <= chain_salts). Union is still a
-        # spanning tree of the bucket: every member reaches its cell
-        # minimum, and cell minima reach each other.
-        salted = big.withColumn(
-            "_salt", F.pmod(F.xxhash64(F.lit("chain"), F.col(id_col)),
-                            F.lit(chain_salts))
-        )
-        w1 = Window.partitionBy("band", "sig", "_salt").orderBy(id_col)
-        within = (
-            salted.withColumn("_nx", F.lead(id_col).over(w1))
-            .filter(F.col("_nx").isNotNull())
-            .select(F.col(id_col).alias("a"), F.col("_nx").alias("b"))
-        )
-        minima = salted.groupBy("band", "sig", "_salt").agg(
-            F.min(id_col).alias("_m")
-        )
-        w2 = Window.partitionBy("band", "sig").orderBy("_m")
-        across = (
-            minima.withColumn("_nx", F.lead("_m").over(w2))
-            .filter(F.col("_nx").isNotNull())
-            .select(F.col("_m").alias("a"), F.col("_nx").alias("b"))
-        )
-        pairs = pairs.unionByName(within).unionByName(across)
-    elif oversize != "drop":
-        raise ValueError(f"oversize must be 'chain' or 'drop': {oversize}")
-    return pairs.distinct()
+    big = buckets.join(
+        counts.filter(F.col("_n") > max_bucket), ["band", "sig"]
+    ).drop("_n")
+    # Two-level salted chain: a pathological bucket (10^8 identical
+    # docs) must not land in ONE window task. Level 1 chains within a
+    # salt cell (task rows ~ m/CHAIN_SALTS); level 2 chains the per-cell
+    # minima (task rows <= CHAIN_SALTS). Union is still a spanning tree
+    # of the bucket: every member reaches its cell minimum, and cell
+    # minima reach each other.
+    salted = big.withColumn(
+        "_salt", F.pmod(F.xxhash64(F.lit("chain"), F.col("entity_id")),
+                        F.lit(CHAIN_SALTS))
+    )
+    w1 = Window.partitionBy("band", "sig", "_salt").orderBy("entity_id")
+    within = (
+        salted.withColumn("_nx", F.lead("entity_id").over(w1))
+        .filter(F.col("_nx").isNotNull())
+        .select(F.col("entity_id").alias("a"), F.col("_nx").alias("b"))
+    )
+    minima = salted.groupBy("band", "sig", "_salt").agg(
+        F.min("entity_id").alias("_m")
+    )
+    w2 = Window.partitionBy("band", "sig").orderBy("_m")
+    across = (
+        minima.withColumn("_nx", F.lead("_m").over(w2))
+        .filter(F.col("_nx").isNotNull())
+        .select(F.col("_m").alias("a"), F.col("_nx").alias("b"))
+    )
+    return pairs.unionByName(within).unionByName(across).distinct()

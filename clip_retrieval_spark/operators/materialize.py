@@ -19,9 +19,8 @@ from pyspark.sql import functions as F
 
 from pyspark.sql import Column
 
-from clip_retrieval_spark.functions.vectors import dot
 from clip_retrieval_spark.operators.cc import connected_components
-from clip_retrieval_spark.operators.lsh import candidate_pairs
+from clip_retrieval_spark.operators.link import entity_pairs
 
 # corporate-designator tokens dropped during surface normalization —
 # standard entity-resolution blocking (public technique), all lowercase
@@ -55,18 +54,29 @@ def normalized_surface(col: Column | str) -> Column:
 def entity_merge_edges(
     entities: DataFrame,
     threshold: float = 0.85,
-    max_bucket: int = 256,
 ) -> DataFrame:
-    """Alias-merge graph from two edge sources, unioned:
+    """Alias-merge graph (src, dst) from two edge sources, unioned:
 
     1. normalization-equality edges — entities sharing a normalized
        surface link to the min entity_id of the group (groupBy on the
-       norm key: algebraic, map-side combined, skew-safe);
-    2. LSH candidates + exact cosine >= threshold — the scale path that
-       replaces the reference's O(n^2) 0.94 range-search self-join
-       feeding its dedup CC (reference clip_back.py:290-301); threshold
-       sits above the cross-entity similarity band so it only adds
-       typo-level variants.
+       norm key: algebraic, map-side combined, skew-safe), so src > dst;
+    2. cosine edges — the ``link.entity_pairs`` rows with src <
+       entity_id and score >= threshold: the scale path that replaces
+       the reference's O(n^2) 0.94 range-search self-join feeding its
+       dedup CC (reference clip_back.py:290-301); threshold sits above
+       the cross-entity similarity band so it only adds typo-level
+       variants.
+
+    The cosine edges block and score the entity table exactly as
+    linking does, so the build has one blocking path for it, and its
+    cost is the pairs linking already scores over the same buckets.
+    Every pair sharing an LSH bucket is verified, with no bucket cap.
+    Against the capped self-join of ``lsh.candidate_pairs`` (256
+    surfaces, a spanning chain above that) the edge set is identical
+    while no bucket exceeds the cap; above it, this path verifies every
+    pair rather than chain neighbours, so it can only add merges, each
+    with cosine >= threshold. No entity table measured had a bucket
+    above 92 surfaces.
     """
     norm = entities.select(
         "entity_id", normalized_surface("surface").alias("nkey")
@@ -77,20 +87,13 @@ def entity_merge_edges(
         .filter(F.col("entity_id") != F.col("root"))
         .select(F.col("entity_id").alias("src"), F.col("root").alias("dst"))
     )
-
-    cand = candidate_pairs(entities, max_bucket=max_bucket)
-    ea = entities.select(
-        F.col("entity_id").alias("a"), F.col("embedding").alias("emb_a")
-    )
-    eb = entities.select(
-        F.col("entity_id").alias("b"), F.col("embedding").alias("emb_b")
-    )
     cos_edges = (
-        cand.join(ea, "a")
-        .join(eb, "b")
-        .withColumn("score", dot("emb_a", "emb_b"))
-        .filter(F.col("score") >= threshold)
-        .select(F.col("a").alias("src"), F.col("b").alias("dst"))
+        entity_pairs(entities)
+        .filter(
+            (F.col("src") < F.col("entity_id"))
+            & (F.col("score") >= threshold)
+        )
+        .select("src", F.col("entity_id").alias("dst"))
     )
     return norm_edges.unionByName(cos_edges)
 

@@ -18,11 +18,19 @@ stage-3/4 chain; ``run`` and ``refresh_downstream`` differ only in the
 step that materializes each stage. Stage 3 embeds each distinct
 surface once, into ``entities``; ``surface_links`` links that table
 against itself, scoring the embeddings it holds, and ``links`` fans the
-surface links out to mentions.
+surface links out to mentions. ``nodes`` merges aliases over the same
+scored pairs (``link.entity_pairs``), each stage evaluating them itself.
 
 Skew posture: bucket keys are url-hash (uniform regardless of
-head-domain skew); entity-side skew inside stages 3/4 is handled by the
-LSH bucket cap + AQE skew-join (see operators.lsh / operators.cc).
+head-domain skew). Stages 3/4 block the entity table, one row per
+distinct surface, through ``link.entity_pairs``: a broadcast join that
+scores every pair of an LSH bucket, with no bucket cap, since mention
+skew collapses into one row per surface before blocking. A bucket of m
+surfaces costs m^2 pairs, so a surface table with huge buckets would
+show there first; on every entity table measured no bucket held more
+than 92 surfaces (the document-side cap, ``lsh.candidate_pairs``, is
+256). Connected components absorbs hub skew by map-side combine + AQE
+skew-join (see operators.cc).
 """
 
 from __future__ import annotations

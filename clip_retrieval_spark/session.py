@@ -44,7 +44,6 @@ def get_spark(
     master: str | None = None,
     app_name: str = "clip-retrieval-spark",
     shuffle_partitions: int | None = None,
-    arrow_batch: int = DEFAULT_ARROW_BATCH,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or reuse) a SparkSession with engine defaults.
@@ -76,7 +75,9 @@ def get_spark(
         "spark.sql.adaptive.coalescePartitions.enabled": "true",
         "spark.sql.adaptive.skewJoin.enabled": "true",
         "spark.sql.execution.arrow.pyspark.enabled": "true",
-        "spark.sql.execution.arrow.maxRecordsPerBatch": str(arrow_batch),
+        "spark.sql.execution.arrow.maxRecordsPerBatch": str(
+            DEFAULT_ARROW_BATCH
+        ),
         "spark.sql.session.timeZone": "UTC",
         # reuse Python workers so what a worker imports and builds once
         # (mapInArrow/mapInPandas closures, the zip directories kept by

@@ -3,7 +3,9 @@ canonicalization quality on the alias vocabulary."""
 
 from __future__ import annotations
 
+import hashlib
 import random
+import string
 
 import pytest
 
@@ -15,6 +17,7 @@ from clip_retrieval_spark.operators.cc import connected_components
 from clip_retrieval_spark.operators.embed import entities_df, mentions_df
 from clip_retrieval_spark.operators.extract import extract_pages
 from clip_retrieval_spark.operators.link import surface_link_topk
+from clip_retrieval_spark.operators.lsh import lsh_explode
 from clip_retrieval_spark.operators.materialize import (
     canonical_map,
     entity_merge_edges,
@@ -168,3 +171,108 @@ def test_materialized_edges_conserve_triples(stage4):
     assert kg.filter(
         "canonical_subj is null or canonical_obj is null"
     ).count() == 0
+
+
+# corporate designators from materialize.ORG_SUFFIXES, in display case
+_SUFFIXES = ("Corp", "Inc", "Labs", "Holdings", "Group", "Ltd", "Systems")
+
+
+def _variant_surfaces(n_stems: int = 130, seed: int = 12) -> list[str]:
+    """Seeded alias vocabulary: random stems, each with typo variants
+    (adjacent swap, dropped letter, doubled letter) and corporate-suffix
+    variants — the near-duplicate shape the alias merge exists for."""
+    rng = random.Random(seed)
+    out: set[str] = set()
+    for _ in range(n_stems):
+        w = "".join(
+            rng.choice(string.ascii_lowercase)
+            for _ in range(rng.randint(5, 10))
+        ).capitalize()
+        i = rng.randrange(1, len(w) - 1)
+        out.update((
+            w,
+            w[:i] + w[i + 1] + w[i] + w[i + 2:],
+            w[:i] + w[i + 1:],
+            w[:i] + w[i] + w[i:],
+            f"{w} {rng.choice(_SUFFIXES)}",
+            f"{w[:i] + w[i + 1:]} {rng.choice(_SUFFIXES)}",
+        ))
+    return sorted(out)
+
+
+@pytest.fixture(scope="module")
+def variant_entities(spark):
+    surfaces = _variant_surfaces()
+    assert len(surfaces) >= 500
+    return entities_df(
+        spark.createDataFrame([(s,) for s in surfaces], "surface string")
+    ).cache()
+
+
+# md5 of the sorted "src,dst" lines of entity_merge_edges(e, t) on the
+# 778-surface variant table (295 and 261 edges), taken with the merge's
+# own LSH self-join before it reused linking's blocking step
+MERGE_EDGE_MD5 = {
+    0.85: "f3cb6f9dae600ec89ce06da90a27eb13",
+    0.95: "5b8c808866029c01db8f4bb55c820b34",
+}
+
+
+@pytest.mark.parametrize("threshold", sorted(MERGE_EDGE_MD5))
+def test_merge_edges_pinned_on_variant_table(variant_entities, threshold):
+    rows = sorted(
+        (r["src"], r["dst"])
+        for r in entity_merge_edges(variant_entities, threshold).collect()
+    )
+    got = hashlib.md5(
+        "\n".join(f"{a},{b}" for a, b in rows).encode()
+    ).hexdigest()
+    assert got == MERGE_EDGE_MD5[threshold], (len(rows), got)
+
+
+def test_variant_table_buckets_stay_small(variant_entities):
+    """The pins above hold for any blocking that scores every pair of a
+    shared LSH bucket; this keeps every bucket of the table well below
+    256 surfaces, where a bucket cap would change the edge set."""
+    largest = (
+        lsh_explode(variant_entities, "surface")
+        .groupBy("band", "sig").count()
+        .agg(F.max("count")).collect()[0][0]
+    )
+    assert largest < 256
+
+
+def _dot64(a, b) -> float:
+    acc = 0.0
+    for x, y in zip(a, b):
+        acc += float(x) * float(y)
+    return acc
+
+
+@pytest.mark.parametrize("threshold", [0.85, 0.95])
+def test_merge_cosine_edges_are_exactly_the_banded_pairs(stage4, threshold):
+    """Normalization edges point at the group minimum (src > dst), so
+    the src < dst rows are the cosine edges: each scores >= threshold
+    (float64, left to right), and every pair sharing an LSH band that
+    scores >= threshold is one of them."""
+    _tr, _m, e, _links, _nodes = stage4
+    emb = {r["entity_id"]: r["embedding"] for r in e.collect()}
+    cos = {
+        (r["src"], r["dst"])
+        for r in entity_merge_edges(e, threshold).collect()
+        if r["src"] < r["dst"]
+    }
+    assert all(_dot64(emb[a], emb[b]) >= threshold for a, b in cos)
+    buckets: dict = {}
+    for r in lsh_explode(e, "surface").select(
+        "band", "sig", "entity_id"
+    ).collect():
+        buckets.setdefault((r["band"], r["sig"]), set()).add(r["entity_id"])
+    banded = {
+        (a, b)
+        for ids in buckets.values()
+        for a in ids
+        for b in ids
+        if a < b and _dot64(emb[a], emb[b]) >= threshold
+    }
+    assert banded <= cos

@@ -20,7 +20,11 @@ from clip_retrieval_spark.operators.embed import (
     stable_id63,
 )
 from clip_retrieval_spark.operators.extract import extract_pages
-from clip_retrieval_spark.operators.lsh import candidate_pairs, lsh_explode
+from clip_retrieval_spark.operators.lsh import (
+    CHAIN_SALTS,
+    candidate_pairs,
+    lsh_explode,
+)
 from clip_retrieval_spark.operators.link import (
     MIN_SCORE,
     mention_links,
@@ -220,7 +224,6 @@ def test_candidate_pairs_bucket_cap(spark):
     edges = {(r["a"], r["b"]) for r in chained}
     assert len(edges) == 299  # exactly m-1 distinct edges
     assert _is_spanning_tree(edges, set(range(300)))
-    assert candidate_pairs(df, max_bucket=100, oversize="drop").count() == 0
     assert candidate_pairs(df, max_bucket=1000).count() == 300 * 299 // 2
 
 
@@ -228,18 +231,16 @@ def test_candidate_pairs_pathological_bucket_bounded_tasks(spark):
     # A 10^5-member single-signature bucket: the two-level salted chain
     # must (a) still connect every member into ONE component and (b)
     # never put the whole bucket into one window task — the largest
-    # within-cell window group is ~m/chain_salts.
+    # within-cell window group is ~m/CHAIN_SALTS.
     from pyspark.sql import functions as F
 
-    m, salts = 100_000, 64
+    m, salts = 100_000, CHAIN_SALTS
     df = spark.range(m).select(
         F.col("id").alias("entity_id"), F.lit("hot").alias("surface")
     )
     edges = {
         (r["a"], r["b"])
-        for r in candidate_pairs(
-            df, max_bucket=1000, chain_salts=salts
-        ).collect()
+        for r in candidate_pairs(df, max_bucket=1000).collect()
     }
     assert len(edges) == m - 1
     assert _is_spanning_tree(edges, set(range(m)))
