@@ -1552,8 +1552,8 @@ def _kg_stage_tables(spark: SparkSession, sf: str):
     # e is tiny (one row per distinct surface) but its lineage is a
     # distinct-exchange + Python embed over ALL mentions, and the
     # stage-3/4 gates fan it into several branches (both sides of the
-    # LSH self-join — lsh_explode consumes it twice — plus the surface
-    # projection): pin it once
+    # LSH self-join, each computing its band projection from e, plus
+    # the surface projection): pin it once
     e = entities_df(m).localCheckpoint(eager=True)
     return tr, m, e
 

@@ -61,11 +61,14 @@ def near_dedup_minhash(
     shingle_words: int = 3,
     max_bucket: int = 512,
 ) -> DataFrame:
-    """Near-dup groups via word-shingle MinHash-LSH + exact Jaccard
+    """Near-dup groups via MinHash-LSH + exact word-shingle Jaccard
     verify + connected components. Returns (id, canonical_id).
 
-    Pipeline: shingle -> minhash/band (JVM) -> bucket join ->
+    Pipeline: word shingles -> minhash/band (JVM) -> bucket join ->
     exact-Jaccard re-check on candidates only -> CC -> min-id keeper.
+    The signature is ``lsh.candidate_pairs``' own: over the character
+    3-grams of the ``\\x1f``-joined word shingles, not over the word
+    shingles themselves; the Jaccard verify uses the word shingles.
     The verify step kills LSH false positives, so the output depends on
     the threshold, not on banding luck.
     """

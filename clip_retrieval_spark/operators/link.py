@@ -6,9 +6,10 @@ The Spark restatement of the reference's knn query path
 of one HTTP request at a time (clip_back.py:472-507).
 
 One physical strategy, ``entity_pairs``: the entity table is joined to
-itself on shared MinHash-LSH band keys, one band table feeding both
-sides, with ``F.broadcast`` on the linked side, so the candidate join
-is a broadcast-hash join. The entity table holds one row per distinct
+itself on shared MinHash-LSH band keys, each side computing the band
+table as a narrow per-row projection (``lsh.lsh_explode``), with
+``F.broadcast`` on the linked side, so the candidate join is a
+broadcast-hash join. The entity table holds one row per distinct
 surface, already embedded, so the pairs are scored by the embeddings it
 holds and no Python runs. Linking keeps each surface's top k of them;
 the stage-4 alias merge (``materialize.entity_merge_edges``) keeps the
@@ -44,8 +45,9 @@ def entity_pairs(entities: DataFrame) -> DataFrame:
     ``entity_id``/``_e_surface``/``e_emb`` the linked side, ``score``
     their cosine; both orders and the self-pair are present.
 
-    Both sides read one band table and the linked side is broadcast, so
-    the candidate join is a broadcast-hash join. A bucket of m rows
+    Both sides compute the same narrow band projection and the linked
+    side is broadcast, so the candidate join is a broadcast-hash join
+    and the only shuffle is the pair dedup. A bucket of m rows
     yields m^2 pairs with no cap: this fits the entity table (one row
     per distinct surface), not a document corpus, which blocks through
     ``lsh.candidate_pairs`` instead."""

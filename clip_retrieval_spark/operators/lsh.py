@@ -4,15 +4,18 @@ range_search self-join at clip_back.py:290-301).
 
 Everything here is JVM-side (higher-order functions + xxhash64): shingle
 -> minhash -> band -> explode -> equi-join. No Python in the hot path.
+The signature and band keys are narrow per-row expressions
+(``lsh_explode``); the only shuffles are the consumers' bucket joins.
 The band count is the recall/cost knob — the analog of the reference's
 dynamic nprobe widening (clip_back.py:356-361).
 
 Two consumers. The entity table (one row per distinct surface) is
-blocked by ``link.entity_pairs``: ``lsh_explode`` on both sides of a
-broadcast join, every bucket pair scored, for linking and the alias
-merge alike. Document corpora (``dedup.near_dedup_minhash``) are too
-big to broadcast and go through ``candidate_pairs``: a shuffle self-join
-keyed by (band, signature) whose hot buckets are bounded by
+blocked by ``link.entity_pairs``: the ``lsh_explode`` projection on
+both sides of a broadcast join, every bucket pair scored, for linking
+and the alias merge alike. Document corpora
+(``dedup.near_dedup_minhash``) are too big to broadcast and go through
+``candidate_pairs``: a shuffle self-join keyed by (band, signature)
+whose hot buckets are bounded by
 ``max_bucket`` — an over-cap bucket contributes a spanning chain instead
 of its m^2 pairs, which keeps worst-case pair fanout linear in input;
 AQE skew-join splits what remains. The cap bounds document blocking
@@ -42,6 +45,13 @@ def char_shingles(col: Column) -> Column:
     )
 
 
+def _minhash(grams: Column, seed: str) -> Column:
+    """One MinHash: the min of a seeded xxhash64 over the shingles."""
+    return F.array_min(
+        F.transform(grams, lambda g: F.xxhash64(F.lit(seed), g))
+    )
+
+
 def lsh_explode(
     df: DataFrame,
     text_col: str,
@@ -50,56 +60,29 @@ def lsh_explode(
 ) -> DataFrame:
     """df + (band, sig) — one row per (input row, band).
 
-    Implemented as explode -> hash -> groupBy-min keyed on the 8-byte
-    ``xxhash64(text)``, not as one nested expression: inlining the
-    16-hash signature into 8 band keys blows the codegen expression
-    tree up ~n_hashes x n_bands and Janino compile time dominates
-    (measured: ~50 s on a 68-row input). The aggregate formulation
-    keeps every expression tiny and is algebraic (map-side combine) —
-    duplicate texts collapse in the combiner, so no distinct-text
-    pre-shuffle is needed.
+    Narrow: each row's signature is computed from its own shingles, so
+    the operator adds no exchange. The shingle array is one projected
+    column; each minhash is the min of its seeded xxhash64 over that
+    array and feeds exactly one band key, so no expression is written
+    twice and the generated code stays small. Duplicate texts are
+    hashed once per row, not once per distinct text.
 
-    Every shuffle in this operator (the signature agg and the join back
-    to ``df``) is keyed by the text's xxhash64, never the text itself:
-    near-dup corpora feed whole documents through here
-    (``dedup.near_dedup_minhash``), and raw-text keys would move the
-    corpus byte volume through the shuffle twice. A 64-bit key collision
-    merges two texts' gram sets (min over the union), which can only
-    perturb candidate generation; callers verify candidates exactly
-    (Jaccard / cosine), so collisions cost recall ~2^-64, not
-    correctness.
+    Cost: a caller that reads the band table twice computes it twice.
+    ``link.entity_pairs`` puts it on both sides of its broadcast join,
+    so each distinct surface costs 2 x n_hashes ``array_min`` — where a
+    shuffled signature table (explode, aggregate, join back) would be
+    computed once and its shuffle output reused by both sides.
     """
-    # 8-byte shuffle key standing in for the raw text
-    tk = F.xxhash64(F.lit("lshk"), F.col(text_col))
-    n_bands = n_hashes // band_rows
-    grams = df.select(
-        tk.alias("_tk"),
-        F.explode(char_shingles(F.col(text_col))).alias("_g"),
-    )
-    hashed = grams.select(
-        "_tk",
-        *[
-            F.xxhash64(F.lit(f"mh{i}"), F.col("_g")).alias(f"_h{i}")
-            for i in range(n_hashes)
-        ],
-    )
-    sigs = hashed.groupBy("_tk").agg(
-        *[F.min(f"_h{i}").alias(f"_mh{i}") for i in range(n_hashes)]
-    )
-    band_structs = [
+    grams = df.withColumn("_g", char_shingles(F.col(text_col)))
+    mh = [_minhash(F.col("_g"), f"mh{i}") for i in range(n_hashes)]
+    bands = [
         F.struct(
             F.lit(b).alias("band"),
-            F.xxhash64(
-                *[F.col(f"_mh{b * band_rows + r}") for r in range(band_rows)]
-            ).alias("sig"),
+            F.xxhash64(*mh[b * band_rows:(b + 1) * band_rows]).alias("sig"),
         )
-        for b in range(n_bands)
+        for b in range(n_hashes // band_rows)
     ]
-    bands = sigs.withColumn(
-        "_b", F.explode(F.array(*band_structs))
-    ).select("_tk", F.col("_b.band").alias("band"),
-             F.col("_b.sig").alias("sig"))
-    return df.withColumn("_tk", tk).join(bands, "_tk").drop("_tk")
+    return grams.select(*df.columns, F.inline(F.array(*bands)))
 
 
 def candidate_pairs(
@@ -130,8 +113,8 @@ def candidate_pairs(
     practice.
 
     Shuffle-byte discipline: only (id, band, sig) rows ever shuffle —
-    the text column stays in the narrow key projection (see
-    ``lsh_explode``) and never rides a join or window exchange.
+    the text column stays in the narrow signature projection
+    (``lsh_explode``) and never rides a join or window exchange.
     """
     buckets = lsh_explode(
         entities.select("entity_id", "surface"), "surface", n_hashes,

@@ -55,7 +55,7 @@ def main(argv: list[str] | None = None) -> dict:
     )
 
     t0 = time.monotonic()
-    spark = get_spark(master=args.master) if args.master else get_spark()
+    spark = get_spark(master=args.master)
     store = TableStore(spark, args.kg_dir)
     edges = store.read(STAGE_TABLES["edges"])
     nodes = store.read(STAGE_TABLES["nodes"])

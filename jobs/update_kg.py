@@ -82,7 +82,7 @@ def main(argv: list[str] | None = None) -> dict:
     )
 
     t0 = time.monotonic()
-    spark = get_spark(master=args.master) if args.master else get_spark()
+    spark = get_spark(master=args.master)
     store = SnapshotStore(spark, args.store)
 
     if args.rollback is not None:

@@ -230,6 +230,44 @@ def test_merge_edges_pinned_on_variant_table(variant_entities, threshold):
     assert got == MERGE_EDGE_MD5[threshold], (len(rows), got)
 
 
+# md5 of the sorted "entity_id,band,sig" lines of lsh_explode(e,
+# "surface"), taken while the signatures were a groupBy over exploded
+# shingle rows joined back on a text-hash key: 6,224 rows for the
+# variant table, 64 for the edge-case table below
+LSH_EXPLODE_MD5 = {
+    "variant": "2b2a1e6c09f4fbb90be36c83f34c1640",
+    "edge": "212f38655055a9e0d432b3388a7f7c2f",
+}
+
+
+def _edge_surfaces(spark):
+    """null, empty, shorter than a shingle, one surface on two rows,
+    non-ASCII text and a 500-character string."""
+    long_text = "".join(chr(97 + (i * 7) % 26) for i in range(500))
+    return spark.createDataFrame(
+        [
+            (1, None), (2, ""), (3, "a"), (4, "ab"), (5, "Acme Corp"),
+            (6, "Acme Corp"), (7, "Zürich Straße 東京"), (8, long_text),
+        ],
+        "entity_id long, surface string",
+    )
+
+
+@pytest.mark.parametrize("table", sorted(LSH_EXPLODE_MD5))
+def test_lsh_explode_pinned(spark, variant_entities, table):
+    df = variant_entities if table == "variant" else _edge_surfaces(spark)
+    out = lsh_explode(df, "surface")
+    assert out.columns == [*df.columns, "band", "sig"]
+    rows = sorted(
+        (r["entity_id"], r["band"], r["sig"])
+        for r in out.select("entity_id", "band", "sig").collect()
+    )
+    got = hashlib.md5(
+        "\n".join(f"{i},{b},{s}" for i, b, s in rows).encode()
+    ).hexdigest()
+    assert got == LSH_EXPLODE_MD5[table], (len(rows), got)
+
+
 def test_variant_table_buckets_stay_small(variant_entities):
     """The pins above hold for any blocking that scores every pair of a
     shared LSH bucket; this keeps every bucket of the table well below

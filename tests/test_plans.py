@@ -195,10 +195,12 @@ def test_pq_encode_is_narrow(spark):
 
 
 def test_lsh_band_join_keys_are_longs(spark):
-    """The LSH distinct/band shuffles must be keyed by xxhash64(text)
+    """The bucket shuffles of candidate_pairs (bucket counts, the
+    self-join, the chain windows) must be keyed by (band, sig) and ids
     (8-byte longs), never the raw text: near-dup dedup feeds whole
     documents through this path, and a string key would move corpus
-    byte volume through every exchange."""
+    byte volume through every exchange. The signatures themselves are
+    computed per row, with no shuffle (test_lsh_explode_is_narrow)."""
     from pyspark.sql import functions as F
 
     from clip_retrieval_spark.operators.lsh import candidate_pairs
@@ -216,6 +218,34 @@ def test_lsh_band_join_keys_are_longs(spark):
     # xxhash64 output — no exchange keyed on the surface string
     assert not re.search(r"hashpartitioning\([^)]*surface", p), p
     assert not re.search(r"hashpartitioning\(_t#", p), p
+
+
+def test_lsh_explode_is_narrow(spark, tmp_path):
+    """lsh_explode computes each row's MinHash signature from its own
+    shingles: its plan has no exchange. entity_pairs then costs one
+    broadcast of the linked side's band table and one hash exchange,
+    the dropDuplicates of the scored pairs."""
+    from clip_retrieval_spark.operators.embed import entities_df
+    from clip_retrieval_spark.operators.link import entity_pairs
+    from clip_retrieval_spark.operators.lsh import lsh_explode
+
+    surfaces = [f"Entity{i}" for i in range(40)] + ["Acme Corp", "Acme"]
+    entities_df(
+        spark.createDataFrame([(s,) for s in surfaces], "surface string")
+    ).write.parquet(str(tmp_path / "entities"))
+    e = spark.read.parquet(str(tmp_path / "entities"))
+
+    def formatted(df) -> str:
+        buf = io.StringIO()
+        with contextlib.redirect_stdout(buf):
+            df.explain("formatted")
+        return buf.getvalue()
+
+    p = formatted(lsh_explode(e, "surface"))
+    assert "Exchange" not in p, p
+    p = formatted(entity_pairs(e))
+    exchanges = re.findall(r"^\(\d+\) (\w*Exchange)\b", p, re.M)
+    assert sorted(exchanges) == ["BroadcastExchange", "Exchange"], p
 
 
 def test_semantic_dedup_one_keyed_shuffle_broadcast_codebook(spark):
