@@ -54,7 +54,7 @@ def main() -> None:
             .select(F.col("a").alias("src"), F.col("b").alias("dst"))
         )
         t2 = time.time()
-        und = undirect(edges, "src", "dst").localCheckpoint(eager=True)
+        und = undirect(edges).localCheckpoint(eager=True)
         n_edges = und.count()
         t3 = time.time()
 

@@ -509,10 +509,10 @@ def _toks(col: str | F.Column = "text") -> F.Column:
     return F.filter(F.split(col, " "), lambda x: x != "")
 
 
-def _tok_arr(col: str = "text") -> F.Column:
-    """Distinct non-empty tokens of one document (``_toks`` ->
-    array_distinct)."""
-    return F.array_distinct(_toks(col))
+def _tok_arr() -> F.Column:
+    """Distinct non-empty tokens of one document's ``text`` (``_toks``
+    -> array_distinct)."""
+    return F.array_distinct(_toks("text"))
 
 
 def _bigram_arr() -> F.Column:
@@ -1411,7 +1411,7 @@ FROM expected ORDER BY qid, rank
 
 def docs_as_pages(spark: SparkSession, sf: str) -> DataFrame:
     """documents -> pages(url, warc_ts, html, text, lang)."""
-    # _t_spread: the pages feed mapInPandas extract stages whose
+    # _t_spread: the pages feed mapInArrow extract stages whose
     # per-page Python cost dwarfs the shuffle of the raw doc rows; a
     # single-row-group file would run the whole extract on one core
     d = _t_spread(spark, sf, "documents", "doc_id")
@@ -1862,7 +1862,7 @@ def near_dedup_documents(spark: SparkSession, sf: str) -> DataFrame:
     docs = _t_spread(spark, sf, "documents", "doc_id").select("doc_id", "text")
     return near_dedup_minhash(
         docs, "doc_id", "text", jaccard_threshold=0.8,
-        n_hashes=16, band_rows=1, max_bucket=1 << 20,
+        band_rows=1, max_bucket=1 << 20,
     ).orderBy("doc_id")
 
 
@@ -2049,7 +2049,7 @@ def ann_ivf_topk(spark: SparkSession, sf: str) -> DataFrame:
     )
     return (
         ivf_topk(
-            q, c, cents, k=5, nprobe=4, exclude_self=True, round_to=6
+            q, c, cents, k=5, nprobe=4, exclude_self=True
         )
         .withColumnRenamed("rank", "rnk")
         .orderBy("qid", "rnk")
@@ -2115,7 +2115,7 @@ def kmeans_assign2(spark: SparkSession, sf: str) -> DataFrame:
     # _t_spread: the single-row-group embeddings file would pin every
     # assignment fold to one scan task (guide §2.5)
     emb = _t_spread(spark, sf, "embeddings", "vec_id")
-    return kmeans_assign(emb, k=8, iterations=2).orderBy("vec_id")
+    return kmeans_assign(emb, k=8).orderBy("vec_id")
 
 
 _KM_ASSIGN = """

@@ -334,6 +334,8 @@ def decode_jpeg(data: bytes) -> np.ndarray:
             comps = []
             for i in range(nc):
                 cid, hv, tq = seg[6 + 3 * i : 9 + 3 * i]
+                if not (1 <= hv >> 4 <= 4 and 1 <= hv & 0xF <= 4):
+                    raise ValueError(f"bad sampling factor {hv:#04x}")
                 comps.append(
                     {"id": cid, "h": hv >> 4, "v": hv & 0xF, "tq": tq}
                 )
@@ -353,8 +355,8 @@ def decode_jpeg(data: bytes) -> np.ndarray:
         elif marker == 0xDA:  # SOS — entropy data follows
             if frame is None:
                 raise ValueError("SOS before SOF")
-            ns = seg[0]
-            if len(seg) < 1 + 2 * ns + 3:
+            ns = seg[0] if seg else 0
+            if ns == 0 or len(seg) < 1 + 2 * ns + 3:
                 raise ValueError("short SOS header")
             if progressive:
                 scan = []

@@ -23,6 +23,7 @@ import numpy as np
 
 PNG_SIGNATURE = b"\x89PNG\r\n\x1a\n"
 _CHANNELS = {0: 1, 2: 3, 3: 1, 4: 2, 6: 4}
+GRID = 4  # grid_luminance_features: GRID x GRID cells
 
 
 def _unfilter(raw: bytes, height: int, stride: int, bpp: int) -> bytearray:
@@ -169,19 +170,19 @@ def resize_nearest(arr: np.ndarray, out_h: int, out_w: int) -> np.ndarray:
     return arr[ri][:, ci]
 
 
-def grid_luminance_features(arr: np.ndarray, grid: int = 4) -> np.ndarray:
-    """Real image feature: mean luminance over a grid x grid partition,
-    in [0,1] float64 (grid*grid dims). Deterministic, content-derived."""
+def grid_luminance_features(arr: np.ndarray) -> np.ndarray:
+    """Real image feature: mean luminance over a GRID x GRID partition,
+    in [0,1] float64 (GRID*GRID dims). Deterministic, content-derived."""
     a = arr.astype(np.float64)
     if a.ndim == 3 and a.shape[2] >= 3:
         lum = 0.299 * a[:, :, 0] + 0.587 * a[:, :, 1] + 0.114 * a[:, :, 2]
     else:
         lum = a[:, :, 0] if a.ndim == 3 else a
     h, w = lum.shape
-    out = np.empty(grid * grid, dtype=np.float64)
-    for gy in range(grid):
-        for gx in range(grid):
-            ys = slice(gy * h // grid, max((gy + 1) * h // grid, gy * h // grid + 1))
-            xs = slice(gx * w // grid, max((gx + 1) * w // grid, gx * w // grid + 1))
-            out[gy * grid + gx] = lum[ys, xs].mean() / 255.0
+    out = np.empty(GRID * GRID, dtype=np.float64)
+    for gy in range(GRID):
+        for gx in range(GRID):
+            ys = slice(gy * h // GRID, max((gy + 1) * h // GRID, gy * h // GRID + 1))
+            xs = slice(gx * w // GRID, max((gx + 1) * w // GRID, gx * w // GRID + 1))
+            out[gy * GRID + gx] = lum[ys, xs].mean() / 255.0
     return out

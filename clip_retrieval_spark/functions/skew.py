@@ -21,12 +21,12 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def with_salt(df: DataFrame, n_salts: int, salt_col: str = "_salt") -> DataFrame:
-    """Deterministic per-row salt in [0, n_salts) — hash of the whole
-    row would be ideal but any high-cardinality column mix works;
+def with_salt(df: DataFrame, n_salts: int) -> DataFrame:
+    """Deterministic per-row salt ``_salt`` in [0, n_salts) — hash of
+    the whole row would be ideal but any high-cardinality column mix works;
     monotonically_increasing_id is avoided (nondeterministic on rerun)."""
     return df.withColumn(
-        salt_col,
+        "_salt",
         F.pmod(F.xxhash64(*df.columns), F.lit(n_salts)).cast("int"),
     )
 
@@ -71,9 +71,8 @@ def salted_join(
     small: DataFrame,
     key: str,
     n_salts: int = 16,
-    how: str = "inner",
 ) -> DataFrame:
-    """Equi-join where ``big`` has skewed keys: salt the big side,
+    """Inner equi-join where ``big`` has skewed keys: salt the big side,
     replicate the small side across all salts (explode), join on
     (key, salt). Small side grows n_salts x — keep it genuinely small
     (or AQE-broadcastable, in which case prefer broadcast and skip
@@ -83,4 +82,4 @@ def salted_join(
         "_salt",
         F.explode(F.array(*[F.lit(i) for i in range(n_salts)])),
     )
-    return big_s.join(small_s, [key, "_salt"], how).drop("_salt")
+    return big_s.join(small_s, [key, "_salt"]).drop("_salt")

@@ -26,13 +26,11 @@ def asof_join(
     left: DataFrame,
     right: DataFrame,
     on: str,
-    left_ts: str = "ts",
-    right_ts: str = "ts",
     tie_break: str | None = None,
     strict: bool = False,
 ) -> DataFrame:
     """Attach to each ``left`` row the latest ``right`` row per ``on``
-    key with ``right_ts <= left_ts`` (``strict=True``: ``<``).
+    key with ``right.ts <= left.ts`` (``strict=True``: ``<``).
 
     ``tie_break`` names a right column used to order rows that share a
     timestamp (latest wins) and, interleaved at equal instants, to keep
@@ -48,14 +46,14 @@ def asof_join(
     l_side = 1 - r_side
     r = right.select(
         F.col(on),
-        F.col(right_ts).alias("_ts"),
+        F.col("ts").alias("_ts"),
         F.lit(r_side).alias("_side"),
         F.struct(*[F.col(c) for c in rcols]).alias("_r"),
     )
     lcols = left.columns
     lf = left.select(
         F.col(on),
-        F.col(left_ts).alias("_ts"),
+        F.col("ts").alias("_ts"),
         F.lit(l_side).alias("_side"),
         F.lit(None).cast(r.schema["_r"].dataType).alias("_r"),
         F.struct(*[F.col(c) for c in lcols]).alias("_l"),

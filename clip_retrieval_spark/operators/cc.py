@@ -15,7 +15,7 @@ Scale mechanics:
   SURVEY.md §4 item 2) so plans don't grow unboundedly;
 * expected O(log n) rounds; the loop stops at the first round whose
   output is a star forest (the fixpoint), with no extra confirming
-  round; ``max_iter`` bounds runaways and raises.
+  round; ``MAX_ITER`` rounds bound runaways and raise.
 
 All functions take/return edge DataFrames with columns (src, dst).
 """
@@ -24,6 +24,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+MAX_ITER = 50
 
 
 def _sym(edges: DataFrame) -> DataFrame:
@@ -92,28 +94,30 @@ def _is_star_forest(edges: DataFrame) -> bool:
     ).isEmpty()
 
 
-def connected_components(edges: DataFrame, max_iter: int = 50) -> DataFrame:
+def connected_components(edges: DataFrame) -> DataFrame:
     """edges(src long, dst long) -> assignments(node long, component long),
     component = min node id of the connected component.
 
     Isolated nodes (absent from ``edges``) are the caller's concern
     (see ``materialize.canonical_map``: they map to themselves).
+
+    The input needs no cleaning: ``_sym`` and ``_small_star`` drop
+    self-loops, and the first round's ``distinct`` absorbs duplicate
+    edges.
     """
-    cur = (
-        edges.select("src", "dst")
-        .filter(F.col("src") != F.col("dst"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    for _ in range(max_iter):
+    cur = edges.select("src", "dst").localCheckpoint(eager=True)
+    for _ in range(MAX_ITER):
         cur = _small_star(_large_star(cur)).localCheckpoint(eager=True)
         if _is_star_forest(cur):
             break
     else:
         raise RuntimeError(
-            f"connected_components: no fixpoint within {max_iter} iterations"
+            f"connected_components: no fixpoint within {MAX_ITER} iterations"
         )
-    # at fixpoint the graph is a forest of stars: src -> root(= component min)
+    # at fixpoint the graph is a forest of stars: src -> root(= component
+    # min). Every src has one dst and no dst is a src, so leaves and
+    # roots are disjoint and each is distinct: the union needs no
+    # distinct of its own
     roots = (
         cur.select(F.col("dst").alias("node"))
         .distinct()
@@ -122,4 +126,4 @@ def connected_components(edges: DataFrame, max_iter: int = 50) -> DataFrame:
     leaves = cur.select(
         F.col("src").alias("node"), F.col("dst").alias("component")
     )
-    return leaves.unionByName(roots).distinct()
+    return leaves.unionByName(roots)

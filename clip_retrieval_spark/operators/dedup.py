@@ -2,7 +2,8 @@
 
 The oracle-matched specializations live in entry_queries (md5-based so
 DuckDB can replay them bit-for-bit); these are the engine-grade versions
-for arbitrary tables: parameterized columns, xxhash64 (faster than md5,
+for arbitrary tables: the caller names the id and content columns
+(``semantic_dedup`` reads ``embedding``), xxhash64 (faster than md5,
 JVM-native), LSH blocking for near-dup, and canonical-keeper election.
 
 All operators follow the reference's dedup contract (clip_back.py:257-309:
@@ -56,12 +57,10 @@ def near_dedup_minhash(
     id_col: str,
     text_col: str,
     jaccard_threshold: float = 0.7,
-    n_hashes: int = 16,
     band_rows: int = 2,
-    shingle_words: int = 3,
     max_bucket: int = 512,
 ) -> DataFrame:
-    """Near-dup groups via MinHash-LSH + exact word-shingle Jaccard
+    """Near-dup groups via MinHash-LSH + exact word-3-shingle Jaccard
     verify + connected components. Returns (id, canonical_id).
 
     Pipeline: word shingles -> minhash/band (JVM) -> bucket join ->
@@ -77,11 +76,9 @@ def near_dedup_minhash(
         F.transform(
             F.sequence(
                 F.lit(0),
-                F.greatest(
-                    F.size(toks) - shingle_words, F.lit(0)
-                ),
+                F.greatest(F.size(toks) - 3, F.lit(0)),
             ),
-            lambda i: F.concat_ws(" ", F.slice(toks, i + 1, shingle_words)),
+            lambda i: F.concat_ws(" ", F.slice(toks, i + 1, 3)),
         )
     )
     base = df.select(
@@ -93,9 +90,7 @@ def near_dedup_minhash(
         F.col("_id").alias("entity_id"),
         F.concat_ws("\x1f", "_sh").alias("surface"),
     )
-    cand = candidate_pairs(
-        flat, max_bucket=max_bucket, n_hashes=n_hashes, band_rows=band_rows
-    )
+    cand = candidate_pairs(flat, max_bucket=max_bucket, band_rows=band_rows)
 
     # exact Jaccard verify on candidates only
     sh_a = base.select(F.col("_id").alias("a"), F.col("_sh").alias("sha"))
@@ -166,13 +161,11 @@ def semantic_dedup(
     centroids: DataFrame,
     threshold: float = 0.3,
     id_col: str = "vec_id",
-    vec_col: str = "embedding",
     block_rows: int = 1024,
-    round_to: int = 6,
     max_cell: int | None = None,
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023, arXiv:2303.09540) — semantic
-    dedup over an embedding column: cluster the space with the given
+    dedup over the ``embedding`` column: cluster the space with the given
     centroid codebook (operators.kmeans.assign_cells — broadcast
     codebook, narrow argmin, the corpus never shuffles for the
     assignment), then within each cluster drop every item whose
@@ -190,7 +183,7 @@ def semantic_dedup(
     Determinism contract: every dot product — the norm and the pairwise
     gram — produces exactly the value of a DIMENSION-ORDER fold,
     bit-identical to DuckDB's list_dot_product and to the JVM
-    F.aggregate fold of functions.vectors.dot, so ROUND(cos, round_to)
+    F.aggregate fold of functions.vectors.dot, so ROUND(cos, 6)
     agrees across engines. The gram fast path reorders the summation
     for speed but recomputes the exact fold inside a 1e-9 guard band
     around every rounding boundary (see _gram_rounded: the reordering
@@ -218,18 +211,14 @@ def semantic_dedup(
     from clip_retrieval_spark.operators.kmeans import assign_cells
 
     assigned = assign_cells(
-        emb.select(id_col, vec_col),
-        centroids,
-        id_col=id_col,
-        vec_col=vec_col,
-        round_to=round_to,
+        emb.select(id_col, "embedding"), centroids, id_col=id_col
     )
 
     def _gram_rounded(a: "np.ndarray", b: "np.ndarray") -> "np.ndarray":
-        """ROUND(gram, round_to) with output PROVABLY identical to the
+        """ROUND(gram, 6) with output PROVABLY identical to the
         dim-ordered fold for every input, at ~8x its speed.
 
-        The contract value is np.round(fold, round_to) where fold
+        The contract value is np.round(fold, 6) where fold
         accumulates a_rk*b_ck over k in order. einsum(optimize=False)
         sums the SAME 64 products in a different association order;
         for unit-normalized rows the reordering error is bounded by
@@ -241,7 +230,7 @@ def semantic_dedup(
         so the result equals the old kernel bit-for-bit on ALL inputs,
         not just the fixtures."""
         g = np.einsum("rk,ck->rc", a, b, optimize=False)
-        scaled = g * 10.0**round_to
+        scaled = g * 10.0**6
         frac = np.abs(scaled - np.floor(scaled) - 0.5)
         near = frac < 1e-3  # 1e-3 ulp-of-rounding = 1e-9 in value
         if near.any():
@@ -251,7 +240,7 @@ def semantic_dedup(
             for k in range(a.shape[1]):  # dim-ordered, per element
                 ex += av[:, k] * bv[:, k]
             g[ri, ci] = ex
-        return np.round(g, round_to)
+        return np.round(g, 6)
 
     # Tile-level threads: task parallelism is bounded by the number of
     # cells, so when the executor has more cores than there are cells
@@ -266,7 +255,7 @@ def semantic_dedup(
         pdf = pdf.sort_values(id_col, kind="mergesort").reset_index(
             drop=True
         )
-        x = np.array(pdf[vec_col].tolist(), dtype=np.float64)
+        x = np.array(pdf["embedding"].tolist(), dtype=np.float64)
         n = x.shape[0]
         sq = np.zeros(n, dtype=np.float64)
         for k in range(x.shape[1]):  # dim-ordered, see contract above

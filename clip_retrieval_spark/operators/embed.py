@@ -41,22 +41,22 @@ def stable_id63(*parts: str) -> int:
     return int.from_bytes(h.digest(), "little") & 0x7FFFFFFFFFFFFFFF
 
 
-def _ngram_features(surface: str, dim: int = DIM) -> np.ndarray:
-    """Signed hashed char-n-gram projection; deterministic."""
+def _ngram_features(surface: str) -> np.ndarray:
+    """Signed hashed char-n-gram projection to DIM dims; deterministic."""
     s = f"^{surface.lower()}$"
-    vec = np.zeros(dim, dtype=np.float64)
+    vec = np.zeros(DIM, dtype=np.float64)
     for i in range(max(len(s) - _NGRAM + 1, 1)):
         g = s[i : i + _NGRAM]
         h = hashlib.blake2b(g.encode("utf-8"), digest_size=8, key=b"kgembed")
         v = int.from_bytes(h.digest(), "little")
-        vec[v % dim] += 1.0 if (v >> 62) & 1 else -1.0
+        vec[v % DIM] += 1.0 if (v >> 62) & 1 else -1.0
     n = float(np.linalg.norm(vec))
     if n > 0.0:
         vec /= n
     return vec.astype(np.float32)
 
 
-def embed_batch(surfaces: pd.Series, dim: int = DIM) -> list:
+def embed_batch(surfaces: pd.Series) -> list:
     """Batch featurizer — the init-once/batch-apply shape of the
     reference mapper; memoizes within a batch (surfaces repeat a lot
     under hub-entity skew)."""
@@ -65,7 +65,7 @@ def embed_batch(surfaces: pd.Series, dim: int = DIM) -> list:
     for s in surfaces:
         e = cache.get(s)
         if e is None:
-            e = _ngram_features(s, dim)
+            e = _ngram_features(s)
             cache[s] = e
         out.append(e)
     return out

@@ -33,29 +33,30 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+DAMPING = 0.85
 
-def undirect(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
-    """Symmetrize an edge list (distinct both-direction pairs)."""
-    fwd = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
+
+def undirect(edges: DataFrame) -> DataFrame:
+    """Symmetrize a ``src, dst`` edge list (distinct both-direction
+    pairs). Every operator here reads its edges through this."""
+    fwd = edges.select("src", "dst")
     return fwd.unionByName(
         fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     ).distinct()
 
 
-def degree_stats(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
+def degree_stats(edges: DataFrame) -> DataFrame:
     """Degree histogram of the undirected graph: (degree, n_nodes).
     Hub detection in two algebraic aggregations."""
     deg = (
-        undirect(edges, src, dst)
+        undirect(edges)
         .groupBy("src")
         .agg(F.count("*").alias("degree"))
     )
     return deg.groupBy("degree").agg(F.count("*").alias("n_nodes"))
 
 
-def triangle_count(
-    edges: DataFrame, src: str = "src", dst: str = "dst"
-) -> DataFrame:
+def triangle_count(edges: DataFrame) -> DataFrame:
     """Per-node triangle participation counts: (node, n_triangles) for
     every node in at least one triangle. Input treated as undirected;
     self-loops and duplicate edges are removed.
@@ -66,7 +67,7 @@ def triangle_count(
     count. Two shuffle joins and one aggregation, all keys bounded by
     the orientation's out-degree (see module docstring)."""
     und = (
-        undirect(edges, src, dst)
+        undirect(edges)
         .filter(F.col("src") != F.col("dst"))
     )
     deg = und.groupBy("src").agg(F.count("*").alias("_deg"))
@@ -111,20 +112,17 @@ def triangle_count(
 def pagerank(
     edges: DataFrame,
     iterations: int = 3,
-    damping: float = 0.85,
-    src: str = "src",
-    dst: str = "dst",
-    round_to: int = 9,
 ) -> DataFrame:
     """Fixed-iteration PageRank over the undirected graph of ``edges``.
 
-    r0 = 1.0; r_{t+1}(v) = (1-d) + d * sum_{u->v} r_t(u)/deg(u).
+    r0 = 1.0; r_{t+1}(v) = (1-d) + d * sum_{u->v} r_t(u)/deg(u), with
+    damping d = ``DAMPING``, each round rounded to 9 places.
     (Unnormalized 1-based form — ranks sum to n like the original
     formulation, convenient when node counts shift per snapshot.)
     Returns (node, rank). Every node in the edge list participates;
     isolated nodes don't exist in an edge-derived graph by construction.
     """
-    und = undirect(edges, src, dst)
+    und = undirect(edges)
     deg = und.groupBy("src").agg(F.count("*").alias("deg"))
     # adjacency with out-degree attached once — reused every round
     adj = und.join(deg, "src").localCheckpoint(eager=False)
@@ -142,8 +140,8 @@ def pagerank(
         ranks = contrib.select(
             "node",
             F.round(
-                F.lit(1.0 - damping) + F.lit(damping) * F.col("inflow"),
-                round_to,
+                F.lit(1.0 - DAMPING) + F.lit(DAMPING) * F.col("inflow"),
+                9,
             ).alias("rank"),
         ).localCheckpoint(eager=False)
     return ranks
@@ -152,8 +150,6 @@ def pagerank(
 def label_propagation_min(
     edges: DataFrame,
     rounds: int = 3,
-    src: str = "src",
-    dst: str = "dst",
 ) -> DataFrame:
     """Synchronous min-label propagation: community detection in a
     FIXED number of rounds. Returns (node, community).
@@ -179,7 +175,7 @@ def label_propagation_min(
     construction before any partition is persisted. One eager pass pins
     the materialized blocks first, as operators.cc does.
     """
-    und = undirect(edges, src, dst).localCheckpoint(eager=True)
+    und = undirect(edges).localCheckpoint(eager=True)
     labels = (
         und.select(F.col("src").alias("node"))
         .distinct()
@@ -208,8 +204,6 @@ def kcore_prune(
     edges: DataFrame,
     k: int = 2,
     rounds: int = 3,
-    src: str = "src",
-    dst: str = "dst",
 ) -> DataFrame:
     """Bounded-round k-core peeling: drop nodes of degree < k, delete
     their edges, repeat ``rounds`` times. Returns the surviving nodes
@@ -229,7 +223,7 @@ def kcore_prune(
     The initial edge set is checkpointed eagerly for the same reason as
     label_propagation_min (see its docstring).
     """
-    und = undirect(edges, src, dst).localCheckpoint(eager=True)
+    und = undirect(edges).localCheckpoint(eager=True)
     for _ in range(rounds):
         deg = und.groupBy("src").agg(F.count("*").alias("deg"))
         keep = deg.filter(F.col("deg") >= k).select("src")
@@ -250,8 +244,6 @@ def bfs_distances(
     edges: DataFrame,
     seeds: DataFrame,
     rounds: int = 3,
-    src: str = "src",
-    dst: str = "dst",
 ) -> DataFrame:
     """Multi-source breadth-first distances in a FIXED number of
     rounds: returns (node, dist) where dist is the minimum hop count
@@ -275,7 +267,7 @@ def bfs_distances(
     localCheckpoint (label_propagation_min's rationale); per-round
     lazy checkpoints truncate lineage.
     """
-    und = undirect(edges, src, dst).localCheckpoint(eager=True)
+    und = undirect(edges).localCheckpoint(eager=True)
     dist = (
         seeds.select("node").distinct().withColumn("dist", F.lit(0))
     )

@@ -28,19 +28,17 @@ def overlap_join(
     left: DataFrame,
     right: DataFrame,
     width: int,
-    prefixes: tuple[str, str] = ("l_", "r_"),
 ) -> DataFrame:
     """Join two interval tables on time overlap (inclusive endpoints:
     rows pair iff ``l.s <= r.e AND r.s <= l.e``).
 
     Both inputs must carry integer columns ``s`` and ``e`` (seconds,
     ``s <= e``; violating rows are dropped) plus any identifying
-    columns. Output columns are the left table's prefixed with
-    ``prefixes[0]``, the right's with ``prefixes[1]``, plus
+    columns. Output columns are the left table's prefixed with ``l_``,
+    the right's with ``r_``, plus
     ``overlap_s = least(e) - greatest(s)`` (0 for point-touching). Each
     qualifying row PAIR appears exactly once regardless of how many
     buckets it met in."""
-    lp, rp = prefixes
     w = int(width)
     if w <= 0:
         raise ValueError(f"width must be positive: {width}")
@@ -59,18 +57,17 @@ def overlap_join(
             ),
         )
 
-    lb, rb = _prep(left, lp), _prep(right, rp)
+    lb, rb = _prep(left, "l_"), _prep(right, "r_")
     pairs = (
         lb.join(rb, "bkt")
         .filter(
-            (F.col(f"{lp}s") <= F.col(f"{rp}e"))
-            & (F.col(f"{rp}s") <= F.col(f"{lp}e"))
+            (F.col("l_s") <= F.col("r_e")) & (F.col("r_s") <= F.col("l_e"))
         )
         .drop("bkt")
         .distinct()
     )
     return pairs.withColumn(
         "overlap_s",
-        F.least(F.col(f"{lp}e"), F.col(f"{rp}e"))
-        - F.greatest(F.col(f"{lp}s"), F.col(f"{rp}s")),
+        F.least(F.col("l_e"), F.col("r_e"))
+        - F.greatest(F.col("l_s"), F.col("r_s")),
     )

@@ -49,17 +49,17 @@ from clip_retrieval_spark.functions.vectors import dot
 
 
 def _collect_codebook(
-    centroids: DataFrame, cell_id: str, cent_emb: str
+    centroids: DataFrame,
 ) -> list[tuple[int, list[float], float]]:
     """(cell, cvec, ||cvec||^2) sorted by cell — ||cvec||^2 is the same
     left-to-right IEEE fold the in-plan dot would produce."""
     out = []
-    for r in centroids.select(cell_id, cent_emb).collect():
-        cv = [float(x) for x in r[cent_emb]]
+    for r in centroids.select("cell_id", "centroid").collect():
+        cv = [float(x) for x in r["centroid"]]
         cc = 0.0
         for x in cv:
             cc = cc + x * x
-        out.append((int(r[cell_id]), cv, cc))
+        out.append((int(r["cell_id"]), cv, cc))
     out.sort(key=lambda t: t[0])
     return out
 
@@ -68,7 +68,6 @@ def _with_cell(
     df: DataFrame,
     vec_col: str,
     cells: list[tuple[int, list[float], float]],
-    round_to: int,
     cell_col: str,
 ) -> DataFrame:
     """df + ``cell_col`` = argmin centroid (squared-L2 with the
@@ -98,9 +97,7 @@ def _with_cell(
     scored = F.transform(
         cents,
         lambda ct: F.struct(
-            F.round(
-                ct["cc"] - 2 * dot(vec, ct["cvec"]), round_to
-            ).alias("d"),
+            F.round(ct["cc"] - 2 * dot(vec, ct["cvec"]), 6).alias("d"),
             ct["cell"].alias("cell"),
         ),
     )
@@ -124,25 +121,22 @@ def assign_cells(
     points: DataFrame,
     centroids: DataFrame,
     id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    cell_id: str = "cell_id",
-    cent_emb: str = "centroid",
-    round_to: int = 6,
 ) -> DataFrame:
-    """(id, vec, cell): nearest-centroid assignment, squared-L2, ties
-    to the lowest cell id. One codegen argmin per corpus row over the
-    collected k x d codebook; rows whose vectors don't produce a valid
-    distance (ragged/null arrays) are dropped explicitly, mirroring
-    ivf_topk's contract."""
-    cells = _collect_codebook(centroids, cell_id, cent_emb)
+    """(id, embedding, cell_id): nearest-centroid assignment of the
+    ``embedding`` column against ``cell_id, centroid`` rows,
+    squared-L2, ties to the lowest cell id. One codegen argmin per
+    corpus row over the collected k x d codebook; rows whose vectors
+    don't produce a valid distance (ragged/null arrays) are dropped
+    explicitly, mirroring ivf_topk's contract."""
+    cells = _collect_codebook(centroids)
     if not cells:  # empty codebook: no row has a nearest centroid
         return points.select(
-            id_col, vec_col, F.lit(None).cast("int").alias(cell_id)
+            id_col, "embedding", F.lit(None).cast("int").alias("cell_id")
         ).filter(F.lit(False))
     return (
-        _with_cell(points, vec_col, cells, round_to, cell_id)
-        .select(id_col, vec_col, cell_id)
-        .filter(F.col(cell_id).isNotNull())
+        _with_cell(points, "embedding", cells, "cell_id")
+        .select(id_col, "embedding", "cell_id")
+        .filter(F.col("cell_id").isNotNull())
     )
 
 
@@ -170,7 +164,6 @@ def _fit_codebook(
     iterations: int,
     id_col: str,
     vec_col: str,
-    round_to: int,
 ) -> list[tuple[int, list[float], float]]:
     """Driver-side Lloyd loop over collected k x d codebooks.
 
@@ -188,7 +181,7 @@ def _fit_codebook(
         pts.select(
             id_col,
             F.transform(
-                vec_col, lambda x: F.round(x.cast("double"), round_to)
+                vec_col, lambda x: F.round(x.cast("double"), 6)
             ).alias("_cv"),
         )
         .orderBy(id_col)
@@ -201,9 +194,9 @@ def _fit_codebook(
     for _ in range(iterations):
         if not cells:
             break
-        assigned = _with_cell(
-            pts, vec_col, cells, round_to, "_cell"
-        ).filter(F.col("_cell").isNotNull())
+        assigned = _with_cell(pts, vec_col, cells, "_cell").filter(
+            F.col("_cell").isNotNull()
+        )
         # posexplode + ONE map-side-combinable (cell, dim) AVG; the
         # k*dim rounded means collect to the driver (k*dim doubles)
         # where the next round's codebook is assembled — the previous
@@ -214,8 +207,7 @@ def _fit_codebook(
             )
             .groupBy("_cell", "_i")
             .agg(
-                F.round(F.avg(F.col("_x").cast("double")), round_to)
-                .alias("_m")
+                F.round(F.avg(F.col("_x").cast("double")), 6).alias("_m")
             )
             .collect()
         )
@@ -237,7 +229,6 @@ def kmeans_fit(
     iterations: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    round_to: int = 6,
 ) -> DataFrame:
     """Train a k-cell codebook: returns (cell_id int, centroid
     array<double>). See the module docstring for the physical plan and
@@ -248,38 +239,28 @@ def kmeans_fit(
     # job instead of two (safe here: the driver loop is sequential,
     # unlike the concurrent-consumer case graph.py pins eagerly)
     pts = points.select(id_col, vec_col).localCheckpoint(eager=False)
-    cells = _fit_codebook(
-        pts, k, iterations, id_col, vec_col, round_to
-    )
+    cells = _fit_codebook(pts, k, iterations, id_col, vec_col)
     return spark.createDataFrame(
         [(cell, cv) for cell, cv, _cc in cells],
         "cell_id int, centroid array<double>",
     )
 
 
-def kmeans_assign(
-    points: DataFrame,
-    k: int,
-    iterations: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_to: int = 6,
-) -> DataFrame:
-    """fit + final assignment in one call: (id, cell_id)."""
+def kmeans_assign(points: DataFrame, k: int) -> DataFrame:
+    """fit (2 rounds) + final assignment of ``vec_id, embedding`` rows
+    in one call: (vec_id, cell_id)."""
     # lazy checkpoint: the seeding TakeOrdered is the first action and
     # scans every partition, so it materializes the pin itself — one
     # job instead of two (safe here: the driver loop is sequential,
     # unlike the concurrent-consumer case graph.py pins eagerly)
-    pts = points.select(id_col, vec_col).localCheckpoint(eager=False)
-    cells = _fit_codebook(
-        pts, k, iterations, id_col, vec_col, round_to
-    )
+    pts = points.select("vec_id", "embedding").localCheckpoint(eager=False)
+    cells = _fit_codebook(pts, k, 2, "vec_id", "embedding")
     if not cells:
         return pts.select(
-            id_col, F.lit(None).cast("int").alias("cell_id")
+            "vec_id", F.lit(None).cast("int").alias("cell_id")
         ).filter(F.lit(False))
     return (
-        _with_cell(pts, vec_col, cells, round_to, "cell_id")
+        _with_cell(pts, "embedding", cells, "cell_id")
         .filter(F.col("cell_id").isNotNull())
-        .select(id_col, "cell_id")
+        .select("vec_id", "cell_id")
     )

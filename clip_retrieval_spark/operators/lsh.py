@@ -55,7 +55,6 @@ def _minhash(grams: Column, seed: str) -> Column:
 def lsh_explode(
     df: DataFrame,
     text_col: str,
-    n_hashes: int = N_HASHES,
     band_rows: int = BAND_ROWS,
 ) -> DataFrame:
     """df + (band, sig) — one row per (input row, band).
@@ -69,18 +68,18 @@ def lsh_explode(
 
     Cost: a caller that reads the band table twice computes it twice.
     ``link.entity_pairs`` puts it on both sides of its broadcast join,
-    so each distinct surface costs 2 x n_hashes ``array_min`` — where a
+    so each distinct surface costs 2 x N_HASHES ``array_min`` — where a
     shuffled signature table (explode, aggregate, join back) would be
     computed once and its shuffle output reused by both sides.
     """
     grams = df.withColumn("_g", char_shingles(F.col(text_col)))
-    mh = [_minhash(F.col("_g"), f"mh{i}") for i in range(n_hashes)]
+    mh = [_minhash(F.col("_g"), f"mh{i}") for i in range(N_HASHES)]
     bands = [
         F.struct(
             F.lit(b).alias("band"),
             F.xxhash64(*mh[b * band_rows:(b + 1) * band_rows]).alias("sig"),
         )
-        for b in range(n_hashes // band_rows)
+        for b in range(N_HASHES // band_rows)
     ]
     return grams.select(*df.columns, F.inline(F.array(*bands)))
 
@@ -88,7 +87,6 @@ def lsh_explode(
 def candidate_pairs(
     entities: DataFrame,
     max_bucket: int = 256,
-    n_hashes: int = N_HASHES,
     band_rows: int = BAND_ROWS,
 ) -> DataFrame:
     """Distinct candidate pairs (a < b) of ``entities(entity_id,
@@ -117,8 +115,7 @@ def candidate_pairs(
     (``lsh_explode``) and never rides a join or window exchange.
     """
     buckets = lsh_explode(
-        entities.select("entity_id", "surface"), "surface", n_hashes,
-        band_rows,
+        entities.select("entity_id", "surface"), "surface", band_rows
     ).select("entity_id", "band", "sig")
     # bucket-size cap via aggregate (reuses the same hash partitioning
     # the join needs, so AQE collapses the exchanges)

@@ -210,28 +210,25 @@ def iri_escape(col: Column | str) -> Column:
 
 def to_ntriples(
     edges: DataFrame,
-    subj: str = "subj_surface",
-    pred: str = "pred",
-    obj: str = "obj_surface",
     keep: tuple[str, ...] = ("url",),
 ) -> DataFrame:
     """Serialize a KG edge table to RDF N-Triples lines — the
     interchange format a KG-construction pipeline ships to downstream
     consumers (triple stores, SPARQL loaders). One output row per edge:
-    ``<base/e/subj> <base/p/pred> <base/e/obj> .`` plus any ``keep``
-    provenance columns (url by default, mirroring the reference's
-    metadata-carrying output rows, clip_back.py:719-724).
+    ``<base/e/subj_surface> <base/p/pred> <base/e/obj_surface> .``
+    plus any ``keep`` provenance columns (url by default, mirroring the
+    reference's metadata-carrying output rows, clip_back.py:719-724).
 
     Scale shape: a narrow per-row projection of JVM string concats —
     no shuffle, no UDF, whole-stage-codegen'd; at 10^12 edges this is
     a map-only stage whose cost is the write itself."""
     line = F.concat(
         F.lit(f"<{_NT_BASE}/e/"),
-        iri_escape(subj),
+        iri_escape("subj_surface"),
         F.lit(f"> <{_NT_BASE}/p/"),
-        iri_escape(pred),
+        iri_escape("pred"),
         F.lit(f"> <{_NT_BASE}/e/"),
-        iri_escape(obj),
+        iri_escape("obj_surface"),
         F.lit("> ."),
     )
     return edges.select(*keep, line.alias("ntriple"))
@@ -246,16 +243,15 @@ def edge_weights(triples: DataFrame) -> DataFrame:
     )
 
 
-def merge_weighted_edges(
-    base: DataFrame, delta: DataFrame, keys: tuple[str, ...] = ("subj", "obj")
-) -> DataFrame:
+def merge_weighted_edges(base: DataFrame, delta: DataFrame) -> DataFrame:
     """Incremental KG maintenance: merge a new snapshot's edge-weight
     aggregate into an existing one — the upsert that lets the edge
     table be maintained dump-over-dump instead of recomputed from
     10^12 pages each crawl (the incremental counterpart of the
     reference's full index rebuild, reference clip_back.py:539-566).
 
-    Both inputs carry ``weight``; the result is keyed union-sum:
+    Both inputs carry ``subj, obj, weight``; the result is the
+    (subj, obj)-keyed union-sum:
     ``weight = coalesce(base.weight, 0) + coalesce(delta.weight, 0)``.
     Because counts are algebraic, merge(agg(A), agg(B)) == agg(A ∪ B)
     exactly — the invariant the kg_incremental_merge gate checks
@@ -269,9 +265,10 @@ def merge_weighted_edges(
     b = base.withColumnRenamed("weight", "_wb")
     d = delta.withColumnRenamed("weight", "_wd")
     return (
-        b.join(d, list(keys), "full_outer")
+        b.join(d, ["subj", "obj"], "full_outer")
         .select(
-            *keys,
+            "subj",
+            "obj",
             (
                 F.coalesce("_wb", F.lit(0).cast("long"))
                 + F.coalesce("_wd", F.lit(0).cast("long"))

@@ -43,6 +43,7 @@ THUMB_FIELDS = "media_id long, thumb binary, width int, height int"
 FRAMES_FIELDS = "media_id long, frame_idx int, frame binary"
 
 _FEATURE_DIM = 16  # 16 x 4 bytes == blake2b's max digest size
+FRAME_EVERY_MS = 1000  # sample_frames: one frame per second of video
 
 
 def _decode_image(payload: bytes) -> np.ndarray:
@@ -64,12 +65,10 @@ def _decode_image(payload: bytes) -> np.ndarray:
     if not payload:
         raise ValueError("empty payload")
     if payload[: len(png.PNG_SIGNATURE)] == png.PNG_SIGNATURE:
-        return png.grid_luminance_features(png.decode_png(payload), grid=4)
+        return png.grid_luminance_features(png.decode_png(payload))
     if jpeg.is_jpeg(payload):
         try:
-            return png.grid_luminance_features(
-                jpeg.decode_jpeg(payload), grid=4
-            )
+            return png.grid_luminance_features(jpeg.decode_jpeg(payload))
         except NotImplementedError:
             pass  # arithmetic/12-bit etc. -> deterministic stub below
     if wav.is_wav(payload):
@@ -80,9 +79,7 @@ def _decode_image(payload: bytes) -> np.ndarray:
     if avi.is_avi(payload):
         try:
             first = avi.decode_avi(payload)["frames"][0]
-            return png.grid_luminance_features(
-                jpeg.decode_jpeg(first), grid=4
-            )
+            return png.grid_luminance_features(jpeg.decode_jpeg(first))
         except NotImplementedError:
             pass  # non-MJPG codecs -> deterministic stub below
         except IndexError:
@@ -175,12 +172,12 @@ def resize_thumbnails(media: DataFrame, size: int = 64) -> DataFrame:
     )
 
 
-def sample_frames(media: DataFrame, every_ms: int = 1000) -> DataFrame:
+def sample_frames(media: DataFrame) -> DataFrame:
     """Frame sampling for video rows (flatMap shape: 1 row in, N rows
     out — the UDTF/explode pattern).
 
     MJPEG-in-AVI payloads are REALLY sampled (functions/avi.py): one
-    JPEG frame per every_ms of CONTAINER time (n_frames/fps — the
+    JPEG frame per FRAME_EVERY_MS of CONTAINER time (n_frames/fps — the
     container is the truth, not the metadata column), each emitted
     frame being the actual encoded bytes of the nearest source frame.
     Other containers/codecs fall back to the deterministic digest STUB
@@ -199,17 +196,17 @@ def sample_frames(media: DataFrame, every_ms: int = 1000) -> DataFrame:
                         vid = avi.decode_avi(b)
                         frames, fps = vid["frames"], vid["fps"]
                         dur_ms = len(frames) / fps * 1000.0
-                        n = max(int(dur_ms // every_ms), 1)
+                        n = max(int(dur_ms // FRAME_EVERY_MS), 1)
                         for i in range(n):
                             src = min(
-                                int(round(i * every_ms / 1000.0 * fps)),
+                                int(round(i * FRAME_EVERY_MS / 1000.0 * fps)),
                                 len(frames) - 1,
                             )
                             rows.append((mid, i, frames[src]))
                         continue
                     except (NotImplementedError, ValueError):
                         pass  # non-MJPG / corrupt -> digest stub below
-                n = max(int((dur or 0) // every_ms), 0)
+                n = max(int((dur or 0) // FRAME_EVERY_MS), 0)
                 for i in range(n):
                     rows.append(
                         (

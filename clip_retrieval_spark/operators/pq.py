@@ -116,17 +116,14 @@ def pq_encode(
     corpus: DataFrame,
     codebooks: DataFrame,
     dim: int,
-    id_col: str = "cid",
-    vec_col: str = "c_emb",
-    round_to: int = 6,
     m: int | None = None,
 ) -> DataFrame:
-    """(id, codes array<int>): per-subspace argmin against the
-    broadcast codebook — narrow, corpus never shuffles. A code is the
-    POSITION of the winning cell in the cell-sorted codebook array
-    (0-based), not the raw cell id — k-means may drop empty cells, and
-    positional codes keep the ADC LUT lookup valid regardless (for a
-    dense codebook position == cell id)."""
+    """(cid, codes array<int>) of ``cid, c_emb`` rows: per-subspace
+    argmin against the broadcast codebook — narrow, corpus never
+    shuffles. A code is the POSITION of the winning cell in the
+    cell-sorted codebook array (0-based), not the raw cell id — k-means
+    may drop empty cells, and positional codes keep the ADC LUT lookup
+    valid regardless (for a dense codebook position == cell id)."""
     if m is None:
         # callers that know their PQ geometry pass m and skip this job
         m = codebooks.select("sub").distinct().count()
@@ -134,7 +131,7 @@ def pq_encode(
     cb = _codebook_row(codebooks)
 
     def _code_for(sub_idx: Column) -> Column:
-        xs = _sub(F.col(vec_col), sub_idx, d_sub)
+        xs = _sub(F.col("c_emb"), sub_idx, d_sub)
         cells = F.element_at(F.col("_cb"), sub_idx + 1)
         init = F.struct(
             F.lit(float("inf")).alias("d"),
@@ -143,9 +140,7 @@ def pq_encode(
         scored = F.transform(
             cells,
             lambda ct, i: F.struct(
-                F.round(
-                    ct["cc"] - 2 * dot(xs, ct["cvec"]), round_to
-                ).alias("d"),
+                F.round(ct["cc"] - 2 * dot(xs, ct["cvec"]), 6).alias("d"),
                 i.cast("int").alias("cell"),
             ),
         )
@@ -164,7 +159,7 @@ def pq_encode(
     )
     return (
         corpus.crossJoin(cb)
-        .select(id_col, codes.alias("codes"))
+        .select("cid", codes.alias("codes"))
     )
 
 
@@ -174,15 +169,12 @@ def pq_adc_topk(
     codebooks: DataFrame,
     dim: int,
     k: int = 5,
-    q_id: str = "qid",
-    q_emb: str = "q_emb",
-    c_id: str = "cid",
     exclude_self: bool = False,
-    round_to: int = 6,
     m: int | None = None,
 ) -> DataFrame:
-    """ADC top-k: (qid, cid, score, rank), score = sum over subspaces
-    of dot(q_sub, centroid[code]) — the inner-product ADC form (exact
+    """ADC top-k of ``qid, q_emb`` over ``cid, codes``: (qid, cid,
+    score, rank), score = sum over subspaces of dot(q_sub,
+    centroid[code]) — the inner-product ADC form (exact
     for the quantized corpus vector). LUTs are built per query against
     the broadcast codebook, then the scan over codes is M lookups +
     adds per row."""
@@ -197,12 +189,12 @@ def pq_adc_topk(
         lambda s: F.transform(
             F.element_at(F.col("_cb"), s + 1),
             lambda ct: F.round(
-                dot(_sub(F.col(q_emb), s, d_sub), ct["cvec"]), round_to
+                dot(_sub(F.col("q_emb"), s, d_sub), ct["cvec"]), 6
             ),
         ),
     )
     q_lut = F.broadcast(
-        queries.crossJoin(cb).select(q_id, lut.alias("_lut"))
+        queries.crossJoin(cb).select("qid", lut.alias("_lut"))
     )
     score = F.round(
         F.aggregate(
@@ -216,17 +208,17 @@ def pq_adc_topk(
             F.lit(0.0),
             lambda acc, x: acc + x,
         ),
-        round_to,
+        6,
     )
-    w = Window.partitionBy(q_id).orderBy(F.desc("score"), F.asc(c_id))
+    w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("cid"))
     cand = codes.crossJoin(q_lut)
     if exclude_self:
-        cand = cand.filter(F.col(q_id) != F.col(c_id))
+        cand = cand.filter(F.col("qid") != F.col("cid"))
     return (
         cand.withColumn("score", score)
         .withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
-        .select(q_id, c_id, "score", "rank")
+        .select("qid", "cid", "score", "rank")
     )
 
 
@@ -238,12 +230,7 @@ def pq_rerank_topk(
     dim: int,
     k: int = 5,
     shortlist: int = 100,
-    q_id: str = "qid",
-    q_emb: str = "q_emb",
-    c_id: str = "cid",
-    c_emb: str = "c_emb",
     exclude_self: bool = False,
-    round_to: int = 6,
 ) -> DataFrame:
     """The production PQ pattern (how the reference's faiss indices are
     actually served, clip_back.py:343-399): ADC over compressed codes
@@ -254,18 +241,17 @@ def pq_rerank_topk(
     and ~3 TB of codes plus a point-lookup join."""
     short = pq_adc_topk(
         queries, codes, codebooks, dim, k=shortlist,
-        q_id=q_id, q_emb=q_emb, c_id=c_id,
-        exclude_self=exclude_self, round_to=round_to,
-    ).select(q_id, c_id)
-    qv = queries.select(q_id, q_emb)
+        exclude_self=exclude_self,
+    ).select("qid", "cid")
+    qv = queries.select("qid", "q_emb")
     exact = (
-        short.join(corpus.select(c_id, c_emb), c_id)
-        .join(F.broadcast(qv), q_id)
-        .withColumn("score", F.round(dot(F.col(q_emb), F.col(c_emb)), round_to))
+        short.join(corpus.select("cid", "c_emb"), "cid")
+        .join(F.broadcast(qv), "qid")
+        .withColumn("score", F.round(dot(F.col("q_emb"), F.col("c_emb")), 6))
     )
-    w = Window.partitionBy(q_id).orderBy(F.desc("score"), F.asc(c_id))
+    w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("cid"))
     return (
         exact.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
-        .select(q_id, c_id, "score", "rank")
+        .select("qid", "cid", "score", "rank")
     )

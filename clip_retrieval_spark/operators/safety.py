@@ -62,35 +62,32 @@ def _mlp_score(emb_matrix: np.ndarray) -> np.ndarray:
     return 1.0 / (1.0 + np.exp(-raw))
 
 
-def score_safety(
-    df: DataFrame, emb_col: str = "embedding", out_col: str = "safety_score"
-) -> DataFrame:
-    """Append a safety score per row (Arrow-batched; model loaded once
-    per worker — the predict_batch_udf shape)."""
+def score_safety(df: DataFrame) -> DataFrame:
+    """Append a ``safety_score`` per row of the ``embedding`` column
+    (Arrow-batched; model loaded once per worker — the
+    predict_batch_udf shape)."""
     cols = df.columns
 
     def _go(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         # real model would be constructed HERE, once per worker
         for pdf in batches:
             m = np.stack(
-                [np.asarray(v, dtype=np.float64) for v in pdf[emb_col]]
+                [np.asarray(v, dtype=np.float64) for v in pdf["embedding"]]
             ) if len(pdf) else np.zeros((0, 1))
             out = pdf.copy()
-            out[out_col] = _mlp_score(m).astype(np.float32)
+            out["safety_score"] = _mlp_score(m).astype(np.float32)
             yield out
 
     schema = ", ".join(
         f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields
-    ) + f", {out_col} float"
-    return df.mapInPandas(_go, schema=schema).select(*cols, out_col)
+    ) + ", safety_score float"
+    return df.mapInPandas(_go, schema=schema).select(*cols, "safety_score")
 
 
-def safety_filter(
-    df: DataFrame, threshold: float = 0.5, emb_col: str = "embedding"
-) -> DataFrame:
+def safety_filter(df: DataFrame, threshold: float = 0.5) -> DataFrame:
     """Drop rows scoring above threshold (the reference drops score>0.5,
     clip_back.py:318-319)."""
-    scored = score_safety(df, emb_col)
+    scored = score_safety(df)
     return scored.filter(F.col("safety_score") <= threshold).drop(
         "safety_score"
     )
@@ -99,21 +96,19 @@ def safety_filter(
 def prompt_filter(
     df: DataFrame,
     prompts: list[list[float]],
-    emb_col: str = "embedding",
-    drop_index: int = 1,
 ) -> DataFrame:
     """Prompt-matrix argmax filter (the violence-detector shape,
-    clip_back.py:321-324): score each row against every prompt vector
-    JVM-side (prompt matrix as literal arrays — effectively broadcast),
-    drop rows whose argmax is ``drop_index``."""
+    clip_back.py:321-324): score each row's ``embedding`` against every
+    prompt vector JVM-side (prompt matrix as literal arrays —
+    effectively broadcast), drop rows whose argmax is prompt 1."""
     scores = [
-        dot(F.col(emb_col), F.array(*[F.lit(float(x)) for x in p]))
+        dot(F.col("embedding"), F.array(*[F.lit(float(x)) for x in p]))
         for p in prompts
     ]
     arr = F.array(*scores)
     argmax = F.array_position(arr, F.array_max(arr)) - 1
     return (
         df.withColumn("_amax", argmax)
-        .filter(F.col("_amax") != drop_index)
+        .filter(F.col("_amax") != 1)
         .drop("_amax")
     )

@@ -50,21 +50,18 @@ def brute_force_topk(
     queries: DataFrame,
     corpus: DataFrame,
     k: int = 10,
-    q_id: str = "qid",
-    c_id: str = "cid",
-    q_emb: str = "q_emb",
-    c_emb: str = "c_emb",
 ) -> DataFrame:
-    """Exact cosine top-k: corpus x broadcast(queries) + window rank.
-    Assumes unit-norm embeddings (dot == cosine)."""
+    """Exact cosine top-k: corpus x broadcast(queries) + window rank over
+    ``qid, q_emb`` x ``cid, c_emb``. Assumes unit-norm embeddings
+    (dot == cosine)."""
     scored = corpus.crossJoin(F.broadcast(queries)).withColumn(
-        "score", dot(q_emb, c_emb)
+        "score", dot("q_emb", "c_emb")
     )
-    w = Window.partitionBy(q_id).orderBy(F.desc("score"), F.asc(c_id))
+    w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("cid"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
-        .select(q_id, c_id, "score", "rank")
+        .select("qid", "cid", "score", "rank")
     )
 
 
@@ -120,10 +117,6 @@ def rp_lsh_topk(
     k: int = 10,
     n_bits: int = 8,
     n_tables: int = 4,
-    q_id: str = "qid",
-    c_id: str = "cid",
-    q_emb: str = "q_emb",
-    c_emb: str = "c_emb",
     exclude_self: bool = False,
     round_to: int | None = None,
 ) -> DataFrame:
@@ -163,23 +156,23 @@ def rp_lsh_topk(
         )
 
     cand = (
-        _explode(corpus, c_id, c_emb)
-        .join(F.broadcast(_explode(queries, q_id, q_emb)), ["tbl", "bkt"])
-        .dropDuplicates([q_id, c_id])
+        _explode(corpus, "cid", "c_emb")
+        .join(F.broadcast(_explode(queries, "qid", "q_emb")), ["tbl", "bkt"])
+        .dropDuplicates(["qid", "cid"])
     )
     if exclude_self:
-        cand = cand.filter(F.col(q_id) != F.col(c_id))
-    score = dot(q_emb, c_emb)
+        cand = cand.filter(F.col("qid") != F.col("cid"))
+    score = dot("q_emb", "c_emb")
     if round_to is not None:
         # round BEFORE ranking so ties break identically to engines that
         # rank on the rounded score (the oracle comparison contract)
         score = F.round(score, round_to)
     cand = cand.withColumn("score", score)
-    w = Window.partitionBy(q_id).orderBy(F.desc("score"), F.asc(c_id))
+    w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("cid"))
     return (
         cand.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
-        .select(q_id, c_id, "score", "rank")
+        .select("qid", "cid", "score", "rank")
     )
 
 
@@ -189,21 +182,14 @@ def ivf_topk(
     centroids: DataFrame,
     k: int = 10,
     nprobe: int = 4,
-    q_id: str = "qid",
-    c_id: str = "cid",
-    q_emb: str = "q_emb",
-    c_emb: str = "c_emb",
-    cell_id: str = "cell_id",
-    cent_emb: str = "centroid",
     exclude_self: bool = False,
-    round_to: int | None = 6,
 ) -> DataFrame:
     """IVF-style ANN — the direct analog of the reference's faiss
     inverted-file index (coarse quantizer -> nprobe cell probe -> exact
     re-score; reference clip_back.py:343-399 + the IVF training in
     docs). Unlike ``rp_lsh_topk`` the partition is learned/supplied
-    (``centroids``: one row per cell), not random, so cell population
-    tracks the data distribution.
+    (``centroids``: one row per cell, ``cell_id, centroid``), not
+    random, so cell population tracks the data distribution.
 
     Physical plan, all JVM expressions, corpus NEVER shuffles:
       1. the centroid table collapses to a one-row array<struct> and is
@@ -214,26 +200,23 @@ def ivf_topk(
          sort_array + slice (queries are small by contract).
       3. probe-join on cell — broadcast on the query side; exact cosine
          -> window top-k (the only exchange: candidates by query id).
-    Scores are rounded BEFORE every ranking step so tie-breaks are
-    reproducible across engines (the oracle contract).
+    Scores are rounded to 6 places BEFORE every ranking step so
+    tie-breaks are reproducible across engines (the oracle contract).
     """
-    def _rounded(col: Column) -> Column:
-        return F.round(col, round_to) if round_to is not None else col
-
-    cell_t = centroids.schema[cell_id].dataType
+    cell_t = centroids.schema["cell_id"].dataType
     cents_row = F.broadcast(
         centroids.agg(
             F.collect_list(
                 F.struct(
-                    F.col(cell_id).alias("cell"),
-                    F.col(cent_emb).alias("cvec"),
+                    F.col("cell_id").alias("cell"),
+                    F.col("centroid").alias("cvec"),
                 )
             ).alias("_cents")
         )
     )
 
     def _score(emb_col: str, ct: Column) -> Column:
-        return _rounded(
+        return F.round(
             F.aggregate(
                 F.zip_with(
                     F.col(emb_col),
@@ -242,7 +225,8 @@ def ivf_topk(
                 ),
                 F.lit(0.0),
                 lambda a, x: a + x,
-            )
+            ),
+            6,
         )
 
     # argmax over the centroid array (ties -> lowest cell id), one
@@ -279,23 +263,23 @@ def ivf_topk(
     # join-key-null discard.
     assigned = (
         corpus.crossJoin(cents_row)
-        .withColumn("_best", _argmax(c_emb))
-        .select(c_id, c_emb, F.col("_best.cell").alias(cell_id))
-        .filter(F.col(cell_id).isNotNull())
+        .withColumn("_best", _argmax("c_emb"))
+        .select("cid", "c_emb", F.col("_best.cell").alias("cell_id"))
+        .filter(F.col("cell_id").isNotNull())
     )
     # top-nprobe cells: sort (neg score, cell) structs ascending
     probes = (
         queries.crossJoin(cents_row)
         .select(
-            q_id,
-            q_emb,
+            "qid",
+            "q_emb",
             F.explode(
                 F.slice(
                     F.sort_array(
                         F.transform(
                             "_cents",
                             lambda ct: F.struct(
-                                (-_score(q_emb, ct)).alias("negs"),
+                                (-_score("q_emb", ct)).alias("negs"),
                                 ct["cell"].alias("cell"),
                             ),
                         )
@@ -305,17 +289,17 @@ def ivf_topk(
                 )
             ).alias("_p"),
         )
-        .select(q_id, q_emb, F.col("_p.cell").alias(cell_id))
+        .select("qid", "q_emb", F.col("_p.cell").alias("cell_id"))
     )
-    cand = assigned.join(F.broadcast(probes), cell_id)
+    cand = assigned.join(F.broadcast(probes), "cell_id")
     if exclude_self:
-        cand = cand.filter(F.col(q_id) != F.col(c_id))
-    scored = cand.withColumn("score", _rounded(dot(q_emb, c_emb)))
-    w = Window.partitionBy(q_id).orderBy(F.desc("score"), F.asc(c_id))
+        cand = cand.filter(F.col("qid") != F.col("cid"))
+    scored = cand.withColumn("score", F.round(dot("q_emb", "c_emb"), 6))
+    w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("cid"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
-        .select(q_id, c_id, "score", "rank")
+        .select("qid", "cid", "score", "rank")
     )
 
 
@@ -334,14 +318,12 @@ def auto_n_blocks(n_rows: int, dim: int, target_task_bytes: int) -> int:
 def block_allpairs_cosine(
     emb: DataFrame,
     threshold: float,
-    id_col: str = "vec_id",
-    emb_col: str = "embedding",
     n_blocks: int | None = None,
-    round_to: int = 6,
     target_task_bytes: int = 256 << 20,
 ) -> DataFrame:
-    """EXACT cosine range self-join (all pairs a<b with dot >= threshold)
-    as a distributed block-pair join — the scale path for the reference's
+    """EXACT cosine range self-join (all pairs a<b of ``vec_id`` with
+    ``embedding`` dot, rounded to 6 places, >= threshold) as a
+    distributed block-pair join — the scale path for the reference's
     ``range_search`` self-join (reference clip_back.py:290-301).
 
     Why not LSH here: at range thresholds as low as 0.35 the qualifying
@@ -377,11 +359,11 @@ def block_allpairs_cosine(
         # can pass n_blocks explicitly and skip both probes.
         emb = emb.localCheckpoint(eager=False)
         n_rows = emb.count()
-        first = emb.select(F.size(F.col(emb_col)).alias("d")).first()
+        first = emb.select(F.size(F.col("embedding")).alias("d")).first()
         dim = int(first["d"]) if first and first["d"] is not None else 0
         n_blocks = auto_n_blocks(n_rows, dim, target_task_bytes)
 
-    blk = F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_blocks)).cast("int")
+    blk = F.pmod(F.xxhash64(F.col("vec_id")), F.lit(n_blocks)).cast("int")
     tasks = F.array_distinct(
         F.array(
             *[
@@ -394,8 +376,8 @@ def block_allpairs_cosine(
         )
     )
     rows = emb.select(
-        F.col(id_col).alias("_id"),
-        F.col(emb_col).alias("_emb"),
+        F.col("vec_id").alias("_id"),
+        F.col("embedding").alias("_emb"),
         blk.alias("_blk"),
         F.explode(tasks).alias("_task"),
     ).select(
@@ -414,7 +396,7 @@ def block_allpairs_cosine(
         ids = pdf["_id"].to_numpy()
         M = np.stack([np.asarray(v, dtype=np.float64) for v in pdf["_emb"]])
         if ti == tj:
-            S = np.round(M @ M.T, round_to)
+            S = np.round(M @ M.T, 6)
             ai, bj = np.nonzero(
                 (S >= threshold) & (ids[None, :] > ids[:, None])
             )
@@ -425,7 +407,7 @@ def block_allpairs_cosine(
         li, rj = blks == ti, blks == tj
         if not li.any() or not rj.any():
             return empty
-        S = np.round(M[li] @ M[rj].T, round_to)
+        S = np.round(M[li] @ M[rj].T, 6)
         ai, bj = np.nonzero(S >= threshold)
         aa, bb = ids[li][ai], ids[rj][bj]
         return pd.DataFrame(

@@ -98,7 +98,6 @@ class KGPipeline:
         spark: SparkSession,
         out_dir: str,
         n_buckets: int = 32,
-        run_id: str | None = None,
         materialize_text: bool = True,
     ) -> None:
         """``materialize_text=False`` fuses stages 1+2 into one Python
@@ -110,7 +109,7 @@ class KGPipeline:
         self.spark = spark
         self.store = TableStore(spark, out_dir)
         self.n_buckets = n_buckets
-        self.run_id = run_id or uuid.uuid4().hex[:12]
+        self.run_id = uuid.uuid4().hex[:12]
         self.materialize_text = materialize_text
         # per-stage {wall_ms, cpu_ms} for this run (cpu = whole process
         # tree incl. python workers — see procstat); feeds the N-vs-4N

@@ -38,13 +38,13 @@ def _read_stat(pid: int) -> tuple[int, float, float] | None:
     return ppid, own, reaped
 
 
-def tree_cpu_seconds(root_pid: int | None = None) -> float:
-    """Total CPU seconds consumed so far by ``root_pid`` and every live
+def tree_cpu_seconds() -> float:
+    """Total CPU seconds consumed so far by this process and every live
     descendant, plus CPU of descendants each tree member has already
     reaped. Monotonic while the tree's processes stay alive (python
     worker reuse keeps Spark's workers alive across stages), so deltas
     between calls attribute CPU to the interval."""
-    root = root_pid or os.getpid()
+    root = os.getpid()
     stats: dict[int, tuple[int, float, float]] = {}
     try:
         proc_entries = os.listdir("/proc")

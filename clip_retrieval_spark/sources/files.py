@@ -2,7 +2,7 @@
 
 * ``folder_scan`` — recursive binaryFile scan keyed by relative path
   (reference folder_to_keys, clip_inference/reader.py:10-51).
-* ``pair_modalities`` — inner-join of per-modality key sets (the
+* ``pair_modalities`` — inner-join of the text and image key sets (the
   reference intersects key sets in RAM, reader.py:39-47; here it's a
   real join the optimizer can broadcast).
 * ``compact`` — many small files -> few big ones (the
@@ -31,7 +31,6 @@ def _glob_escape(path: str) -> str:
 MODALITY_EXTS = {
     "text": (".txt",),
     "image": (".png", ".jpg", ".jpeg", ".webp"),
-    "metadata": (".json",),
 }
 
 
@@ -66,30 +65,17 @@ def folder_scan(
     )
 
 
-def pair_modalities(
-    spark: SparkSession,
-    folder: str,
-    enable_text: bool = True,
-    enable_image: bool = True,
-    enable_metadata: bool = False,
-) -> DataFrame:
-    """Inner-join requested modalities on key — only complete samples
-    survive, exactly the reference's key-set intersection semantics."""
-    out = None
-    for name, enabled in (
-        ("text", enable_text),
-        ("image", enable_image),
-        ("metadata", enable_metadata),
-    ):
-        if not enabled:
-            continue
-        scan = folder_scan(spark, folder, MODALITY_EXTS[name]).select(
+def pair_modalities(spark: SparkSession, folder: str) -> DataFrame:
+    """(key, text, image): inner-join the text and image files on key —
+    only complete samples survive, exactly the reference's key-set
+    intersection semantics."""
+    text, image = (
+        folder_scan(spark, folder, MODALITY_EXTS[name]).select(
             "key", F.col("payload").alias(name)
         )
-        out = scan if out is None else out.join(scan, "key")
-    if out is None:
-        raise ValueError("no modality enabled")
-    return out
+        for name in ("text", "image")
+    )
+    return text.join(image, "key")
 
 
 def compact(df: DataFrame, out_path: str, target_files: int = 1) -> None:

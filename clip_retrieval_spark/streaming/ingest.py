@@ -4,7 +4,7 @@ The batch pipeline (plans.pipeline) processes a snapshot; real corpora
 arrive continuously (a crawler keeps appending page files). Structured
 Streaming turns the SAME stage-1+2 transformation into an incremental
 job: `readStream` tails the input directory, the fused extract+triples
-mapInPandas runs unchanged (it is stateless, so it is streaming-legal
+mapInArrow runs unchanged (it is stateless, so it is streaming-legal
 as-is), and `writeStream` + a checkpoint directory give exactly-once
 file-level semantics — a restarted query resumes from the checkpoint
 and never reprocesses a committed input file. This replaces the batch
@@ -100,19 +100,17 @@ def stream_pages_to_triples_deduped(
     out_dir: str,
     checkpoint_dir: str,
     ledger_dir: str,
-    available_now: bool = True,
-    max_files_per_trigger: int | None = None,
 ) -> StreamingQuery:
     """Content-deduped incremental stage-1+2: like
-    ``stream_pages_to_triples`` but each micro-batch consults the
-    persistent content-hash ledger (operators.dedup.incremental_dedup)
-    before extraction, so a RE-CRAWLED duplicate page — same html
-    arriving later in a brand-new input file, which the streaming
-    commit log cannot catch (it is file-level) — is dropped at the
-    ingest edge instead of polluting the triples table. The
-    clip-retrieval analog is deduping before indexing
-    (reference clip_back.py:257-268); an ingesting corpus needs the
-    ledger form.
+    ``stream_pages_to_triples`` (drain what is present, then stop) but
+    each micro-batch consults the persistent content-hash ledger
+    (operators.dedup.incremental_dedup) before extraction, so a
+    RE-CRAWLED duplicate page — same html arriving later in a brand-new
+    input file, which the streaming commit log cannot catch (it is
+    file-level) — is dropped at the ingest edge instead of polluting
+    the triples table. The clip-retrieval analog is deduping before
+    indexing (reference clip_back.py:257-268); an ingesting corpus
+    needs the ledger form.
 
     Exactly-once despite foreachBatch's at-least-once contract:
     triples and ledger deltas are written to ``batch_id=N`` partition
@@ -125,9 +123,9 @@ def stream_pages_to_triples_deduped(
     Scale shape: the ledger join is a left-anti keyed by an 8-byte
     xxhash64 — at 10^12 pages the ledger is bucketable by content_hash
     so the anti-join co-locates; the micro-batch side is small by
-    construction (maxFilesPerTrigger bounds it).
+    construction (only the files new since the last commit).
     """
-    pages = read_page_stream(spark, src_dir, max_files_per_trigger)
+    pages = read_page_stream(spark, src_dir)
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
         from clip_retrieval_spark.operators.dedup import incremental_dedup
@@ -150,11 +148,10 @@ def stream_pages_to_triples_deduped(
             os.path.join(ledger_dir, f"batch_id={batch_id}")
         )
 
-    writer = (
+    return (
         pages.writeStream.foreachBatch(_process)
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

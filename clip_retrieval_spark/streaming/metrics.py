@@ -4,10 +4,9 @@ reader polls and sums) restated as Structured Streaming over the
 pipeline's ``_metrics`` json-lines directory.
 
 Watermark + tumbling window handle late stage reports; the sink is a
-rolling per-minute rollup a dashboard would tail. Batch pipelines call
-``rollup_metrics_once`` (Trigger.AvailableNow) at the end of a run; a
-live monitor uses ``start_metrics_stream`` with a processing-time
-trigger.
+per-minute rollup. ``rollup_metrics_once`` drains the directory
+(Trigger.AvailableNow) and stops — the batch pipeline's end-of-run
+stats aggregation.
 """
 
 from __future__ import annotations
@@ -45,29 +44,6 @@ def _rollup(df: DataFrame) -> DataFrame:
             F.col("w.start").alias("minute"), "stage", "rows", "wall_ms",
             "cpu_ms", "reports",
         )
-    )
-
-
-def start_metrics_stream(
-    spark: SparkSession,
-    metrics_dir: str,
-    out_dir: str,
-    checkpoint_dir: str,
-    trigger_seconds: int = 5,
-):
-    """Continuous rollup; returns the StreamingQuery handle."""
-    src = (
-        spark.readStream.schema(METRICS_SCHEMA)
-        .json(metrics_dir)
-    )
-    return (
-        _rollup(src)
-        .writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(processingTime=f"{trigger_seconds} seconds")
-        .start()
     )
 
 

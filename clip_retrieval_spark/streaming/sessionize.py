@@ -6,7 +6,7 @@ this is the engine's streaming-native counterpart of the batch
 sessions).
 
 State per user: (session_start, last_ts, n_events). An event more than
-``gap_seconds`` after last_ts closes the open session and starts a new
+``GAP_SECONDS`` after last_ts closes the open session and starts a new
 one; watermark-driven timeout flushes sessions for idle users.
 """
 
@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql import types as T
 
+GAP_SECONDS = 1800.0  # the batch events_sessionize query's 30-minute gap
 SESSION_SCHEMA = T.StructType(
     [
         T.StructField("user_id", T.LongType()),
@@ -42,7 +43,6 @@ def _sessionize_group(
     pdfs: Iterator[pd.DataFrame],
     state: GroupState,
 ) -> Iterable[pd.DataFrame]:
-    gap = 1800.0
     (user_id,) = key
     if state.hasTimedOut:
         (start, last, n) = state.get
@@ -65,13 +65,13 @@ def _sessionize_group(
 
     closed = []
     for t in ts:
-        if t - last > gap:
+        if t - last > GAP_SECONDS:
             closed.append((user_id, start, last, n))
             start, n = t, 0
         last = t
         n += 1
     state.update((start, last, n))
-    state.setTimeoutTimestamp(int(last * 1000) + int(gap * 1000))
+    state.setTimeoutTimestamp(int(last * 1000) + int(GAP_SECONDS * 1000))
     if closed:
         yield pd.DataFrame(
             closed,
@@ -79,7 +79,7 @@ def _sessionize_group(
         )
 
 
-def sessionize_stream(events: DataFrame, gap_seconds: int = 1800) -> DataFrame:
+def sessionize_stream(events: DataFrame) -> DataFrame:
     """events stream (user_id long, ts timestamp) -> closed sessions.
 
     Uses event-time timeout so idle users' sessions flush as the

@@ -132,6 +132,26 @@ def test_filter_df_threshold_semantics(entities):
         c.filter_df(text="x", embedding=[0.0] * DIM)
 
 
+def test_filter_df_by_b64_matches_embedding(entities):
+    """The base64 wire format is a third spelling of the same query
+    vector: same rows as ``embedding=``; a payload of the wrong length
+    is rejected before any Spark work."""
+    import pandas as pd
+
+    c = KGClient(entities)
+    vec = [float(x) for x in embed_batch(pd.Series(["Globex"]))[0]]
+    payload = base64.b64encode(
+        np.asarray(vec, dtype="<f4").tobytes()
+    ).decode()
+    rows = lambda df: sorted(tuple(r) for r in df.collect())  # noqa: E731
+    by_vec = rows(c.filter_df(embedding=vec, threshold=0.2))
+    assert by_vec and "Globex" in {r[1] for r in by_vec}
+    assert rows(c.filter_df(embedding_b64=payload, threshold=0.2)) == by_vec
+    short = base64.b64encode(struct.pack("<2f", 1.0, 2.0)).decode()
+    with pytest.raises(ValueError, match="dims"):
+        c.filter_df(embedding_b64=short)
+
+
 def test_index_validation(entities):
     with pytest.raises(ValueError, match="index must be"):
         KGClient(entities, index="hnsw")

@@ -118,7 +118,7 @@ def test_spark_video_frames_features_thumbnails(spark):
         "meta_height int, meta_duration_ms int",
     )
 
-    sampled = sample_frames(media, every_ms=1000).collect()
+    sampled = sample_frames(media).collect()
     by_id = {}
     for r in sampled:
         by_id.setdefault(r["media_id"], []).append(r)
@@ -136,7 +136,7 @@ def test_spark_video_frames_features_thumbnails(spark):
 
     feats = {r["media_id"]: r for r in extract_features(media).collect()}
     kf = decode_jpeg(encode_jpeg(frames[0], quality=95))
-    want = grid_luminance_features(kf, grid=4)
+    want = grid_luminance_features(kf)
     want = want / np.linalg.norm(want)
     got = np.array(feats[1]["feature"], dtype=np.float64)
     assert feats[1]["ok"] is True

@@ -51,19 +51,24 @@ def _bfs_components(edges: list[tuple[int, int]]) -> dict[int, int]:
 
 def _run_cc(spark, edges):
     df = spark.createDataFrame(edges, "src long, dst long")
-    return {
-        r["node"]: r["component"]
-        for r in connected_components(df).collect()
-    }
+    rows = connected_components(df).collect()
+    got = {r["node"]: r["component"] for r in rows}
+    # one row per node: the dict above would hide a duplicated row
+    assert len(rows) == len(got), edges
+    return got
 
 
 def test_cc_simple_shapes(spark):
-    # chain, triangle+isolated pair, self-loop, star
+    # chain, triangle+isolated pair, self-loop, star; then repeated
+    # edges, both orientations and self-loops, on a connected node and
+    # on a node with no other edge
     cases = [
         [(1, 2), (2, 3), (3, 4)],
         [(10, 11), (11, 12), (12, 10), (20, 21)],
         [(5, 5), (5, 6)],
         [(100, i) for i in range(101, 120)],
+        [(3, 1), (1, 3), (3, 1), (2, 3), (3, 3), (9, 9), (9, 9), (4, 5),
+         (5, 4), (4, 5), (5, 6), (6, 6), (2, 3), (3, 2), (7, 6)],
     ]
     for edges in cases:
         got = _run_cc(spark, edges)

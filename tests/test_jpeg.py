@@ -228,7 +228,7 @@ def test_spark_jpeg_features_and_thumbnails(spark):
     )
     feats = {r["media_id"]: r for r in extract_features(media).collect()}
     # content-derived: matches grid luminance of the SOURCE pixels
-    want = grid_luminance_features(img, grid=4)
+    want = grid_luminance_features(img)
     want = want / np.linalg.norm(want)
     got = np.array(feats[1]["feature"], dtype=np.float64)
     assert feats[1]["ok"] is True
@@ -326,3 +326,21 @@ def test_fuzz_decoder_never_hangs_or_leaks_exceptions():
             pass
 
     _one()
+
+
+@pytest.mark.parametrize("progressive", [False, True])
+def test_zero_sampling_factor_and_empty_sos_are_corrupt(progressive):
+    """A SOF component with sampling factor 0 and an SOS with no
+    components are corrupt headers: ValueError, not ZeroDivisionError or
+    IndexError."""
+    enc = encode_jpeg_progressive if progressive else encode_jpeg
+    data = bytearray(enc(_gradient(h=16, w=16), quality=90))
+    sof = data.find(b"\xff\xc2" if progressive else b"\xff\xc0")
+    bad = bytearray(data)
+    bad[sof + 4 + 6 + 1] = 0x00  # first component's H/V byte
+    with pytest.raises(ValueError, match="sampling factor"):
+        decode_jpeg(bytes(bad))
+    sos = data.find(b"\xff\xda")
+    empty = bytes(data[:sos]) + b"\xff\xda\x00\x02" + b"\xff\xd9"
+    with pytest.raises(ValueError):
+        decode_jpeg(empty)

@@ -50,8 +50,7 @@ def test_exact_dedup_keeps_min_id(docs):
 
 def test_near_dedup_minhash_groups(docs):
     out = near_dedup_minhash(
-        docs, "doc_id", "text", jaccard_threshold=0.5,
-        n_hashes=16, band_rows=2,
+        docs, "doc_id", "text", jaccard_threshold=0.5, band_rows=2,
     )
     canon = {r["doc_id"]: r["canonical_id"] for r in out.collect()}
     assert len(canon) == 6
@@ -222,7 +221,7 @@ def test_feature_extraction_plumbing(media):
 def test_frame_sampling_flatmap_shape(media):
     from clip_retrieval_spark.operators.multimodal import sample_frames
 
-    frames = sample_frames(media, every_ms=1000).collect()
+    frames = sample_frames(media).collect()
     assert {r["media_id"] for r in frames} == {3}
     assert sorted(r["frame_idx"] for r in frames) == [0, 1, 2]
 
@@ -463,7 +462,7 @@ def test_ivf_full_probe_equals_bruteforce(spark):
     n_cells = cents.count()
     # probing EVERY cell makes IVF exhaustive -> must equal brute force
     ivf = ivf_topk(
-        q, c, cents, k=5, nprobe=n_cells, exclude_self=True, round_to=6
+        q, c, cents, k=5, nprobe=n_cells, exclude_self=True
     )
     bf = (
         brute_force_topk(q, c, k=6)
@@ -562,7 +561,7 @@ def test_kmeans_assign_matches_numpy(spark, vectors):
     ids = [r["vec_id"] for r in rows]
     got = {
         r["vec_id"]: r["cell_id"]
-        for r in kmeans_assign(vectors, k=5, iterations=2).collect()
+        for r in kmeans_assign(vectors, k=5).collect()
     }
     want = _np_kmeans_assign(V, ids, k=5, iterations=2)
     assert got == want
