@@ -3,11 +3,15 @@ the spec at a git revision, in one process.
 
 Both versions must give identical ``extract_text`` and ``extract_triples``
 outputs on fixture seeds 1-3, on open-vocabulary pages and on the golden
-corpora of ``tests/test_text_golden.py``; the script exits nonzero on the
-first difference. It then times both versions on one fixture seed with
-``time.process_time`` (CPU time of this process, which other processes'
-load moves less than it moves wall time), alternating which version runs
-first, and prints the median and min in µs per page.
+corpora of ``tests/test_text_golden.py``, text by text, and the working
+tree's ``extract_triples_batch`` over each whole corpus must give the same
+triples; the script exits nonzero on the first difference. It then times
+both versions on one fixture seed with ``time.process_time`` (CPU time of
+this process, which other processes' load moves less than it moves wall
+time), alternating which version runs first, and prints the median and
+min in µs per page. The triple spec is timed as the operator applies it:
+one ``extract_triples_batch`` call over all pages where a version has it,
+else one ``extract_triples`` call per text.
 
 Usage: python BENCH/spec_ab.py --base HEAD~1
 """
@@ -21,6 +25,8 @@ import subprocess
 import sys
 import time
 import types
+
+import pyarrow as pa
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
@@ -61,7 +67,17 @@ def _corpora(n_fixture: int) -> dict[str, list]:
     ]
     out["golden fuzz"] = golden.corpus()
     out["golden edge"] = golden.edge_corpus()
+    out["golden space"] = golden.space_corpus()
     return out
+
+
+def _triples_of_all(mod):
+    """texts -> the spec applied to all of them: one batch call where
+    ``mod`` has the batch entry point, else one call per text."""
+    if hasattr(mod, "extract_triples_batch"):
+        return lambda texts: mod.extract_triples_batch(
+            pa.array(texts, pa.string()))
+    return lambda texts: [mod.extract_triples(t) for t in texts]
 
 
 def _check_identical(base, corpora: dict[str, list]) -> None:
@@ -75,16 +91,19 @@ def _check_identical(base, corpora: dict[str, list]) -> None:
             d.decode("utf-8", errors="replace") if isinstance(d, bytes)
             else d for d in docs
         ]
-        for t in inputs:
-            if head.extract_triples(t) != base.extract_triples(t):
+        want = [base.extract_triples(t) for t in inputs]
+        for t, w in zip(inputs, want):
+            if head.extract_triples(t) != w:
                 sys.exit(f"extract_triples differs on {name}: {t[:200]!r}")
+        if golden.triples_per_text(inputs) != want:
+            sys.exit(f"extract_triples_batch differs on {name}")
         print(f"identical: {name} ({len(docs)} docs)", flush=True)
 
 
 def _cpu_us_per_page(fn, inputs: list) -> float:
+    """Process CPU time of ``fn(inputs)`` per input, in µs."""
     t0 = time.process_time()
-    for x in inputs:
-        fn(x)
+    fn(inputs)
     return (time.process_time() - t0) / len(inputs) * 1e6
 
 
@@ -105,10 +124,10 @@ def main() -> None:
         order = ("base", "tree") if i % 2 == 0 else ("tree", "base")
         for side in order:
             mod = sides[side]
-            times[side, "extract_text"].append(
-                _cpu_us_per_page(mod.extract_text, htmls))
+            times[side, "extract_text"].append(_cpu_us_per_page(
+                lambda docs: [mod.extract_text(d) for d in docs], htmls))
             times[side, "extract_triples"].append(
-                _cpu_us_per_page(mod.extract_triples, texts))
+                _cpu_us_per_page(_triples_of_all(mod), texts))
 
     print(f"fixture seed {SEED}, {PAGES} pages, "
           f"{ALTERNATIONS} alternations, process CPU µs/page")

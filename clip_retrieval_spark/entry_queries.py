@@ -4999,7 +4999,13 @@ def hist_quantile_sketch(spark: SparkSession, sf: str) -> DataFrame:
     everything after runs on the HISTOGRAM (~50 bins/type), where the
     cumulative window and final agg are noise. Exact ntile needs a
     per-type sort of all rows; this never sorts raw data at all."""
-    ev = _t(spark, sf, "events").select("event_type", "value")
+    ev = (
+        _t(spark, sf, "events")
+        .select("event_type", "value")
+        # a NULL bin sorts first in Spark and last in DuckDB; it holds no
+        # value, so it is no part of the histogram
+        .where(F.col("value").isNotNull())
+    )
     hist = (
         ev.select(
             "event_type",
@@ -5047,7 +5053,7 @@ WITH hist AS (
   SELECT event_type,
          floor(value / {_HIST_BIN_W})::BIGINT AS bin,
          COUNT(*)::BIGINT AS c
-  FROM events GROUP BY 1, 2
+  FROM events WHERE value IS NOT NULL GROUP BY 1, 2
 ),
 cum AS (
   SELECT event_type, bin, c,

@@ -6,6 +6,8 @@ driver's CORRECTNESS gate."""
 from __future__ import annotations
 
 import duckdb
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 
 import __spark_entry__ as entry_mod
@@ -207,3 +209,23 @@ def test_float_gates_partitioning_invariant(spark, name):
         results.append(_rowset(cols, [tuple(r) for r in df.collect()]))
     spark.conf.set("spark.sql.shuffle.partitions", "32")
     assert results[0] == results[1] == results[2]
+
+
+def test_hist_quantile_ignores_null_values(spark, tmp_path):
+    """NULL values form no histogram bin on either engine (Spark sorts a
+    NULL bin first, DuckDB last, so counting one splits the engines)."""
+    sf = str(tmp_path)
+    rows = [("a", 5.0), ("a", 15.0), ("a", 25.0), ("a", None), ("a", None),
+            ("a", None), ("b", 1.0), ("b", None)]
+    pq.write_table(
+        pa.table({"event_type": [r[0] for r in rows],
+                  "value": [r[1] for r in rows]}),
+        f"{sf}/events.parquet",
+    )
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW events AS SELECT * FROM '{sf}/events.parquet'")
+    _assert_matches_oracle(spark, con, "hist_quantile_sketch", sf)
+    got = {r["event_type"]: (r["n"], r["p50_est"], r["p99_est"])
+           for r in entry_mod.queries()["hist_quantile_sketch"](
+               spark, sf).collect()}
+    assert got == {"a": (3, 10.0, 20.0), "b": (1, 0.0, 0.0)}

@@ -100,7 +100,7 @@ PINNED = [
     ("zipf_fit_by_source", "ab897c1c4c9ea5c09ff0ea0d3b706f12"),
     ("er_snm_pairs", "fce94dbedc58b5a68af82b6c12ce437c"),
     ("link_negative_samples", "b66dfa9d9b2c39a26e821d7acabeb99a"),
-    ("hist_quantile_sketch", "a3380ba63ab864834a32505596d8b645"),
+    ("hist_quantile_sketch", "023a671c005eb3830a32f7bd58ff8a3e"),
     ("chunk_windows_rag", "2451afa814f12f5c898a848c7887ddb2"),
     ("events_anomaly_days", "32970c38dc452d40903342c41a4ed910"),
     ("stats_drift_dumps", "4d51ed1036a11decd8d89af8961abf3d"),

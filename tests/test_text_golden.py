@@ -15,6 +15,12 @@ spec treats specially, in every case shape, next to near-miss names that
 must stay ordinary tags; whitespace that only appears once entities are
 unescaped; and the boundaries of the triple spec's gap test. Its outputs
 are pinned the same way.
+
+A third (``space_corpus``) aims at the Arrow batch kernel of the triple
+spec: every ``str.isspace()`` code point, NUL, zero-width characters,
+``[&'-]``-led tokens and non-ASCII letters. ``reference_triples`` keeps
+the per-sentence Python loop the kernel replaced, and a Hypothesis test
+compares the two.
 """
 
 from __future__ import annotations
@@ -24,14 +30,23 @@ import itertools
 import random
 import re
 
+import pyarrow as pa
+from hypothesis import given, settings
+from hypothesis import strategies as st
+
 from clip_retrieval_spark.functions.text import (
+    _CHUNK_STOP,
     _INLINE_RE,
     _REMOVE_ELEMENTS,
     _REMOVE_RE,
     _WS_RE,
+    COPULA,
     INLINE_TAGS,
+    PREP,
+    VERB_LEX,
     extract_text,
     extract_triples,
+    extract_triples_batch,
 )
 
 N_DOCS = 3_000
@@ -118,6 +133,67 @@ TEXT_MD5 = "a968006bab339dfe040dcc34379e9f29"
 TRIPLES_MD5 = "ed7f3a79f1d99c64d13717bbed32d70d"
 
 
+# the code points for which str.isspace() is true: what the triple spec's
+# \s and str.strip() match, ASCII or not
+_ISSPACE = tuple(c for c in map(chr, range(0x3001)) if c.isspace())
+_ZERO_WIDTH = ("\x00", "\u200b", "\u200c", "\u200d", "\u2060", "\ufeff",
+               "\xad")
+_PUNCT_LED = ("-Acme", "&Globex", "'Initech", "--Hooli", "&'-Zeta", "-owns",
+              "'acquired", "&-", "'", "-&", "-42", "A-", "B&")
+_NON_ASCII = ("\xc9mile", "\xdcber", "\u03a9mega", "Stra\xdfe", "\u0130stanbul",
+              "\xc5cme", "na\xefve", "\u4e2d\u6587", "\U0001f600", "\u01c4", "\uff21cme")
+_MARKS = (".", "!", "?", "?!", "...", ".\"", "!)")
+
+
+def _space_text(rng: random.Random) -> str:
+    lines = []
+    for _ in range(rng.randint(1, 6)):
+        parts = []
+        for _ in range(rng.randint(0, 16)):
+            r = rng.random()
+            pool = (_NAMES if r < 0.35 else _GAP if r < 0.65 else
+                    _PUNCT_LED if r < 0.73 else _NON_ASCII if r < 0.8 else
+                    _ZERO_WIDTH if r < 0.86 else _MARKS)
+            parts.append(rng.choice(pool))
+            parts.append(rng.choice(_ISSPACE) if rng.random() < 0.3 else " ")
+        edges = [rng.choice(_ISSPACE) * rng.randint(0, 2) for _ in "ab"]
+        lines.append(edges[0] + "".join(parts) + edges[1])
+    return "\n".join(lines)
+
+
+def space_corpus() -> list[str]:
+    """Texts for the triple spec alone: every whitespace code point at the
+    edges of a line and after each mark, NUL and zero-width characters,
+    tokens led by [&'-], non-ASCII letters, then seeded fuzz of the same
+    atoms around entity-shaped sentences."""
+    texts = [
+        f"{c}Acme owns Globex{m}{c}Initech backs Hooli{m}{c}{c}\n"
+        f"{c}The Zeta Group is based in Q{m}{c}\n{c}\n{c}Acme{c}acquired"
+        f"{c}Globex{c}"
+        for c in _ISSPACE for m in ".!?"
+    ]
+    rng = random.Random(31337)
+    texts += [_space_text(rng) for _ in range(N_DOCS)]
+    return texts
+
+
+# taken from the per-sentence spec that the Arrow batch kernel replaced
+SPACE_TRIPLES_MD5 = "40b77c53034eb8e5a442fe03839728a9"
+# lone surrogates cannot enter Arrow; the kernel reads them as U+FFFD,
+# which is no whitespace, mark or token character either
+SURROGATE_TRIPLES = {
+    "Acme\ud800 owns Globex. \udfffInitech backs\udc00 Hooli.": [
+        (0, "Acme", "owns", "Globex", 0, 1, 2, 3),
+        (1, "Initech", "backs", "Hooli", 0, 1, 2, 3),
+    ],
+    "\ud83d The Zeta Group is based in Q.\ud800\nAcme acquired\udfff Globex": [
+        (0, "The Zeta Group", "is based in", "Q", 0, 3, 6, 7),
+        (1, "Acme", "acquired", "Globex", 0, 1, 2, 3),
+    ],
+    "Acme ow\ud800ns Globex. Hoo\udbffli backs Initech.": [],
+}
+
+
 def _case_shapes(name: str) -> list[str]:
     return [name, name.upper(), name[0].upper() + name[1:],
             name[:-1] + name[-1].upper()]
@@ -199,6 +275,15 @@ EDGE_TEXT_MD5 = "abd206d01373469a9b4132a3f9e71e32"
 EDGE_TRIPLES_MD5 = "52e95fafad2162cef979139ae2ceb4b0"
 
 
+def triples_per_text(texts: list[str]) -> list[list[tuple]]:
+    """``extract_triples`` of each text, from one batch call."""
+    found = extract_triples_batch(pa.array(texts, pa.string()))
+    out = [[] for _ in texts]
+    for row, *triple in zip(*(c.to_pylist() for c in found.columns)):
+        out[row].append(tuple(triple))
+    return out
+
+
 def test_corpus_covers_the_edge_cases():
     docs = corpus()
     joined = b"".join(docs)
@@ -222,7 +307,7 @@ def test_extract_triples_pinned():
     # inside sentences) go through the triple spec
     inputs = [extract_text(d) for d in docs]
     inputs += [d.decode("utf-8", errors="replace") for d in docs]
-    assert _md5(repr(extract_triples(t)) for t in inputs) == TRIPLES_MD5
+    assert _md5(map(repr, triples_per_text(inputs))) == TRIPLES_MD5
 
 
 def test_edge_corpus_pinned():
@@ -230,7 +315,92 @@ def test_edge_corpus_pinned():
     texts = [extract_text(d) for d in docs]
     assert _md5(texts) == EDGE_TEXT_MD5
     inputs = texts + [d.decode("utf-8") for d in docs]
-    assert _md5(repr(extract_triples(t)) for t in inputs) == EDGE_TRIPLES_MD5
+    assert _md5(map(repr, triples_per_text(inputs))) == EDGE_TRIPLES_MD5
+
+
+def test_space_corpus_pinned():
+    texts = space_corpus()
+    joined = "".join(texts)
+    for needle in _ISSPACE + _ZERO_WIDTH + _PUNCT_LED + _NON_ASCII:
+        assert needle in joined, repr(needle)
+    found = triples_per_text(texts)
+    assert sum(map(len, found)) > 1_000
+    assert _md5(map(repr, found)) == SPACE_TRIPLES_MD5
+
+
+def test_one_batch_equals_each_row_alone():
+    """No sentence or token crosses a row: rows that end inside a token
+    or a sentence, empty rows and nulls, in one batch and one by one."""
+    texts = [
+        "Acme owns", "Globex.", "", "Acme", "acquired Globex.", "\n",
+        "Initech backs Hooli", " ", "Zeta is based in", "Q.", "Acme.",
+        " Globex backs Q", "-Corp owns Hooli.", "\u3000", "AT&", "T owns Q",
+    ] + space_corpus()[80:400]
+    alone = [extract_triples(t) for t in texts]
+    assert triples_per_text(texts) == alone
+    assert sum(map(len, alone)) > 50
+    with_nulls = extract_triples_batch(pa.array([None] + texts + [None]))
+    assert with_nulls.column("row").to_pylist() == [
+        i + 1 for i, found in enumerate(alone) for _ in found
+    ]
+    assert extract_triples_batch(pa.array([], pa.string())).num_rows == 0
+    assert extract_triples_batch(pa.array([None, ""], pa.string())).num_rows == 0
+
+
+def test_lone_surrogates_pinned():
+    for text, want in SURROGATE_TRIPLES.items():
+        assert extract_triples(text) == want, repr(text)
+
+
+_SENT_SPLIT_RE = re.compile(r"(?<=[.!?])\s+")
+_TOKEN_RE = re.compile(r"[A-Za-z0-9][A-Za-z0-9&'\-]*")
+
+
+def reference_triples(text: str) -> list[tuple]:
+    """TRIPLE SPEC v1 one sentence and one token at a time: the Python
+    loop the batch kernel replaced, kept as its reference."""
+    out = []
+    sents = [piece for line in text.split("\n") if line.strip()
+             for piece in _SENT_SPLIT_RE.split(line.strip())]
+    for sent_id, sent in enumerate(sents):
+        tokens = _TOKEN_RE.findall(sent)
+        spans, start = [], None
+        for i, tok in enumerate(tokens + [""]):
+            if "A" <= tok[:1] <= "Z":
+                start = i if start is None else start
+            elif start is not None:
+                if i - start > 1 or tokens[start] not in _CHUNK_STOP:
+                    spans.append((start, i))
+                start = None
+        for (s1, e1), (s2, e2) in zip(spans, spans[1:]):
+            gap = tokens[e1:s2]
+            if not (1 <= len(gap) <= 5
+                    and all(re.fullmatch("[a-z]+", g) for g in gap)):
+                continue
+            if (gap[0] in VERB_LEX
+                    or (len(gap[0]) > 3 and gap[0].endswith(("ed", "es")))
+                    or (len(gap) >= 2 and gap[0] in COPULA
+                        and gap[-1] in PREP)):
+                out.append((sent_id, " ".join(tokens[s1:e1]), " ".join(gap),
+                            " ".join(tokens[s2:e2]), s1, e1, s2, e2))
+    return out
+
+
+def test_reference_reproduces_the_pins():
+    texts = space_corpus()
+    assert _md5(repr(reference_triples(t)) for t in texts) == (
+        SPACE_TRIPLES_MD5)
+
+
+_ATOMS = (_ISSPACE + _ZERO_WIDTH + _PUNCT_LED + _NON_ASCII + _MARKS + _NAMES
+          + _GAP + tuple(sorted(PREP | COPULA)) + (" ", " ", "\n", "x"))
+
+
+@settings(max_examples=200, deadline=None, derandomize=True)
+@given(st.lists(st.lists(st.sampled_from(_ATOMS), max_size=40).map("".join),
+                max_size=30))
+def test_batch_equals_reference(texts):
+    assert triples_per_text(texts) == [reference_triples(t) for t in texts]
 
 
 def test_edge_corpus_exercises_every_path():

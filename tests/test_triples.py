@@ -131,6 +131,23 @@ def test_null_input_rows_yield_no_triples(spark):
     assert got == [("u-good", "owns")]
 
 
+def test_empty_and_blank_text_rows(spark):
+    """Null, empty and whitespace-only text (every str.isspace() code
+    point) yield no triples and do not shift the rows around them."""
+    blank = "".join(c for c in map(chr, range(0x3001)) if c.isspace())
+    rows = [("u-null", _TS, None), ("u-empty", _TS, ""),
+            ("u-blank", _TS, blank), ("u-a", _TS, "Acme owns Globex."),
+            ("u-blank2", _TS, " \n\t\u3000"), ("u-nl", _TS, "\n\n"),
+            ("u-b", _TS, blank + "Hooli backs Initech." + blank)]
+    texts = spark.createDataFrame(
+        rows, "url string, warc_ts timestamp, text string").coalesce(1)
+    got = [(r["url"], r["sent_id"], r["subj"], r["pred"], r["obj"],
+            r["subj_span"], r["obj_span"])
+           for r in extract_triples_df(texts).collect()]
+    assert got == [("u-a", 0, "Acme", "owns", "Globex", [0, 1], [2, 3]),
+                   ("u-b", 0, "Hooli", "backs", "Initech", [0, 1], [2, 3])]
+
+
 def test_warc_ts_round_trips_as_utc(spark):
     pages = spark.createDataFrame(
         [(f"u{i}", _TS + _dt.timedelta(days=i), b"<p>Acme owns Globex.</p>",
